@@ -32,6 +32,7 @@ import datetime as dt
 import enum
 import gzip
 import io
+import operator
 import os
 import time
 import uuid
@@ -114,6 +115,34 @@ _COERCE: dict[DataType, Callable[[Any], Any] | None] = {
     DataType.Float: float,
     DataType.Boolean: bool,
 }
+
+
+_TZINFO = operator.attrgetter("tzinfo")
+
+
+def _time_array(vals: list, tz: str):
+    """Arrow ``timestamp[us, UTC]`` of a Time column's values: naive
+    datetimes are wall times in ``tz`` (raises on DST-ambiguous or
+    nonexistent ones), aware datetimes their UTC instant. pyarrow alone
+    would keep an aware value's wall clock and drop its offset, storing
+    ``12:00+05:30`` as ``12:00Z``, so aware values are converted here.
+    The all-naive batch, the usual one, costs one C-level scan more."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ts, utc = pa.timestamp("us"), pa.timestamp("us", tz="UTC")
+    if set(map(_TZINFO, filter(None, vals))) <= {None}:
+        return pc.assume_timezone(pa.array(vals, type=ts), tz).cast(utc)
+    naive = [v if v is None or v.tzinfo is None else None for v in vals]
+    inst = [
+        None if v is None or v.tzinfo is None
+        else v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        for v in vals
+    ]
+    return pc.coalesce(
+        pa.array(inst, type=utc),
+        pc.assume_timezone(pa.array(naive, type=ts), tz).cast(utc),
+    )
 
 
 def infer_column_type(value: Any) -> DataType:
@@ -318,9 +347,9 @@ class Collector:
                     # latency for a single-task local write). The object
                     # layout is unchanged: one part file under the same
                     # {prefix}/{table}/{uuid}/ directory key, readable by
-                    # the same mergeSchema load. Any surprise (tz-aware
-                    # timestamps mixed in, DST-ambiguous wall times,
-                    # missing pyarrow) falls back to the Spark write.
+                    # the same mergeSchema load. Any surprise
+                    # (DST-ambiguous wall times, missing pyarrow) falls
+                    # back to the Spark write.
                     self._put_parquet_bytes(batch, key)
                     return key
                 except ImportError:
@@ -374,11 +403,12 @@ class Collector:
           converts them to instants and raises on DST-ambiguous input
           (→ caller falls back to the Spark path, which is the
           authority on those);
+        - aware datetimes are their UTC instant, whatever their offset
+          (see :func:`_time_array`);
         - the parquet timestamp is stored adjusted-to-UTC so Spark reads
           it back as TimestampType (not NTZ), same as its own output.
         """
         import pyarrow as pa
-        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         _PA_TYPE = {
@@ -395,8 +425,7 @@ class Collector:
         for name, dtype in cols.items():
             vals = [r[name] for r in rows]
             if dtype is DataType.Time:
-                arr = pa.array(vals, type=pa.timestamp("us"))
-                arr = pc.assume_timezone(arr, tz).cast(pa.timestamp("us", tz="UTC"))
+                arr = _time_array(vals, tz)
             else:
                 arr = pa.array(vals, type=_PA_TYPE[dtype])
             arrays.append(arr)

@@ -43,6 +43,17 @@ def join(base: str, *parts: str) -> str:
     return os.path.join(base, *parts)
 
 
+def _staged_name(path: str) -> str:
+    """Hidden sibling ``.<name>.tmp-<uuid>`` a whole-file put writes
+    before renaming into place. The leading dot matters: Spark's file
+    listing skips ``.``/``_`` names, while a ``<name>.tmp-*`` suffix
+    would still be listed (and read) as a data file."""
+    import uuid
+
+    head, name = posixpath.split(path) if is_uri(path) else os.path.split(path)
+    return join(head, f".{name}.tmp-{uuid.uuid4().hex}")
+
+
 def norm_uri(path: str) -> str:
     """Canonical spelling of a URI path for EQUALITY comparison: Hadoop
     renders ``file:///tmp/x`` as ``file:/tmp/x`` (and generally
@@ -85,9 +96,19 @@ class LocalFS:
             os.remove(path)
 
     def put_bytes(self, path: str, data: bytes) -> None:
+        """Write ``path`` whole or not at all: stage to
+        :func:`_staged_name`, then rename into place, so a failure
+        mid-write never leaves a truncated file under the real name."""
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "wb") as f:
-            f.write(data)
+        tmp = _staged_name(path)
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
         """Write-once publish: atomically create ``path`` with ``data``
@@ -182,6 +203,17 @@ class HadoopFS:
         self._fs.delete(self._jpath(path), True)
 
     def put_bytes(self, path: str, data: bytes) -> None:
+        """Staged like :meth:`LocalFS.put_bytes`: write the hidden
+        sibling, then rename it over ``path``."""
+        tmp = _staged_name(path)
+        try:
+            self._write(tmp, data)
+            self.replace_file(tmp, path)
+        except BaseException:
+            self._fs.delete(self._jpath(tmp), False)
+            raise
+
+    def _write(self, path: str, data: bytes) -> None:
         out = self._fs.create(self._jpath(path), True)
         try:
             out.write(bytearray(data))
@@ -201,7 +233,7 @@ class HadoopFS:
         import uuid
 
         tmp = f"{path}.tmp-{uuid.uuid4().hex}"
-        self.put_bytes(tmp, data)
+        self._write(tmp, data)
         ctx = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
             self._fs.getUri(), self._fs.getConf()
         )

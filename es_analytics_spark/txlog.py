@@ -200,15 +200,12 @@ def _advance_pointer(fs, path: str, version: int) -> bool:
     for _ in range(5):
         if _checkpoint_hint(fs, path) >= version:
             return True
-        tmp = _pointer_path(path) + f".tmp-{uuid.uuid4().hex}"
         try:
-            fs.put_bytes(tmp, json.dumps({"version": version}).encode("utf-8"))
-            fs.replace_file(tmp, _pointer_path(path))
+            # put_bytes stages and renames over the old pointer
+            fs.put_bytes(
+                _pointer_path(path), json.dumps({"version": version}).encode("utf-8")
+            )
         except Exception:
-            try:
-                fs.delete(tmp)
-            except Exception:
-                pass
             return _checkpoint_hint(fs, path) >= version
     return _checkpoint_hint(fs, path) >= version
 
@@ -956,11 +953,20 @@ def _part_rel_expr(col: str = "_f_path"):
     this module mints (``_write_part``), so the key is globally unique
     BY CONSTRUCTION — unlike a bare file basename, whose uniqueness
     across part directories would silently ride on Spark's task-file
-    naming. Anchored at the path TAIL so a table path that itself
-    contains a ``parts`` segment cannot confuse the extraction."""
+    naming. Data files sit directly under ``parts/<uuid>/``, so the last
+    two segments are the key even when the table path itself contains a
+    ``parts`` segment; ``substring_index`` finds them without running a
+    regex on every scanned row."""
     from pyspark.sql import functions as F
 
-    return F.regexp_extract(F.col(col), "/parts/([^/]+/[^/]+)$", 1)
+    return F.substring_index(F.col(col), "/", -2)
+
+
+def _part_base_expr(col: str = "_f_path"):
+    """Part directory (uuid4 hex) of a scanned file path."""
+    from pyspark.sql import functions as F
+
+    return F.substring_index(_part_rel_expr(col), "/", 1)
 
 
 def _check_reserved_columns(schema_json: dict, where: str) -> None:
@@ -1007,8 +1013,7 @@ def _read_live(
         return (
             df.withColumn("_f_path", F.col("_metadata.file_path"))
             .withColumn(
-                "_f_name",
-                F.regexp_extract(F.col("_metadata.file_path"), "[^/]+$", 0),
+                "_f_name", F.substring_index(F.col("_metadata.file_path"), "/", -1)
             )
             .withColumn("_f_idx", F.col("_metadata.row_index"))
         )
@@ -1029,25 +1034,17 @@ def _read_live(
             _read_parts(spark, sorted(dvd), schema_json, keep_physical=True)
         )
         dv_paths = sorted({d for e in dvd.values() for d in e["dvs"]})
-        dv = spark.read.parquet(*dv_paths).select("dv_file", "dv_idx")
-        # row identity is '<part-dir-uuid>/<file-name>' — a key this
-        # module CONTROLS (part dirs are uuid4 by _write_part), unlike
-        # bare file basenames, whose global uniqueness would silently
-        # depend on Spark's task-file naming across part directories.
-        # Vectors written BEFORE the part-relative key landed store the
-        # bare basename; the two formats are disjoint (new keys always
-        # contain '/', legacy never do), so each vector row matches
-        # through exactly one arm — legacy vectors keep their original
-        # (previously accepted) semantics instead of silently matching
-        # nothing and resurrecting their deleted rows
+        # explicit schema: no DV-aware scan pays a schema-inference job
+        dv = spark.read.schema("dv_file string, dv_idx long").parquet(*dv_paths)
+        # row identity is the '<part-uuid>/<file>' key of _part_rel_expr.
+        # Vectors written before that key landed store the bare file
+        # name; the formats are disjoint (only new keys contain '/'), so
+        # each vector row matches through exactly one arm and legacy
+        # vectors keep deleting their rows
         key_match = F.when(
             dv["dv_file"].contains("/"), _part_rel_expr() == dv["dv_file"]
         ).otherwise(df["_f_name"] == dv["dv_file"])
-        df = df.join(
-            dv,
-            key_match & (df["_f_idx"] == dv["dv_idx"]),
-            "left_anti",
-        )
+        df = df.join(dv, key_match & (df["_f_idx"] == dv["dv_idx"]), "left_anti")
         if not meta:
             df = df.drop(*_META_COLS)
         frames.append(_to_logical(df, schema_json))
@@ -1197,9 +1194,12 @@ def read_table(
 
 
 def _write_part(
-    spark: SparkSession, path: str, df: DataFrame, schema_json: dict | None = None
+    spark: SparkSession, path: str, df: DataFrame, schema_json: dict | None = None,
+    prefix: str = "",
 ) -> str:
-    part = fs_join(_part_dir(path), uuid.uuid4().hex)
+    """Write ``df`` as a fresh part (``prefix``: ``"cdc-"`` for change
+    parts) and return its path."""
+    part = fs_join(_part_dir(path), prefix + uuid.uuid4().hex)
     _to_physical(df, schema_json).write.mode("overwrite").parquet(part)
     return part
 
@@ -2417,10 +2417,7 @@ def _replaced_rows_cdc(
     commit's new schema would fail or drop columns."""
     if not entries:
         return []
-    cdc_part = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
-    _to_physical(_read_live(spark, entries, schema), schema).write.mode(
-        "overwrite"
-    ).parquet(cdc_part)
+    cdc_part = _write_part(spark, path, _read_live(spark, entries, schema), schema, "cdc-")
     entry = {"path": cdc_part, "change_type": change_type}
     if schema is not None:
         entry["schema"] = schema
@@ -2792,6 +2789,65 @@ def _commute_past_appends_only(
     raise CommitConflict(f"{op} lost the CAS {max_retries} times under {path}")
 
 
+def _stats_envelope(members: list[dict | None], drop=frozenset()) -> dict:
+    """Zone map of a part holding a SUBSET of several members' rows:
+    [min of mins, max of maxes] per column EVERY member recorded, less
+    ``drop`` and bounds that do not compare (None, mixed encodings)."""
+    if not members or not all(members):
+        return {}
+    cols = set.intersection(*(set(s) for s in members)) - set(drop)
+    out = {}
+    for c in sorted(cols):
+        try:
+            out[c] = [min(s[c][0] for s in members), max(s[c][1] for s in members)]
+        except TypeError:
+            pass
+    return out
+
+
+def _rewrite_touched(
+    spark: SparkSession,
+    fs,
+    path: str,
+    live: dict,
+    touched: list[str],
+    schema: dict | None,
+    survivors,
+    drop_stats=frozenset(),
+) -> tuple[list[dict], int]:
+    """Survivor rewrite of the row-level DML verbs: ONE Spark write per
+    partition tag of the touched parts. ``survivors(group)`` maps a
+    ``{part: entry}`` subset of ``live`` to the rows to keep, still
+    carrying ``_f_path``. An output with no rows is deleted unreferenced
+    (footer probe). Each new part is ``rewrite``-flagged and records the
+    members' zone-map envelope, minus ``drop_stats`` (physical columns
+    whose values changed) — valid because survivors are a subset of the
+    members' rows, but coarser across range-clustered parts until the
+    next clustered :func:`compact`. Returns ``(adds, parts_rewritten)``:
+    the touched parts that kept a row, observed on the write itself."""
+    from pyspark.sql import Observation, functions as F
+
+    groups: dict[tuple, dict] = {}
+    for p in touched:
+        groups.setdefault(tuple(sorted(live[p]["partition"].items())), {})[p] = live[p]
+    adds, kept = [], set()
+    for group in groups.values():
+        obs = Observation()
+        rows = survivors(group).observe(obs, F.collect_set("_f_path").alias("f"))
+        np = _write_part(spark, path, rows.drop(*_META_COLS), schema)
+        kept.update(_owning_parts(sorted(group), obs.get["f"]))
+        if _part_num_rows(spark, np) == 0:
+            fs.delete(np)
+            continue
+        members = list(group.values())
+        add = {"path": np, "partition": members[0]["partition"], "rewrite": True}
+        stats = _stats_envelope([e.get("stats") for e in members], drop_stats)
+        if stats:
+            add["stats"] = stats
+        adds.append(add)
+    return adds, len(kept)
+
+
 def delete_where(
     spark: SparkSession,
     path: str,
@@ -2801,10 +2857,14 @@ def delete_where(
 ) -> dict:
     """Transactional row-level DELETE: rewrite exactly the live parts
     that contain matching rows (one distributed pass over the snapshot
-    finds them via ``input_file_name`` — untouched parts are not read
-    again, let alone rewritten), commit {adds: survivors, removes:
-    touched} atomically. ``condition`` is a SQL expression string or a
-    Column. Returns {"version", "rows_deleted", "parts_rewritten"}.
+    finds them from the scan's file metadata — untouched parts are not
+    read again, let alone rewritten), commit {adds: survivors, removes:
+    touched} atomically. Survivors of touched parts sharing a partition
+    tag are written as ONE part with their zone-map envelope
+    (:func:`_rewrite_touched`: coarser range pruning across clustered
+    parts until the next clustered :func:`compact`). ``condition`` is a
+    SQL expression string or a Column. Returns {"version",
+    "rows_deleted", "parts_rewritten"}.
 
     **Change-data feed**: the deleted rows are written to a ``cdc`` part
     recorded in the commit (Delta CDF's change files), so
@@ -2861,30 +2921,15 @@ def delete_where(
     touched = _owning_parts(sorted(live), [r["_f_path"] for r in matched])
     if not touched:
         return {"version": v0, "rows_deleted": 0, "parts_rewritten": 0}
-    cdc_part = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
     touched_live = {p: live[p] for p in touched}
-    _to_physical(
-        _read_live(spark, touched_live, schema).filter(cond), schema
-    ).write.mode("overwrite").parquet(cdc_part)
+    cdc_part = _write_part(
+        spark, path, _read_live(spark, touched_live, schema).filter(cond), schema, "cdc-"
+    )
     rows_deleted = sum(r["__n"] for r in matched)
-    adds = []
-    for p in touched:
-        keep = _read_live(spark, {p: live[p]}, schema).filter(~cond)
-        # write first, probe the footers after — same trade as
-        # merge_upsert: the common partially-matched part pays one job
-        # instead of isEmpty + write; a fully-matched part's zero-row
-        # output is deleted before it is ever referenced
-        np = fs_join(_part_dir(path), uuid.uuid4().hex)
-        _to_physical(keep, schema).write.mode("overwrite").parquet(np)
-        if _part_num_rows(spark, np) == 0:
-            fs.delete(np)
-            continue  # the whole part matched: pure remove
-        add = {"path": np, "partition": live[p]["partition"], "rewrite": True}
-        if live[p].get("stats"):
-            # survivors are a subset of the original rows, so the
-            # original zone map stays VALID (possibly wider — still safe)
-            add["stats"] = live[p]["stats"]
-        adds.append(add)
+    adds, rewritten = _rewrite_touched(
+        spark, fs, path, live, touched, schema,
+        lambda g: _read_live(spark, g, schema, meta=True).filter(~cond),
+    )
     payload = {
         "operation": "delete_where",
         "adds": adds,
@@ -2899,7 +2944,7 @@ def delete_where(
     return {
         "version": res["version"],
         "rows_deleted": rows_deleted,
-        "parts_rewritten": len(adds),
+        "parts_rewritten": rewritten,
     }
 
 
@@ -2914,8 +2959,10 @@ def update_where(
     remaining corner of the DML quartet): rewrite exactly the live parts
     containing rows where ``condition`` is TRUE, applying
     ``assignments`` ({column: SQL expression or Column}) to the matched
-    rows. Untouched parts are never read twice, let alone rewritten.
-    Returns {"version", "rows_updated", "parts_rewritten"}.
+    rows. Untouched parts are never read twice, let alone rewritten;
+    touched parts sharing a partition tag become ONE part
+    (:func:`_rewrite_touched`). Returns {"version", "rows_updated",
+    "parts_rewritten"}.
 
     Semantics (ANSI UPDATE):
 
@@ -2933,9 +2980,9 @@ def update_where(
     delete+insert at one version (the merge_upsert convention); the
     rewritten parts are ``rewrite``-flagged, so the insert-only feed
     ignores the operation entirely (documented contract, as for
-    deletes). Zone maps survive on unassigned columns only — assigned
-    columns' recorded ranges no longer bound the new values, so their
-    entries drop (conservatively unprunable) instead of lying.
+    deletes). Zone maps survive, as the members' envelope, on
+    unassigned columns only — assigned columns' recorded ranges no
+    longer bound the new values, so their entries drop instead of lying.
     Isolation is WriteSerializable via
     :func:`_commute_past_appends_only`, identical to delete/merge."""
     from pyspark.sql import functions as F
@@ -3002,32 +3049,20 @@ def update_where(
         return {"version": v0, "rows_updated": 0, "parts_rewritten": 0}
     touched_live = {p: live[p] for p in touched}
     old_rows = _read_live(spark, touched_live, schema).filter(cond)
-    cdc_old = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
-    _to_physical(old_rows, schema).write.mode("overwrite").parquet(cdc_old)
+    cdc_old = _write_part(spark, path, old_rows, schema, "cdc-")
     rows_updated = sum(r["__n"] for r in matched)
-    cdc_new = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
     _enforce_constraints(
         spark, path, v0, _apply(_read_parts(spark, [cdc_old], schema)),
         "update_where", schema,
     )
-    _to_physical(
-        _apply(_read_parts(spark, [cdc_old], schema)), schema
-    ).write.mode("overwrite").parquet(cdc_new)
-    assigned_phys = {_phys_of(schema, c) for c in assignments}
-    adds = []
-    for p in touched:
-        np = fs_join(_part_dir(path), uuid.uuid4().hex)
-        _to_physical(
-            _apply(_read_live(spark, {p: live[p]}, schema)), schema
-        ).write.mode("overwrite").parquet(np)
-        add = {"path": np, "partition": live[p]["partition"], "rewrite": True}
-        stats = {
-            k: v for k, v in (live[p].get("stats") or {}).items()
-            if k not in assigned_phys
-        }
-        if stats:
-            add["stats"] = stats
-        adds.append(add)
+    cdc_new = _write_part(
+        spark, path, _apply(_read_parts(spark, [cdc_old], schema)), schema, "cdc-"
+    )
+    adds, rewritten = _rewrite_touched(
+        spark, fs, path, live, touched, schema,
+        lambda g: _apply(_read_live(spark, g, schema, meta=True)),
+        drop_stats={_phys_of(schema, c) for c in assignments},
+    )
     payload = {
         "operation": "update_where",
         "adds": adds,
@@ -3047,7 +3082,7 @@ def update_where(
     return {
         "version": res["version"],
         "rows_updated": rows_updated,
-        "parts_rewritten": len(adds),
+        "parts_rewritten": rewritten,
     }
 
 
@@ -3063,13 +3098,8 @@ def _delete_where_dv(
     from pyspark.sql import functions as F
 
     tbl = _read_live(spark, live, schema, meta=True)
-    # anchored at the path TAIL: data files sit directly under
-    # parts/<uuid>/, so this is exact even when the table path itself
-    # contains a "parts" segment (a first-match regex would grab it)
-    _pb_expr = F.regexp_extract("_f_path", "/parts/([^/]+)/[^/]+$", 1)
-    hits = tbl.filter(cond).withColumn("_pb", _pb_expr).localCheckpoint(
-        eager=True
-    )
+    hits = tbl.filter(cond).withColumn("_pb", _part_base_expr())
+    hits = hits.localCheckpoint(eager=True)
     by_base = {p.rstrip("/").rsplit("/", 1)[-1]: p for p in live}
     hit_counts = {
         r["_pb"]: r["n"]
@@ -3088,19 +3118,13 @@ def _delete_where_dv(
     live_counts = {
         r["_pb"]: r["n"]
         for r in _read_live(spark, touched_live, schema, meta=True)
-        .withColumn("_pb", _pb_expr)
+        .withColumn("_pb", _part_base_expr())
         .groupBy("_pb").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    removes = sorted(
-        by_base[b] for b, n in hit_counts.items() if n >= live_counts[b]
-    )
-    partial = sorted(
-        by_base[b] for b, n in hit_counts.items() if n < live_counts[b]
-    )
-    cdc_part = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
-    _to_physical(hits.drop("_pb", *_META_COLS), schema).write.mode(
-        "overwrite"
-    ).parquet(cdc_part)
+    partial_bases = [b for b, n in hit_counts.items() if n < live_counts[b]]
+    removes = sorted(by_base[b] for b in hit_counts if b not in partial_bases)
+    partial = sorted(by_base[b] for b in partial_bases)
+    cdc_part = _write_part(spark, path, hits.drop("_pb", *_META_COLS), schema, "cdc-")
     # the per-part hit counts already sum to the matched-row total —
     # no second count over the written change part
     rows_deleted = sum(hit_counts.values())
@@ -3116,21 +3140,10 @@ def _delete_where_dv(
         # attaches a vector needs the v2 reader (whole-part removes
         # below are plain v1 semantics)
         payload["protocol"] = 2
-        partial_bases = {p.rstrip("/").rsplit("/", 1)[-1] for p in partial}
         dv_part = fs_join(_part_dir(path), "dv-" + uuid.uuid4().hex)
-        (
-            # dv_file is the part-relative '<part-uuid>/<file>' key (see
-            # _part_rel_expr): collision-proof by construction, where a
-            # bare basename would rely on Spark's task-file naming being
-            # globally unique across part directories
-            hits.filter(F.col("_pb").isin(list(partial_bases)))
-            .select(
-                F.concat_ws("/", F.col("_pb"), F.col("_f_name")).alias("dv_file"),
-                F.col("_f_idx").alias("dv_idx"),
-            )
-            .write.mode("overwrite")
-            .parquet(dv_part)
-        )
+        hits.filter(F.col("_pb").isin(partial_bases)).select(
+            _part_rel_expr().alias("dv_file"), F.col("_f_idx").alias("dv_idx")
+        ).write.mode("overwrite").parquet(dv_part)
         payload["dv"] = [{"part": p, "path": dv_part} for p in partial]
     if schema is not None:
         payload["schema"] = schema
@@ -3205,8 +3218,10 @@ def merge_upsert(
     rewrites always keep their original part's tag.
 
     Mechanics mirror :func:`delete_where`: one distributed semi-join
-    pass finds the touched parts, each is rewritten WITHOUT its matched
-    rows (anti-join), the updates land as one new part, and the old
+    pass finds the touched parts, their survivors (anti-join) become one
+    part per partition tag (:func:`_rewrite_touched`: zone-map envelope,
+    coarser across clustered parts until the next clustered
+    :func:`compact`), the updates land as one new part, and the old
     versions of updated rows go to a ``cdc`` delete part — so
     :func:`table_changes_cdf` shows an update as delete(old)+insert(new)
     at one version, Delta-CDF style. The key-match join shuffles both
@@ -3336,17 +3351,15 @@ def merge_upsert(
     removes: list[str] = []
     cdc: list[dict] = []
     cdc_part: str | None = None
-    rows_updated = 0
+    rows_updated = rewritten = 0
     if live:
         parts = sorted(live)
         tbl = _read_live(spark, live, table_schema, meta=True)
         if clausal:
-            # materialize the matched/unmatched split ONCE: each side's
-            # lineage joins the updates against a key scan of EVERY live
-            # part, and downstream it feeds the per-part survivor
-            # rewrites, the new-part write, and isEmpty — without the
-            # checkpoint a P-part merge would re-run the full-table key
-            # scan O(P) times
+            # materialize the matched/unmatched split ONCE: each side
+            # joins the updates against a key scan of EVERY live part,
+            # and the survivor rewrite, the new-part write and isEmpty
+            # would each re-run it
             matched_upd = _key_join(
                 tagged, tbl.select(*keys), "left_semi"
             ).localCheckpoint(eager=True)
@@ -3390,36 +3403,19 @@ def merge_upsert(
             old_rows = _key_join(
                 _read_live(spark, touched_live, table_schema), remove_keys, "left_semi"
             )
-            cdc_part = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
-            _to_physical(old_rows, schema).write.mode("overwrite").parquet(cdc_part)
+            cdc_part = _write_part(spark, path, old_rows, schema, "cdc-")
             # distinct matched keys, not raw old rows: a key appended
             # twice counts as ONE update (all its rows are replaced);
             # already computed inside the matched-parts job above
             rows_updated = int(matched["__nk"])
             cdc = [{"path": cdc_part, "change_type": "delete"}]
-            for p in touched:
-                keep = _key_join(
-                    _read_live(spark, {p: live[p]}, table_schema),
+            adds, rewritten = _rewrite_touched(
+                spark, fs, path, live, touched, schema,
+                lambda g: _key_join(
+                    _read_live(spark, g, table_schema, meta=True),
                     remove_keys, "left_anti",
-                )
-                # write first, probe the FOOTERS after: the old
-                # isEmpty() pre-probe ran the anti-join once per part
-                # just to skip the (rare) fully-emptied part — now the
-                # common case pays one job, and an emptied part's
-                # zero-row output is deleted before it is ever
-                # referenced (an unreferenced uuid dir, same crash
-                # debris class as any uncommitted write)
-                np = fs_join(_part_dir(path), uuid.uuid4().hex)
-                _to_physical(keep, schema).write.mode("overwrite").parquet(np)
-                if _part_num_rows(spark, np) == 0:
-                    fs.delete(np)
-                    continue
-                add = {"path": np, "partition": live[p]["partition"], "rewrite": True}
-                if live[p].get("stats"):
-                    # survivors are a subset of the original rows, so the
-                    # original zone map stays VALID (possibly wider — safe)
-                    add["stats"] = live[p]["stats"]
-                adds.append(add)
+                ),
+            )
     if clausal:
         # the new part carries only the rows the clauses route to the
         # table: matched updates + insertable unmatched rows (delete
@@ -3499,7 +3495,7 @@ def merge_upsert(
         "rows_updated": rows_updated,
         "rows_inserted": n_new - rows_updated,
         "rows_deleted": rows_deleted,
-        "parts_rewritten": len(adds) - (1 if upd_part is not None else 0),
+        "parts_rewritten": rewritten,
     }
 
 
@@ -3604,11 +3600,12 @@ def merge(
     finds exactly the parts holding a row some clause fires on; pass 2
     left-outer-joins ONLY those parts against the source, routes every
     row through one JVM CASE chain (no Python UDFs), localCheckpoints
-    the routed rows once, and writes survivors per part + one new part
-    (updated rows + inserts) + the CDF delete part. Untouched parts are
-    never rewritten; an unconditional BY-SOURCE clause touches every
-    part by definition (as in Delta). Survivor rewrites keep the
-    original part's zone maps (subset ⇒ still valid)."""
+    the routed rows once, and writes the survivors as one part per
+    partition tag (:func:`_rewrite_touched`: zone-map envelope, coarser
+    across clustered parts until the next clustered :func:`compact`) +
+    one new part (updated rows + inserts) + the CDF delete part.
+    Untouched parts are never rewritten; an unconditional BY-SOURCE
+    clause touches every part by definition (as in Delta)."""
     import functools
 
     from pyspark.sql import functions as F, types as T
@@ -3820,8 +3817,8 @@ def merge(
                     F.col("t").alias("__mrg_t"),
                     F.col("s").alias("__mrg_s"),
                 )
-                # materialize ONCE: the survivor writes (per part), the
-                # new-part write, the CDF part, and the counts all read
+                # materialize ONCE: the survivor writes, the new-part
+                # write, the CDF part, and the counts all read
                 # this; without the checkpoint each would re-run the
                 # touched-scan ⋈ source shuffle
                 .localCheckpoint(eager=True)
@@ -3847,7 +3844,7 @@ def merge(
             .localCheckpoint(eager=True)
         )
 
-    rows_updated = rows_deleted = rows_inserted = 0
+    rows_updated = rows_deleted = rows_inserted = rewritten = 0
     new_frames = []
     if routed is not None:
         counts = {
@@ -3883,25 +3880,18 @@ def merge(
         old_rows = routed.filter(F.col("__mrg_route") >= 0).select(
             F.col("__mrg_t").alias("t")
         ).select(*_row_exprs(None, keep_target=True))
-        cdc_part = fs_join(_part_dir(path), "cdc-" + uuid.uuid4().hex)
-        _to_physical(old_rows, schema).write.mode("overwrite").parquet(cdc_part)
+        cdc_part = _write_part(spark, path, old_rows, schema, "cdc-")
         cdc = [{"path": cdc_part, "change_type": "delete"}]
         removes = touched
-        pb = F.regexp_extract(F.col("__mrg_f"), "/parts/([^/]+)/[^/]+$", 1)
-        survivors = routed.filter(F.col("__mrg_route") == -1).withColumn("__mrg_pb", pb)
-        for p in touched:
-            base = p.rstrip("/").rsplit("/", 1)[-1]
-            keep = survivors.filter(F.col("__mrg_pb") == base).select(
-                F.col("__mrg_t").alias("t")
-            ).select(*_row_exprs(None, keep_target=True))
-            if keep.isEmpty():
-                continue
-            np = fs_join(_part_dir(path), uuid.uuid4().hex)
-            _to_physical(keep, schema).write.mode("overwrite").parquet(np)
-            add = {"path": np, "partition": live[p]["partition"], "rewrite": True}
-            if live[p].get("stats"):
-                add["stats"] = live[p]["stats"]
-            adds.append(add)
+        survivors = routed.filter(F.col("__mrg_route") == -1).select(
+            F.col("__mrg_f").alias("_f_path"), F.col("__mrg_t").alias("t")
+        )
+        adds, rewritten = _rewrite_touched(
+            spark, fs, path, live, touched, schema,
+            lambda g: survivors.filter(
+                _part_base_expr().isin([p.rstrip("/").rsplit("/", 1)[-1] for p in g])
+            ).select("_f_path", *_row_exprs(None, keep_target=True)),
+        )
     if ins_routed is not None:
         icounts = {
             r["__mrg_route"]: r["n"]
@@ -3966,7 +3956,7 @@ def merge(
         "rows_updated": rows_updated,
         "rows_inserted": rows_inserted,
         "rows_deleted": rows_deleted,
-        "parts_rewritten": len(adds) - (1 if upd_part is not None else 0),
+        "parts_rewritten": rewritten,
     }
 
 

@@ -4,8 +4,12 @@ lake read-back."""
 
 import datetime as dt
 import gzip
+import io
+import uuid
+from zoneinfo import ZoneInfo
 
 import pytest
+from hypothesis import HealthCheck, given, settings, strategies as st
 
 from es_analytics_spark.collector import (
     Collector,
@@ -434,3 +438,130 @@ def test_orc_sink_roundtrip_with_pushdown(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PushedFilters" in plan and "uid" in plan.split("PushedFilters", 1)[1][:200], plan
+
+
+_OFFSETS = [dt.timezone(dt.timedelta(minutes=m)) for m in (-600, -210, 0, 330, 345, 780)]
+_WALL = st.datetimes(min_value=dt.datetime(1990, 1, 1), max_value=dt.datetime(2037, 12, 31))
+_TIME_VALUE = st.one_of(
+    st.none(),
+    _WALL,
+    st.builds(lambda d, tz: d.replace(tzinfo=tz), _WALL, st.sampled_from(_OFFSETS)),
+    st.builds(
+        lambda d, z: d.replace(tzinfo=ZoneInfo(z)),
+        _WALL,
+        st.sampled_from(["America/New_York", "Asia/Kolkata", "Europe/Berlin"]),
+    ),
+)
+
+
+def _stored_micros(spark, lake: str, rows: list[dict], spark_path: bool) -> dict:
+    """Flush ``rows`` into a fresh lake through the pyarrow path, or the
+    Spark path when ``spark_path``; return {i: stored epoch µs}."""
+    cfg = CollectorConfig(lake_dir=lake, column_types={"tz_events": {"ts": DataType.Time}})
+    col = Collector(spark, cfg)
+    if spark_path:
+        def _no_pyarrow(*_a, **_kw):
+            raise ImportError("pyarrow path disabled")
+
+        col._put_parquet_bytes = _no_pyarrow
+    col.track_many("tz_events", rows)
+    col.stop()
+    got = col.table("tz_events").selectExpr("i", "unix_micros(ts) AS us").collect()
+    return {r["i"]: r["us"] for r in got}
+
+
+@settings(max_examples=12, deadline=None, derandomize=True,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(vals=st.lists(_TIME_VALUE, min_size=1, max_size=12))
+def test_pyarrow_flush_stores_the_spark_path_instants(spark, tmp_path, vals):
+    """The pyarrow flush stores the same instant as the Spark write for
+    a batch mixing naive wall times (session time zone), aware values
+    at several offsets and None: an aware value is its UTC instant, not
+    its wall clock read as UTC."""
+    rows = [{"i": i, "ts": v} for i, v in enumerate(vals)]
+    run = uuid.uuid4().hex
+    fast = _stored_micros(spark, str(tmp_path / f"{run}-arrow"), rows, False)
+    slow = _stored_micros(spark, str(tmp_path / f"{run}-spark"), rows, True)
+    assert fast == slow
+    for i, v in enumerate(vals):
+        if v is not None and v.tzinfo is not None:
+            assert fast[i] == (v - dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)) // dt.timedelta(microseconds=1)
+
+
+@pytest.mark.parametrize("wall", [
+    dt.datetime(2024, 11, 3, 1, 30),   # repeated hour: ambiguous
+    dt.datetime(2024, 3, 10, 2, 30),   # skipped hour: nonexistent
+])
+def test_pyarrow_flush_refuses_dst_gap_and_fold(spark, tmp_path, wall):
+    """A naive wall time the session zone cannot map to one instant
+    makes the pyarrow path raise; the flush then falls back to the
+    Spark write and still stores the row."""
+    from es_analytics_spark.collector import _time_array
+
+    with pytest.raises(Exception):
+        _time_array([dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc), wall],
+                    "America/New_York")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        col = Collector(spark, CollectorConfig(lake_dir=str(tmp_path)))
+        errors = []
+        col.on_error.append(errors.append)
+        col.track_many("dst", [{"i": 0, "ts": wall}])
+        col.stop()
+        assert any("pyarrow flush path failed" in str(e) for e in errors)
+        assert col.table("dst").count() == 1
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+@pytest.mark.parametrize("uri", [False, True])
+def test_put_bytes_failure_leaves_no_readable_part(spark, tmp_path, monkeypatch, uri):
+    """A put that dies mid-write leaves no truncated ``.parquet`` under
+    the table: the bytes are staged under a hidden name that a
+    mergeSchema load skips, and only a whole file is renamed into
+    place."""
+    from es_analytics_spark.sources import fsio
+
+    col = Collector(spark, CollectorConfig(lake_dir=str(tmp_path)))
+    col.track_many("torn", [{"i": i} for i in range(10)])
+    col.stop()
+    good = next(tmp_path.rglob("*.parquet"))
+    data = good.read_bytes()
+    target = str(good.parent.parent / uuid.uuid4().hex / "part-00000-x.snappy.parquet")
+
+    def torn(f, payload):
+        f.write(payload[: len(payload) // 2])
+        raise OSError("injected failure mid-write")
+
+    if uri:
+        store = fsio.lake_fs(spark, "file://" + str(tmp_path))
+        target = "file://" + target
+        real = fsio.HadoopFS._write
+        monkeypatch.setattr(
+            fsio.HadoopFS, "_write",
+            lambda self, p, d: (real(self, p, d[: len(d) // 2]), torn(io.BytesIO(), d)),
+        )
+    else:
+        store = fsio.LocalFS()
+        real_open = open
+
+        class _Torn:
+            def __init__(self, *a, **kw):
+                self.f = real_open(*a, **kw)
+
+            def __enter__(self):
+                return self
+
+            def __exit__(self, *exc):
+                self.f.close()
+
+            def write(self, payload):
+                torn(self.f, payload)
+
+        monkeypatch.setattr(fsio, "open", _Torn, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        store.put_bytes(target, data)
+    monkeypatch.undo()
+    assert sorted(p.name for p in tmp_path.rglob("*.parquet")) == [good.name]
+    assert not [p for p in tmp_path.rglob("*tmp-*")]
+    assert col.table("torn").count() == 10

@@ -878,6 +878,135 @@ def test_merge_upsert_replaces_and_inserts_in_one_commit(spark, tmp_path):
     assert [x["val"] for x in rows] == [999]
 
 
+def _layout_table(spark, path):
+    """Four parts in two partition tags (x: ids 0-39, y: ids 40-79),
+    zone maps on id and val; part 40-59 carries a deletion vector."""
+    from es_analytics_spark.txlog import delete_where
+
+    for lo, d in ((0, "x"), (20, "x"), (40, "y"), (60, "y")):
+        df = _ids(spark, lo, lo + 20, d=d).withColumn("val", F.col("id") * 10)
+        append(spark, path, df, partition={"d": d}, stats_cols=["id", "val"])
+    r = delete_where(spark, path, "id IN (41, 42)", use_dv=True)
+    assert r["parts_vectored"] == 1
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("id", "d", "val").collect())
+
+
+def _dml_delete(spark, path):
+    from es_analytics_spark.txlog import delete_where
+
+    return delete_where(spark, path, "id % 10 = 3"), []
+
+
+def _dml_update(spark, path):
+    from es_analytics_spark.txlog import update_where
+
+    return update_where(spark, path, {"val": "val + 1"}, "id % 10 = 3"), []
+
+
+_MERGE_KEYS = [3, 23, 43, 63, 100]
+
+
+def _merge_source(spark):
+    return spark.createDataFrame(
+        [(k, "y" if k >= 40 else "x", -k) for k in _MERGE_KEYS], "id long, d string, val long"
+    )
+
+
+def _dml_merge_upsert(spark, path):
+    from es_analytics_spark.txlog import merge_upsert
+
+    return merge_upsert(spark, path, _merge_source(spark), keys=["id"]), _MERGE_KEYS
+
+
+def _dml_merge(spark, path):
+    from es_analytics_spark.txlog import merge
+
+    r = merge(spark, path, _merge_source(spark), ["id"],
+              matched=[{"action": "update", "set": None}], not_matched=[{"action": "insert"}])
+    return r, _MERGE_KEYS
+
+
+@pytest.mark.parametrize("op", [_dml_delete, _dml_update, _dml_merge_upsert, _dml_merge])
+def test_dml_rewrites_one_survivor_part_per_partition_tag(spark, tmp_path, op):
+    """Every row-level DML verb writes the survivors of all touched parts
+    sharing a partition tag as ONE part, tagged like its members and
+    carrying their zone-map envelope, so partition- and range-pruned
+    reads still equal the filtered full read; the change feed and time
+    travel to the pre-op version are unchanged."""
+    from es_analytics_spark.txlog import _read_commit, table_changes_cdf
+
+    path = str(tmp_path / "t")
+    _layout_table(spark, path)
+    v_pre = current_version(spark, path)
+    pre = _rows(read_table(spark, path))
+    cdf_pre = sorted(tuple(r) for r in table_changes_cdf(spark, path, 0, v_pre).collect())
+
+    r, merged_keys = op(spark, path)
+    v = r["version"]
+    assert v == v_pre + 1 and r["parts_rewritten"] == 4
+    c = _read_commit(lake_fs(spark, path), path, v)
+    assert len(c["removes"]) == 4
+    survivors = [a for a in c["adds"] if a.get("rewrite")]
+    assert sorted(a["partition"]["d"] for a in survivors) == ["x", "y"]
+    env = {a["partition"]["d"]: a["stats"] for a in survivors}
+    assert env["x"]["id"] == [0, 39] and env["y"]["id"] == [40, 79]
+    if op is _dml_update:
+        assert set(env["x"]) == {"id"}  # the assigned column's bounds drop
+    else:
+        assert env["x"]["val"] == [0, 390]
+
+    full = read_table(spark, path)
+    for d in ("x", "y"):
+        got = read_table(spark, path, partition_filter={"d": d})
+        # merged rows land in the untagged updates part, outside any
+        # partition_filter read
+        want = full.filter((F.col("d") == d) & ~F.col("id").isin(merged_keys))
+        assert _rows(got.filter(~F.col("id").isin(merged_keys))) == _rows(want)
+    for lo, hi in ((0, 5), (25, 35), (41, 44), (61, 79), (100, 100)):
+        got = read_table(spark, path, range_filter={"id": (lo, hi)})
+        assert _rows(got) == _rows(full.filter(F.col("id").between(lo, hi)))
+
+    assert _rows(read_table(spark, path, version=v_pre)) == pre
+    assert sorted(
+        tuple(r) for r in table_changes_cdf(spark, path, 0, v_pre).collect()
+    ) == cdf_pre
+    feed = table_changes_cdf(spark, path, v_pre, v).collect()
+    post = list(pre)
+    for x in feed:
+        if x["_change_type"] == "delete":
+            post.remove((x["id"], x["d"], x["val"]))
+    post += [(x["id"], x["d"], x["val"]) for x in feed if x["_change_type"] == "insert"]
+    assert sorted(post) == _rows(full)
+
+
+@pytest.mark.parametrize("file_path", [
+    "/tmp/t/parts/5f0c1e/part-00000-a1.snappy.parquet",
+    "file:/lake/parts/orders/parts/9a7b/part-00001-b2.c000.snappy.parquet",
+    "file:///data/my%20table/parts/c0ffee/part-00000-%3Ax%25.snappy.parquet",
+    "hdfs://nn:8020/w/parts/parts/d1/part-00003-z.parquet",
+])
+def test_part_key_expressions_match_the_regex_forms(spark, file_path):
+    """The substring_index forms of the scan-provenance keys equal the
+    tail-anchored regexes they replaced."""
+    from es_analytics_spark.txlog import _part_base_expr, _part_rel_expr
+
+    df = spark.createDataFrame([(file_path,)], "_f_path string")
+    got = df.select(
+        _part_rel_expr().alias("rel"),
+        _part_base_expr().alias("base"),
+        F.substring_index("_f_path", "/", -1).alias("name"),
+        F.regexp_extract("_f_path", "/parts/([^/]+/[^/]+)$", 1).alias("rel_re"),
+        F.regexp_extract("_f_path", "/parts/([^/]+)/[^/]+$", 1).alias("base_re"),
+        F.regexp_extract("_f_path", "[^/]+$", 0).alias("name_re"),
+    ).first()
+    assert (got["rel"], got["base"], got["name"]) == (
+        got["rel_re"], got["base_re"], got["name_re"]
+    )
+
+
 def test_table_changes_cdf_row_level_feed(spark, tmp_path):
     """The full-CDF contract: deletes come from the commit-recorded
     change parts, an upsert is delete(old)+insert(new) at one version,
