@@ -1,7 +1,9 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line {"metric": ..., "value": N, "unit": "sec", "queries":
-{...}, "sf": ...}.
+{...}, "sf": ..., "cpus": ..., "defaultParallelism": ..., "sha": ...}
+— the last three are provenance: the CPUs this process may run on, the
+session's effective parallelism and the git commit measured.
 
 Each query is fully executed (collected to count) — not just planned.
 A warmup query first absorbs JVM/codegen startup so per-query numbers
@@ -17,6 +19,7 @@ import time
 
 from es_analytics_spark.queries import REGISTRY
 from es_analytics_spark.session import get_spark
+from perfbench.common import git_sha, nproc
 
 HEADLINE = [
     "agg_pricing_summary",
@@ -425,6 +428,9 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": sf,
+        "cpus": nproc(),
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
+        "sha": git_sha(),
         "n_queries": len(timings),
         "cold_total_sec": cold_wall,
         "cold_mode": "wall-clock, 8-way concurrent submission",

@@ -12,8 +12,17 @@ tracks ingest rate, not accumulated history. The classic delta rule for
 distributive aggregates (Gray et al., "Data Cube"; the standard IVM
 formulation): SUM and COUNT are signed-delta maintainable under
 inserts AND deletes — ``Δsum = Σ sign·x``, ``Δcount = Σ sign`` — while
-MIN/MAX are not (a deleted minimum needs a rescan), so they are
-rejected here rather than maintained wrong.
+MIN/MAX are maintainable under inserts only (``least``/``greatest``
+of state and delta; a deleted minimum needs a rescan), so a rollup with
+MIN/MAX measures refuses any window that holds a non-insert change
+rather than maintaining it wrong.
+
+The rollup's input is itself a txlog table. Raw files land in one with
+:func:`refresh_enriched_view` — exactly once per source file, recorded
+in the commit's ``sources`` — so the path from a lake directory to a
+rollup is ``refresh_enriched_view`` then :func:`maintain_rollup`, and
+every stage is versioned by the one commit log (time travel, change
+feeds, ``vacuum``/``clean_log`` retention, ``delete_where`` erasure).
 
 Exactly-once, multi-maintainer safe, the same design as the streaming
 epoch sink (`streaming/txlog_sink.py`):
@@ -67,6 +76,60 @@ def _txn_app(source_path: str) -> str:
     return f"cdf:{source_path}"
 
 
+def refresh_enriched_view(
+    spark: SparkSession,
+    source_glob: str,
+    view_path: str,
+    enrich,
+    stats_cols: list[str] | None = None,
+    max_attempts: int = 5,
+) -> dict:
+    """Create or incrementally refresh a txlog table from raw files:
+    every file matching ``source_glob`` that no commit has incorporated
+    yet is read, transformed by ``enrich`` (DataFrame -> DataFrame,
+    typically a broadcast-dim join and projection) and appended in ONE
+    commit that records the files as its ``sources``. Refresh cost
+    tracks the increment, never the view size. ``stats_cols`` records
+    per-part zone maps (``txlog.read_table(range_filter=...)``).
+
+    Exactly once under racing refreshes: the incorporated set lives in
+    the commits, so a writer that loses the source-overlap conflict
+    re-reads :func:`txlog.table_sources`, finds nothing new and no-ops
+    (its orphan part is ``vacuum`` debris). ``enrich`` must be
+    deterministic per source row; a changed dim is a different view.
+    Returns ``{"new_files", "total_files", "version"}``."""
+    last_conflict: Exception | None = None
+    for _ in range(max_attempts):
+        v0 = txlog.current_version(spark, view_path)
+        seen = txlog.table_sources(spark, view_path, version=v0)
+        new_files = [
+            f for f in lake_fs(spark, source_glob).glob(source_glob) if f not in seen
+        ]
+        if not new_files:
+            return {"new_files": 0, "total_files": len(seen), "version": v0}
+        try:
+            res = txlog.append(
+                spark,
+                view_path,
+                enrich(spark.read.parquet(*new_files)),
+                sources=new_files,
+                since_version=v0,
+                stats_cols=stats_cols,
+            )
+        except txlog.CommitConflict as exc:
+            last_conflict = exc
+            continue
+        return {
+            "new_files": len(new_files),
+            "total_files": len(seen) + len(new_files),
+            "version": res["version"],
+        }
+    raise txlog.CommitConflict(
+        f"refresh_enriched_view under {view_path}: {max_attempts} attempts "
+        f"all conflicted; last: {last_conflict}"
+    )
+
+
 def rollup_cursor(
     spark: SparkSession,
     rollup_path: str,
@@ -92,7 +155,27 @@ def rollup_cursor(
     return max(best, 0)
 
 
-def _check_window_cdc_complete(spark, source_path: str, cursor: int, to: int) -> None:
+_KINDS = ("sum", "count", "min", "max")
+
+
+def _check_measures(measures: dict, where: str) -> bool:
+    """Validate ``measures``; True when any is a min/max (insert-only)
+    measure."""
+    for out, (agg, _col) in measures.items():
+        if agg not in _KINDS:
+            raise ValueError(
+                f"{where}: measure {out}={agg!r} — supported kinds are {_KINDS}"
+            )
+        if out == COUNT_COL:
+            raise ValueError(f"{where}: {COUNT_COL} is reserved")
+    return any(agg in ("min", "max") for agg, _c in measures.values())
+
+
+def _check_window_cdc_complete(
+    spark, source_path: str, cursor: int, to: int, insert_only: bool
+) -> None:
+    """Refuse a window delta maintenance would fold wrong. Metadata
+    only: each commit JSON is read, no data part is opened."""
     fs = lake_fs(spark, source_path)
     for v in range(cursor + 1, to + 1):
         c = txlog._read_commit(fs, source_path, v)
@@ -104,6 +187,15 @@ def _check_window_cdc_complete(spark, source_path: str, cursor: int, to: int) ->
                 "deletes, so delta maintenance would keep counting them. "
                 "Re-run overwrites with cdc=True, or rebuild the rollup "
                 "from a snapshot"
+            )
+        if insert_only and any(
+            a["change_type"] != "insert" for a in txlog._cdf_commit_actions(c, v)
+        ):
+            raise ValueError(
+                f"maintain_rollup: source commit v{v} ({op}) changes or "
+                "deletes rows, and min/max measures are maintainable under "
+                "inserts only (a deleted extreme needs a rescan). Rebuild "
+                "the rollup with bootstrap_rollup into a fresh path"
             )
 
 
@@ -117,10 +209,12 @@ def maintain_rollup(
 ) -> dict:
     """Fold the source's new commits into the rollup: one transactional
     ``merge_upsert`` over the TOUCHED groups only. ``measures`` maps
-    output column → ``("sum", col)`` or ``("count", None)``; a net
-    row count (:data:`COUNT_COL`) is always maintained. Returns
-    ``{"cursor", "applied", "version"}`` (``applied=0`` → caught up,
-    nothing committed).
+    output column → ``("sum", col)``, ``("count", None)``, ``("min",
+    col)`` or ``("max", col)``; a net row count (:data:`COUNT_COL`) is
+    always maintained. Returns ``{"cursor", "applied", "version"}``
+    (``applied=0`` → caught up, nothing committed). Min/max merge into
+    state by ``least``/``greatest``; with either present, a window
+    holding any non-insert change raises ``ValueError``.
 
     Safe to call from many processes on any schedule: exactly-once per
     source version (see module docstring). Compactions advance the
@@ -128,16 +222,7 @@ def maintain_rollup(
     still collide). Deletes/upserts on the source subtract exactly; a
     group whose net count hits zero stays stored but is hidden by
     :func:`read_rollup`."""
-    for out, (agg, col) in measures.items():
-        if agg not in ("sum", "count"):
-            raise ValueError(
-                f"maintain_rollup: measure {out}={agg!r} — only sum/count are "
-                "delta-maintainable under deletes (min/max would need a "
-                "rescan; compute those as a windowed query instead)"
-            )
-        if out == COUNT_COL:
-            raise ValueError(f"maintain_rollup: {COUNT_COL} is reserved")
-
+    insert_only = _check_measures(measures, "maintain_rollup")
     for attempt in range(max_attempts):
         latest = txlog.current_version(spark, source_path)
         # cursor AND current state both pinned to ONE rollup version;
@@ -151,7 +236,7 @@ def maintain_rollup(
         cursor = rollup_cursor(spark, rollup_path, source_path, version=state_v)
         if latest <= cursor:
             return {"cursor": cursor, "applied": 0, "version": None}
-        _check_window_cdc_complete(spark, source_path, cursor, latest)
+        _check_window_cdc_complete(spark, source_path, cursor, latest, insert_only)
         delta = txlog.table_changes_cdf(spark, source_path, cursor, latest)
         sign = F.when(F.col("_change_type") == "insert", F.lit(1)).otherwise(
             F.lit(-1)
@@ -160,8 +245,10 @@ def maintain_rollup(
         for out, (agg, col) in measures.items():
             if agg == "count":
                 aggs.append(F.sum(sign).cast("long").alias(out))
-            else:
+            elif agg == "sum":
                 aggs.append(F.sum(sign * F.col(col)).alias(out))
+            else:  # the window is insert-only (checked above)
+                aggs.append(getattr(F, agg)(col).alias(out))
         grouped = delta.groupBy(*keys).agg(*aggs)
         if state_v > 0:
             state = txlog.read_table(spark, rollup_path, version=state_v)
@@ -174,13 +261,15 @@ def maintain_rollup(
                 cond = term if cond is None else (cond & term)
             merged = d.join(c, cond, "left")
             cols = [d[k].alias(k) for k in keys]
-            for out in [COUNT_COL, *measures]:
-                cols.append(
-                    (
-                        F.coalesce(c[out], F.lit(0))
-                        + F.coalesce(d[out], F.lit(0))
-                    ).alias(out)
-                )
+            kinds = {COUNT_COL: "count", **{o: m[0] for o, m in measures.items()}}
+            for out, agg in kinds.items():
+                if agg == "min":
+                    folded = F.least(c[out], d[out])  # least/greatest skip NULLs
+                elif agg == "max":
+                    folded = F.greatest(c[out], d[out])
+                else:
+                    folded = F.coalesce(c[out], F.lit(0)) + F.coalesce(d[out], F.lit(0))
+                cols.append(folded.alias(out))
             updates = merged.select(*cols)
         else:
             updates = grouped
@@ -226,14 +315,7 @@ def bootstrap_rollup(
     commit lands at rollup v1 exactly (``expect_version=0``), so a
     concurrent maintainer or second bootstrap conflicts instead of
     double-initializing."""
-    for out, (agg, col) in measures.items():
-        if agg not in ("sum", "count"):
-            raise ValueError(
-                f"bootstrap_rollup: measure {out}={agg!r} — only sum/count "
-                "are delta-maintainable (same contract as maintain_rollup)"
-            )
-        if out == COUNT_COL:
-            raise ValueError(f"bootstrap_rollup: {COUNT_COL} is reserved")
+    _check_measures(measures, "bootstrap_rollup")
     if txlog.current_version(spark, rollup_path) > 0:
         raise ValueError(
             f"bootstrap_rollup: {rollup_path} is not empty; bootstrap "
@@ -248,7 +330,7 @@ def bootstrap_rollup(
         if agg == "count":
             aggs.append(F.count(F.lit(1)).alias(out))
         else:
-            aggs.append(F.sum(F.col(col)).alias(out))
+            aggs.append(getattr(F, agg)(F.col(col)).alias(out))
     state = snapshot.groupBy(*keys).agg(*aggs).localCheckpoint(eager=True)
     res = txlog.merge_upsert(
         spark, rollup_path, state, keys=keys,

@@ -1604,7 +1604,7 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Materialized rollup under the correctness gate; value-range frames
+# Incremental txlog rollup under the correctness gate; value-range frames
 # ---------------------------------------------------------------------------
 
 
@@ -1622,38 +1622,56 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The incremental-rollup machinery under the exact-compare gate:
-    build a manifest-driven rollup from the orders file into a temp
-    location, refresh it a second time (must be a no-op), and return
-    the read-back — which must hash-match a direct GROUP BY. Proves
-    the decimal-mergeable partial-aggregate path end to end, not just
-    in unit tests.
+    refresh the orders file into a scratch txlog table (exactly once by
+    source file), fold it into a CDF-maintained rollup, maintain it a
+    second time (must apply nothing), and return the read-back — which
+    must hash-match a direct GROUP BY. Proves the signed-delta sum/count
+    and insert-only min/max merge end to end, not just in unit tests.
 
-    Scale: the refresh reads only manifest-new files (here: one), the
-    merge is |groups|-sized; see materialized.py for the 100 TB
-    argument.
+    Scale: a refresh reads only files no commit has incorporated, and a
+    maintenance step folds only the new commits' change feed into the
+    touched groups; see incremental.py for the 100 TB argument.
     """
     import shutil
     import tempfile
 
-    from es_analytics_spark.materialized import read_rollup, refresh_rollup
+    from es_analytics_spark.incremental import (
+        maintain_rollup,
+        read_rollup,
+        refresh_enriched_view,
+    )
 
+    keys = ["o_orderstatus", "o_orderpriority"]
     measures = {
         "n": ("count", None),
-        "total_price": ("sum", "o_totalprice"),
+        "total_price": ("sum", "price_dec"),
         "lo": ("min", "o_totalprice"),
         "hi": ("max", "o_totalprice"),
     }
     tmp = tempfile.mkdtemp(prefix="rollup_q_")
+    src, roll = f"{tmp}/orders", f"{tmp}/rollup"
     try:
-        glob_pat = f"{sf_dir}/orders.parquet"
-        refresh_rollup(
-            spark, glob_pat, tmp, ["o_orderstatus", "o_orderpriority"], measures
+        refresh_enriched_view(
+            spark,
+            f"{sf_dir}/orders.parquet",
+            src,
+            lambda df: df.select(
+                *keys,
+                "o_totalprice",
+                # decimal sums merge order-independently (functions.exact.dsum)
+                F.col("o_totalprice").cast("decimal(38,10)").alias("price_dec"),
+            ),
         )
-        second = refresh_rollup(
-            spark, glob_pat, tmp, ["o_orderstatus", "o_orderpriority"], measures
+        maintain_rollup(spark, src, roll, keys, measures)
+        second = maintain_rollup(spark, src, roll, keys, measures)
+        assert second["applied"] == 0  # idempotence is part of the contract
+        out = read_rollup(spark, roll).select(
+            *keys,
+            "n",
+            F.round("total_price", 4).cast("double").alias("total_price"),
+            "lo",
+            "hi",
         )
-        assert second["new_files"] == 0  # idempotence is part of the contract
-        out = read_rollup(spark, tmp, measures)
         # materialize before the temp dir vanishes
         pdf = out.toPandas()
     finally:

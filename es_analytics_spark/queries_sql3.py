@@ -3,7 +3,7 @@ heavy hitters, bitmap set algebra (batch + streaming state),
 duplicated-n-gram quality signals, asymmetric n-gram containment,
 deterministic corpus resampling (domain mixing, quality curricula),
 BPE merge counting, the embedding-space tier (SemDeDup, MMR
-reranking, int8 scalar quantization), and the manifest-gated
+reranking, int8 scalar quantization), and the txlog-backed
 incremental join view driven under the exact gate.
 
 Same contract as the rest of the catalog: every query pairs a
@@ -687,22 +687,21 @@ _VIEW_INCREMENTAL_SQL = """
 
 @query("join_view_incremental", oracle=_VIEW_INCREMENTAL_SQL)
 def join_view_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The manifest-gated enriched-view machinery under the exact-
-    compare gate: materialize customer⋈nation incrementally into a temp
-    view (second refresh must be a no-op — idempotence is part of the
-    contract), read back ONLY manifest-published parts, aggregate, and
-    hash-match the direct join's SQL. Proves the append-only
-    part/manifest protocol end to end, not just in unit tests.
+    """The incremental enriched-view refresh under the exact-compare
+    gate: materialize customer⋈nation into a scratch txlog table
+    (second refresh must be a no-op — idempotence is part of the
+    contract), read back the committed snapshot, aggregate, and
+    hash-match the direct join's SQL. Proves the exactly-once-by-source
+    refresh end to end, not just in unit tests.
 
-    Scale: a refresh enriches only manifest-new fact files (here one);
-    view size never appears in refresh cost; see materialized.py."""
+    Scale: a refresh enriches only files no commit has incorporated
+    (here one); view size never appears in refresh cost; see
+    incremental.refresh_enriched_view."""
     import shutil
     import tempfile
 
-    from es_analytics_spark.materialized import (
-        read_enriched_view,
-        refresh_enriched_view,
-    )
+    from es_analytics_spark.incremental import refresh_enriched_view
+    from es_analytics_spark.txlog import read_table
 
     dim = _t(spark, sf_dir, "nation")["nation"].select("n_nationkey", "n_name")
 
@@ -718,7 +717,7 @@ def join_view_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         second = refresh_enriched_view(spark, glob_pat, tmp, enrich)
         assert second["new_files"] == 0
         out = (
-            read_enriched_view(spark, tmp)
+            read_table(spark, tmp)
             .groupBy("nation")
             .agg(
                 F.count("*").cast("bigint").alias("n_customers"),

@@ -1,11 +1,13 @@
-"""Multi-writer optimistic concurrency over the manifest seam.
+"""Multi-writer transactional tables: the engine's one versioned-table
+format.
 
-The single-writer structures in ``materialized.py`` publish state by
-atomically renaming ONE mutable manifest — correct for one writer, but
-two concurrent refreshes would silently overwrite each other's commit.
-This module removes that restriction with the classic transactional-log
-design (the public Delta/Iceberg commit protocol, re-expressed on this
-engine's fsio seam):
+Every versioned table the engine keeps — streaming sink targets,
+enriched views refreshed from raw files and incremental rollups
+(``incremental.py``) — is a txlog table. Publishing state by atomically renaming ONE mutable
+manifest is correct for one writer, but two concurrent refreshes would
+silently overwrite each other's commit. This module removes that
+restriction with the classic transactional-log design (the public
+Delta/Iceberg commit protocol, re-expressed on this engine's fsio seam):
 
 - **The log is a sequence of write-once files** ``_txlog/v000001.json,
   v000002.json, …`` — no commit or checkpoint is ever mutated. This is
@@ -27,8 +29,7 @@ engine's fsio seam):
 - **Data parts are immutable directories** under ``parts/``; a commit
   lists the parts it adds and removes. A crash between writing parts
   and winning the CAS leaves orphan directories no reader can ever
-  observe (``vacuum`` reaps them) — the same invisible-debris story as
-  the enriched-view manifest, now safe under contention.
+  observe (``vacuum`` reaps them), safe under contention.
 
 Conflict rules (optimistic, checked by the CAS loser against every
 commit that landed since its snapshot):
@@ -1435,7 +1436,7 @@ def append(
     files therefore serialize: one wins, the other raises
     :class:`CommitConflict`, re-reads :func:`table_sources`, and finds
     nothing left to incorporate. This is the incremental-view refresh
-    contract (``materialized.refresh_enriched_view_tx``)."""
+    contract (``incremental.refresh_enriched_view``)."""
     fs = lake_fs(spark, path)
     if sources is not None and since_version is None:
         raise ValueError("append: sources requires since_version (the snapshot "
@@ -4049,8 +4050,7 @@ def table_changes(
     to_version: int | None = None,
 ) -> DataFrame:
     """Change feed between two committed versions: the rows ADDED by
-    commits in (from_version, to_version] — the txlog analog of
-    ``materialized.read_view_changes`` (Delta's ``table_changes`` /
+    commits in (from_version, to_version] (Delta's ``table_changes`` /
     CDF for the insert-only case). Exact for append/refresh workloads
     because parts are immutable. ``from_version=0`` reads everything up
     to ``to_version``.
@@ -4758,8 +4758,9 @@ def vacuum(
     crashed before the CAS. Referenced-but-removed parts are kept (they
     back time travel); pass ``keep_versions=N`` to also drop parts
     whose last reference is older than the newest N versions AND that
-    are not live (bounded time-travel retention, the expire_snapshots
-    analog).
+    are not live (bounded time-travel retention). A deletion vector's
+    last reference is the later of the commit that attached it and the
+    commit that removed its data part.
 
     **In-flight-writer safety (retention horizon).** Every transaction
     writes its part BEFORE winning the CAS (``append`` → ``_write_part``
@@ -4779,10 +4780,25 @@ def vacuum(
     fs = lake_fs(spark, path)
     latest, live = _snapshot(fs, path)
     referenced: dict[str, int] = {}
+    # vectors attached to each data part: a vector backs its part's
+    # reads up to the commit that REMOVES the part, so that removal is
+    # the vector's last reference too
+    dvs_of: dict[str, set[str]] = {}
+    versions = _list_versions(fs, path)
+    if versions and versions[0] > 1:
+        # log retention folded the oldest commits into a checkpoint:
+        # vectors attached there are known only from its live set
+        try:
+            _v, base = _snapshot(fs, path, versions[0] - 1)
+        except FileNotFoundError:  # no replayable state before the log
+            base = {}
+        for p, e in base.items():
+            if e.get("dvs"):
+                dvs_of[p] = set(e["dvs"])
     # iterate the RETAINED commits (log retention may have reaped the
     # oldest — their parts, if not live, age out via the mtime horizon
     # below exactly like crash debris)
-    for v in _list_versions(fs, path):
+    for v in versions:
         c = _read_commit(fs, path, v)
         for a in c.get("adds", []):
             referenced[a["path"]] = v
@@ -4790,8 +4806,11 @@ def vacuum(
                 # a restore's re-attached vector: its last reference is
                 # THIS commit, not the original dv delete
                 referenced[d] = v
+                dvs_of.setdefault(a["path"], set()).add(d)
         for r in c.get("removes", []):
             referenced[r] = v
+            for d in dvs_of.get(r, ()):
+                referenced[d] = v
         for e in c.get("cdc", []):
             # change parts back table_changes_cdf the way removed parts
             # back time travel: same keep_versions retention
@@ -4800,6 +4819,7 @@ def vacuum(
             # deletion-vector parts back time travel / CDF windows the
             # same way (live-attached vectors are protected below)
             referenced[d["path"]] = v
+            dvs_of.setdefault(d["part"], set()).add(d["path"])
     cutoff = latest - keep_versions if keep_versions > 0 else 0
     horizon = _time.time() - retention_seconds
     # a deletion vector attached to a LIVE part is load-bearing NOW —

@@ -2,17 +2,18 @@
 
 Run with:  PYTHONPATH=/root/repo python examples/lake_operations.py
 
-The single-writer lake lifecycle this engine maintains without a
-transactional table format — every step prints its receipt:
+The lake lifecycle from raw fact files to a versioned view — every
+step prints its receipt:
 
   1. build        fragmented fact table → compact → range-cluster
   2. mutate       MERGE upsert, SCD2 dimension history
   3. audit        key-level snapshot diff signs the mutations off
-  4. views        incremental enriched view with manifest zone maps,
-                  time travel, CDC change feed
-  5. forget       GDPR erasure: file-pruned on tables, retroactive
-                  (snapshot-piercing) on views
-  6. clean        vacuum unreferenced debris
+  4. views        incremental enriched view (a txlog table) with
+                  commit-log zone maps, time travel, change feed
+  5. forget       GDPR erasure: file-pruned on the raw table; on the
+                  view a row-level delete, then vacuum expires every
+                  version that still held the subject
+  6. clean        commit-log retention
 
 All of it runs through the sources.fsio seam, so the same script
 works against any Hadoop URI lake root (s3a://...).
@@ -26,7 +27,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from es_analytics_spark import get_spark
+from es_analytics_spark import get_spark, txlog
+from es_analytics_spark.incremental import refresh_enriched_view
 from es_analytics_spark.maintenance import (
     cluster_by,
     compact,
@@ -35,14 +37,6 @@ from es_analytics_spark.maintenance import (
     table_diff,
     table_stats,
     upsert,
-)
-from es_analytics_spark.materialized import (
-    erase_from_view,
-    read_enriched_view,
-    read_view_changes,
-    refresh_enriched_view,
-    vacuum_enriched_view,
-    view_history,
 )
 
 
@@ -106,22 +100,28 @@ def main() -> None:
             ),
         )
         # second loop iteration sees no new files — a no-op receipt
-    pruned = read_enriched_view(spark, view, prune=("id", 100, 199))
+    pruned = txlog.read_table(spark, view, range_filter={"id": (100, 199)})
     print("zone-map pruned rows:", pruned.count(), "files:", len(pruned.inputFiles()))
-    print("history:", view_history(spark, view))
-    print("change feed v0→v1 rows:", read_view_changes(spark, view, 0, 1).count())
+    print("history:", [(h["version"], h["operation"]) for h in txlog.history(spark, view)])
+    print("change feed v0→v1 rows:", txlog.table_changes(spark, view, 0, 1).count())
 
-    # 5. forget: GDPR on the table (file-pruned) and the view (retroactive)
+    # 5. forget: GDPR on the table (file-pruned) and the view. The
+    # view's delete rewrites the touched parts (no deletion vector, so
+    # no live part keeps the subject's bytes); its removes still back
+    # time travel, so the erasure is final only once one further commit
+    # (here the erasure record) lets vacuum(keep_versions=1) expire them
     print("erase table:", erase_keys(spark, facts, "cust_id", [13]))
-    print("erase view:", erase_from_view(spark, view, "cust_id", [13]))
-    v1 = read_enriched_view(spark, view, version=1)
-    print(
-        "subject rows in time-travel v1 after erasure:",
-        v1.filter(F.col("cust_id") == 13).count(),
-    )
+    print("erase view:", txlog.delete_where(spark, view, F.col("cust_id").isin(13)))
+    txlog.set_table_properties(spark, view, {"erasure.last": "cust_id IN (13)"})
+    print("vacuum reaped:", len(txlog.vacuum(spark, view, keep_versions=1)), "parts")
+    try:
+        txlog.read_table(spark, view, version=1).count()
+    except txlog.VersionExpiredError:
+        print("time travel to pre-erasure v1: expired")
 
-    # 6. clean
-    print("vacuum reaped:", vacuum_enriched_view(spark, view))
+    # 6. clean: checkpoint, then reap the commit log behind it
+    txlog.checkpoint(spark, view)
+    print("clean_log:", txlog.clean_log(spark, view))
     shutil.rmtree(root)
 
 

@@ -2,13 +2,13 @@
 
 Run with:  PYTHONPATH=/root/repo python examples/multiwriter_transactions.py
 
-The single-writer lake lifecycle (examples/lake_operations.py) publishes
-state by atomically renaming one mutable manifest — correct for one
-writer, lost-update-prone for two. This walkthrough shows the
-multi-writer upgrade: a write-once commit log with optimistic
-concurrency (the public Delta/Iceberg design, re-expressed on the
-engine's fsio seam; the reference's write-once ``Store.put`` contract —
-lib/store/Store.ts:4-8 — promoted to the commit path):
+Publishing state by atomically renaming one mutable manifest is
+correct for one writer and lost-update-prone for two. This walkthrough
+shows the design every versioned table here uses: a write-once commit
+log with optimistic concurrency (the public Delta/Iceberg design,
+re-expressed on the engine's fsio seam; the reference's write-once
+``Store.put`` contract — lib/store/Store.ts:4-8 — promoted to the
+commit path):
 
   1. contend      four writers append concurrently; the CAS serializes
                   them into a gap-free version history, zero lost rows
@@ -16,8 +16,8 @@ lib/store/Store.ts:4-8 — promoted to the commit path):
                   partition pruning without opening data
   3. maintain     size-targeted transactional compaction; overwrite a
                   partition wholesale; checkpoint to bound replay
-  4. refresh      a materialized enriched view where two racing
-                  refreshes incorporate each source file EXACTLY once
+  4. refresh      an enriched view where two racing refreshes
+                  incorporate each source file EXACTLY once
   5. evolve       schema-in-commit: drifted appends are rejected, or
                   evolve additively with deterministic null fill
   6. consume      cursor-driven change feed (changes_since) that stays
@@ -35,7 +35,7 @@ import threading
 from pyspark.sql import functions as F
 
 from es_analytics_spark import get_spark, txlog
-from es_analytics_spark.materialized import refresh_enriched_view_tx
+from es_analytics_spark.incremental import refresh_enriched_view
 
 
 def main() -> None:
@@ -84,7 +84,7 @@ def main() -> None:
     results: list = [None, None]
 
     def refresher(i: int) -> None:
-        results[i] = refresh_enriched_view_tx(spark, glob_pat, view, enrich)
+        results[i] = refresh_enriched_view(spark, glob_pat, view, enrich)
 
     rt = [threading.Thread(target=refresher, args=(i,)) for i in range(2)]
     [t.start() for t in rt]

@@ -5,7 +5,7 @@ Run with:  PYTHONPATH=/root/repo python examples/quickstart.py
 Walks the full engine lifecycle a reference user knows, Spark-first:
 track events through the typed collector, flush to a partitioned lake,
 query it with SQL, stream new arrivals with exactly-once offsets, and
-keep a materialized rollup fresh incrementally.
+keep a rollup fresh incrementally on the transaction log.
 """
 
 from __future__ import annotations
@@ -54,16 +54,27 @@ def main() -> None:
             """
         ).show()
 
-        # 3. Maintain: an incrementally-refreshed rollup — only new lake
-        #    objects are read on each refresh.
-        from es_analytics_spark.materialized import read_rollup, refresh_rollup
+        # 3. Maintain: an incrementally-maintained rollup. New lake
+        #    objects are committed once into a txlog table, and the
+        #    rollup folds in only the new commits' change feed.
+        from es_analytics_spark.incremental import (
+            maintain_rollup,
+            read_rollup,
+            refresh_enriched_view,
+        )
 
-        measures = {"n": ("count", None), "revenue": ("sum", "amount")}
         glob = f"{lake}/*/*/*/*/game_purchase/*/*.parquet"
-        report = refresh_rollup(spark, glob, f"{workdir}/rollup", ["uid"], measures)
+        purchases_tx, rollup = f"{workdir}/purchases_tx", f"{workdir}/rollup"
+        refresh = refresh_enriched_view(
+            spark, glob, purchases_tx,
+            lambda df: df.selectExpr("uid", "CAST(amount AS DECIMAL(38,10)) AS amount"),
+        )
+        print(f"refresh: {refresh}")
+        measures = {"n": ("count", None), "revenue": ("sum", "amount")}
+        report = maintain_rollup(spark, purchases_tx, rollup, ["uid"], measures)
         print(f"rollup: {report}")
         print("per-user rollup sample:")
-        read_rollup(spark, f"{workdir}/rollup", measures).orderBy("uid").show(5)
+        read_rollup(spark, rollup).select("uid", "n", "revenue").orderBy("uid").show(5)
 
         # 4. Inspect: is the plan the one you'd want at scale?
         from es_analytics_spark.plans.inspect import plan_audit

@@ -127,15 +127,48 @@ def test_cdcless_overwrite_refused(spark, tmp_path):
         maintain_rollup(spark, src, roll, ["cat"], MEASURES)
 
 
-def test_minmax_measures_rejected(spark, tmp_path):
-    with pytest.raises(ValueError, match="delta-maintainable"):
-        maintain_rollup(
-            spark,
-            os.path.join(str(tmp_path), "s"),
-            os.path.join(str(tmp_path), "r"),
-            ["cat"],
-            {"m": ("max", "amount")},
-        )
+def test_minmax_measures_insert_only_and_refused_on_deletes(spark, tmp_path):
+    """min/max merge into state by least/greatest: after insert-only
+    windows (a compaction in the window changes no content) the rollup
+    equals a recompute; a window holding a delete raises from commit
+    metadata alone, with no Spark job; bootstrap_rollup recomputes the
+    extremes from a snapshot."""
+    from es_analytics_spark.incremental import bootstrap_rollup
+
+    src = os.path.join(str(tmp_path), "src")
+    roll = os.path.join(str(tmp_path), "roll")
+    m = {**MEASURES, "lo": ("min", "amount"), "hi": ("max", "amount")}
+    append(spark, src, _rows(spark, 5, 10, "a"))
+    maintain_rollup(spark, src, roll, ["cat"], m)
+    append(spark, src, _rows(spark, 0, 3, "a"))  # a new minimum
+    append(spark, src, _rows(spark, 20, 22, "b"))
+    compact(spark, src)
+    assert maintain_rollup(spark, src, roll, ["cat"], m)["applied"] >= 2
+
+    def extremes(path):
+        return {r.cat: (r.lo, r.hi) for r in read_rollup(spark, path).collect()}
+
+    assert extremes(roll) == {"a": (0.0, 9.0), "b": (20.0, 21.0)}
+    _assert_converged(spark, src, roll)
+
+    delete_where(spark, src, "id = 0")
+    sc = spark.sparkContext
+    sc.setJobGroup("minmax-refusal", "min/max window check")
+    try:
+        with pytest.raises(ValueError, match="inserts only"):
+            maintain_rollup(spark, src, roll, ["cat"], m)
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("minmax-refusal")) == []
+    assert extremes(roll) == {"a": (0.0, 9.0), "b": (20.0, 21.0)}  # untouched
+
+    with pytest.raises(ValueError, match="supported kinds"):
+        maintain_rollup(spark, src, roll, ["cat"], {"m": ("avg", "amount")})
+
+    roll2 = os.path.join(str(tmp_path), "roll2")
+    bootstrap_rollup(spark, src, roll2, ["cat"], m)
+    assert extremes(roll2) == {"a": (1.0, 9.0), "b": (20.0, 21.0)}
+    _assert_converged(spark, src, roll2)
 
 
 def test_racing_maintainers_apply_window_exactly_once(spark, tmp_path):

@@ -6,7 +6,13 @@ import datetime as dt
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from es_analytics_spark import txlog
 from es_analytics_spark.collector import Collector, CollectorConfig
+from es_analytics_spark.incremental import (
+    maintain_rollup,
+    read_rollup,
+    refresh_enriched_view,
+)
 from es_analytics_spark.maintenance import compact, table_stats
 from es_analytics_spark.operators.joins import salted_join
 from es_analytics_spark.sources.lake import read_table
@@ -379,42 +385,53 @@ def test_zorder_by_bounds_every_dimension(spark, tmp_path):
 
 
 def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
-    """refresh(batch1) then refresh(batch2) must equal a one-shot
-    groupBy over batch1+batch2 exactly (decimal-mergeable partials),
-    and the second refresh must read only the new files."""
-    src = str(tmp_path / "facts")
+    """Raw files → refresh_enriched_view → maintain_rollup, twice, must
+    equal a one-shot groupBy over batch1+batch2 exactly (decimal sums,
+    least/greatest extremes); the second refresh reads only the new
+    files, and a caught-up pipeline does no work."""
+
+    raw = str(tmp_path / "facts")
+    src = str(tmp_path / "facts_tx")
     roll = str(tmp_path / "rollup")
     measures = {
         "n": ("count", None),
-        "revenue": ("sum", "amount"),
+        "revenue": ("sum", "amount_dec"),
         "lo": ("min", "amount"),
         "hi": ("max", "amount"),
     }
 
-    from es_analytics_spark.materialized import read_rollup, refresh_rollup
+    def enrich(df):
+        return df.withColumn("amount_dec", F.col("amount").cast("decimal(38,10)"))
+
+    def refresh_and_fold():
+        r = refresh_enriched_view(spark, f"{raw}/*.parquet", src, enrich)
+        return r, maintain_rollup(spark, src, roll, ["grp"], measures)
 
     b1 = spark.range(0, 20_000).selectExpr(
         "id % 7 as grp", "cast(id as double) * 0.37 as amount"
     )
-    b1.coalesce(2).write.mode("append").parquet(src)
-    r1 = refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
-    assert r1["new_files"] >= 1 and r1["groups"] == 7
+    b1.coalesce(2).write.mode("append").parquet(raw)
+    r1, m1 = refresh_and_fold()
+    assert r1["new_files"] >= 1 and m1["applied"] == 1
 
     b2 = spark.range(20_000, 50_000).selectExpr(
         "id % 7 as grp", "cast(id as double) * 0.37 as amount"
     )
-    b2.coalesce(3).write.mode("append").parquet(src)
-    r2 = refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
+    b2.coalesce(3).write.mode("append").parquet(raw)
+    r2, m2 = refresh_and_fold()
     assert r2["new_files"] >= 1
     assert r2["total_files"] == r1["total_files"] + r2["new_files"]
+    assert m2["applied"] == 1
 
     got = {
         r["grp"]: (r["n"], r["revenue"], r["lo"], r["hi"])
-        for r in read_rollup(spark, roll, measures).collect()
+        for r in read_rollup(spark, roll)
+        .withColumn("revenue", F.round("revenue", 4).cast("double"))
+        .collect()
     }
     want = {
         r["grp"]: (r["n"], r["revenue"], r["lo"], r["hi"])
-        for r in spark.read.parquet(src)
+        for r in spark.read.parquet(raw)
         .groupBy("grp")
         .agg(
             F.count("*").alias("n"),
@@ -426,11 +443,11 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
         )
         .collect()
     }
-    assert got == want
+    assert len(got) == 7 and got == want
 
     # idempotent: nothing new -> no work, same answer
-    r3 = refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
-    assert r3["new_files"] == 0 and r3["groups"] == 7
+    r3, m3 = refresh_and_fold()
+    assert r3["new_files"] == 0 and m3["applied"] == 0
 
 
 def test_zorder_guards_sign_bit_and_degenerate_stats(spark, tmp_path):
@@ -465,66 +482,21 @@ def test_zorder_guards_sign_bit_and_degenerate_stats(spark, tmp_path):
     assert spark.read.parquet(path).count() == 5000
 
 
-def test_rollup_refresh_survives_interrupted_swap(spark, tmp_path):
-    """Crash-safety contract: data and its manifest publish in one
-    version-directory rename, and a crash between the two renames
-    (backup moved away, new version not yet in) heals on the next
-    refresh/read — no double-count, no lost rollup."""
-    import shutil
-
-    from es_analytics_spark.materialized import read_rollup, refresh_rollup
-
-    src = str(tmp_path / "facts")
-    roll = str(tmp_path / "rollup")
-    measures = {"n": ("count", None), "total": ("sum", "amount")}
-    spark.range(0, 1000).selectExpr(
-        "id % 3 as grp", "cast(id as double) as amount"
-    ).coalesce(1).write.mode("append").parquet(src)
-    refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
-
-    # simulate the worst crash point: current renamed to backup, new
-    # version never arrived
-    shutil.move(f"{roll}/current", f"{roll}/current.__old__")
-    spark.range(1000, 2000).selectExpr(
-        "id % 3 as grp", "cast(id as double) as amount"
-    ).coalesce(1).write.mode("append").parquet(src)
-    r = refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
-    assert r["new_files"] == 1  # healed manifest: first file NOT re-read
-
-    got = {r["grp"]: (r["n"], r["total"]) for r in read_rollup(spark, roll, measures).collect()}
-    want = {
-        r["grp"]: (r["n"], r["total"])
-        for r in spark.read.parquet(src)
-        .groupBy("grp")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum(F.col("amount").cast("decimal(38,10)")), 4)
-            .cast("double")
-            .alias("total"),
-        )
-        .collect()
-    }
-    assert got == want
-
-    # a crash that left only staging behind must not poison the next run
-    (tmp_path / "rollup" / "current.__refresh__").mkdir()
-    r2 = refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
-    assert r2["new_files"] == 0
-
-
 def test_streaming_lake_feeds_incremental_rollup(spark, sf_dir, tmp_path):
     """The end-to-end incremental path: new files land in the source
     dir, ONE checkpointed availableNow stream drains them into the
-    lake, the rollup folds in only the newly flushed lake files — the
-    refresh cost tracks the increment, and the rollup always equals a
-    full groupBy over everything the lake holds."""
-    from es_analytics_spark.materialized import read_rollup, refresh_rollup
+    lake, the refresh commits only the newly flushed lake files and the
+    rollup folds only that commit — the cost tracks the increment, and
+    the rollup always equals a full groupBy over everything the lake
+    holds."""
 
     src = tmp_path / "incoming"
     src.mkdir()
     lake = str(tmp_path / "lake")
     glob = f"{lake}/events/*/*/*.parquet"
-    measures = {"n": ("count", None), "total": ("sum", "value")}
+    events_tx = str(tmp_path / "events_tx")
+    roll = str(tmp_path / "roll")
+    measures = {"n": ("count", None), "total": ("sum", "value_dec")}
     events = read_table(spark, sf_dir, "events")
     schema = events.schema
 
@@ -543,20 +515,32 @@ def test_streaming_lake_feeds_incremental_rollup(spark, sf_dir, tmp_path):
         )
         q.awaitTermination()
 
+    def refresh():
+        r = refresh_enriched_view(
+            spark, glob, events_tx,
+            lambda df: df.select(
+                "event_type", F.col("value").cast("decimal(38,10)").alias("value_dec")
+            ),
+        )
+        maintain_rollup(spark, events_tx, roll, ["event_type"], measures)
+        return r
+
     events.filter(F.col("event_id") % 2 == 0).write.parquet(str(src / "f1"))
     drain()
-    r1 = refresh_rollup(spark, glob, str(tmp_path / "roll"), ["event_type"], measures)
+    r1 = refresh()
     assert r1["new_files"] >= 1
 
     events.filter(F.col("event_id") % 2 == 1).write.parquet(str(src / "f2"))
     drain()
-    r2 = refresh_rollup(spark, glob, str(tmp_path / "roll"), ["event_type"], measures)
+    r2 = refresh()
     assert r2["new_files"] >= 1
     assert r2["total_files"] == r1["total_files"] + r2["new_files"]
 
     got = {
         r["event_type"]: (r["n"], r["total"])
-        for r in read_rollup(spark, str(tmp_path / "roll"), measures).collect()
+        for r in read_rollup(spark, roll)
+        .withColumn("total", F.round("total", 4).cast("double"))
+        .collect()
     }
     want = {
         r["event_type"]: (r["n"], r["total"])
@@ -612,17 +596,12 @@ def test_vacuum_removes_stale_staging_only(spark, tmp_path):
 
 def test_enriched_view_incremental_and_crash_invisible(spark, sf_dir, tmp_path):
     """Incrementally-maintained join view: refresh(a) then refresh(b)
-    must equal the one-shot enrich over a+b; a part directory written
-    WITHOUT a manifest publish (crash between part write and manifest
-    rename) must be invisible to readers and reaped by the view
-    vacuum; a no-op refresh reads nothing new."""
+    must equal the one-shot enrich over a+b; a part directory no commit
+    references (a writer that crashed between part write and commit)
+    must be invisible to readers and reaped by vacuum; a no-op refresh
+    reads nothing new."""
     import os
 
-    from es_analytics_spark.materialized import (
-        read_enriched_view,
-        refresh_enriched_view,
-        vacuum_enriched_view,
-    )
     from es_analytics_spark.sources.lake import read_table
 
     src = str(tmp_path / "fact")
@@ -640,24 +619,24 @@ def test_enriched_view_incremental_and_crash_invisible(spark, sf_dir, tmp_path):
 
     glob_pat = f"{src}/*/*.parquet"
     r1 = refresh_enriched_view(spark, glob_pat, view, enrich)
-    assert r1["new_files"] == 1 and r1["parts"] == 1
+    assert r1["new_files"] == 1 and r1["version"] == 1
 
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(f"{src}/b")
     r2 = refresh_enriched_view(spark, glob_pat, view, enrich)
-    assert r2["new_files"] == 1 and r2["parts"] == 2
+    assert r2["new_files"] == 1 and r2["version"] == 2
 
-    got = read_enriched_view(spark, view)
+    got = txlog.read_table(spark, view)
     want = enrich(spark.read.parquet(glob_pat))
     assert got.count() == ev.count()
     assert got.exceptAll(want).union(want.exceptAll(got)).count() == 0
 
-    # crash debris: a part dir that never made it into the manifest
+    # crash debris: a part dir that never made it into a commit
     orphan = os.path.join(view, "parts", "deadbeef-orphan")
     spark.range(5).withColumn("junk", F.lit("x")).write.parquet(orphan)
-    assert read_enriched_view(spark, view).count() == ev.count(), (
-        "unpublished part leaked into the read"
+    assert txlog.read_table(spark, view).count() == ev.count(), (
+        "uncommitted part leaked into the read"
     )
-    reaped = vacuum_enriched_view(spark, view)
+    reaped = txlog.vacuum(spark, view, retention_seconds=0)
     assert reaped == [orphan] and not os.path.exists(orphan)
 
     r3 = refresh_enriched_view(spark, glob_pat, view, enrich)
@@ -666,17 +645,11 @@ def test_enriched_view_incremental_and_crash_invisible(spark, sf_dir, tmp_path):
 
 def test_enriched_view_time_travel(spark, sf_dir, tmp_path):
     """Snapshot reads: version=N returns the view exactly as refresh N
-    published it; history lists published versions only; vacuum after
-    later refreshes never reaps under an old snapshot (parts are
-    append-only, so the current manifest supersets every snapshot)."""
+    committed it; history lists committed versions only; vacuum after
+    later refreshes never reaps under an old snapshot (refreshes only
+    add parts, so every snapshot's parts stay live)."""
     import pytest as _pytest
 
-    from es_analytics_spark.materialized import (
-        read_enriched_view,
-        refresh_enriched_view,
-        vacuum_enriched_view,
-        view_history,
-    )
     from es_analytics_spark.sources.lake import read_table
 
     src = str(tmp_path / "fact")
@@ -690,40 +663,36 @@ def test_enriched_view_time_travel(spark, sf_dir, tmp_path):
     glob_pat = f"{src}/*/*.parquet"
     r1 = refresh_enriched_view(spark, glob_pat, view, enrich)
     assert r1["version"] == 1
-    v1_count = read_enriched_view(spark, view).count()
+    v1_count = txlog.read_table(spark, view).count()
 
     ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(f"{src}/b")
     r2 = refresh_enriched_view(spark, glob_pat, view, enrich)
     assert r2["version"] == 2
 
     # snapshot read returns the old state; current read the new one
-    assert read_enriched_view(spark, view, version=1).count() == v1_count
-    assert read_enriched_view(spark, view).count() == ev.count()
-    assert read_enriched_view(spark, view, version=2).count() == ev.count()
+    assert txlog.read_table(spark, view, version=1).count() == v1_count
+    assert txlog.read_table(spark, view).count() == ev.count()
+    assert txlog.read_table(spark, view, version=2).count() == ev.count()
 
-    hist = view_history(spark, view)
+    hist = txlog.history(spark, view)
     assert [h["version"] for h in hist] == [1, 2]
-    assert hist[0]["parts"] == 1 and hist[1]["parts"] == 2
+    assert [h["n_adds"] for h in hist] == [1, 1]
 
-    # vacuum keeps everything the current manifest references — and
-    # that supersets v1, so the snapshot survives
-    assert vacuum_enriched_view(spark, view) == []
-    assert read_enriched_view(spark, view, version=1).count() == v1_count
+    # nothing is unreferenced or removed, so vacuum keeps every part,
+    # even under a version retention window
+    assert txlog.vacuum(spark, view, keep_versions=1, retention_seconds=0) == []
+    assert txlog.read_table(spark, view, version=1).count() == v1_count
 
-    with _pytest.raises(FileNotFoundError, match="no snapshot v9"):
-        read_enriched_view(spark, view, version=9)
+    with _pytest.raises(FileNotFoundError, match="no commit v9"):
+        txlog.read_table(spark, view, version=9)
 
 
 def test_streaming_lake_feeds_enriched_view(spark, sf_dir, tmp_path):
-    """Streaming twin for the manifest-gated view: a checkpointed
+    """Streaming twin for the enriched view: a checkpointed
     availableNow stream drains new files into the lake, the view
     refresh enriches exactly the newly flushed lake files, and the
-    manifest-published view always equals the one-shot enrich over
-    everything the lake holds."""
-    from es_analytics_spark.materialized import (
-        read_enriched_view,
-        refresh_enriched_view,
-    )
+    committed view always equals the one-shot enrich over everything
+    the lake holds."""
 
     src = tmp_path / "incoming"
     src.mkdir()
@@ -766,7 +735,7 @@ def test_streaming_lake_feeds_enriched_view(spark, sf_dir, tmp_path):
     r2 = refresh_enriched_view(spark, glob, view, enrich)
     assert r2["new_files"] >= 1 and r2["total_files"] == r1["total_files"] + r2["new_files"]
 
-    got = read_enriched_view(spark, view)
+    got = txlog.read_table(spark, view)
     want = enrich(spark.read.parquet(glob))
     assert got.count() == events.count()
     assert got.exceptAll(want).union(want.exceptAll(got)).count() == 0
@@ -774,11 +743,13 @@ def test_streaming_lake_feeds_enriched_view(spark, sf_dir, tmp_path):
 
 class _CrashFS:
     """lake_fs wrapper that raises after the k-th MUTATING filesystem
-    operation (put_bytes/rename/delete/mkdirs) — the fault-injection
-    seam for the refresh crash-consistency sweeps below. Reads pass
-    through untouched."""
+    operation (put_bytes/put_if_absent/rename/delete/mkdirs; a txlog
+    commit is one put_if_absent) — the fault-injection seam for the
+    crash-consistency sweeps below. Reads pass through untouched."""
 
-    MUTATORS = ("put_bytes", "rename", "replace_file", "delete", "mkdirs")
+    MUTATORS = (
+        "put_bytes", "put_if_absent", "rename", "replace_file", "delete", "mkdirs",
+    )
 
     def __init__(self, inner, crash_after: int):
         self._inner = inner
@@ -798,164 +769,162 @@ class _CrashFS:
         return wrapped
 
 
-def _rollup_state(spark, roll, measures):
-    from es_analytics_spark.materialized import read_rollup
+def _crash_txlog_under(monkeypatch, spark, root: str, k: int) -> None:
+    """Route every txlog filesystem call under ``root`` through a
+    _CrashFS that dies after ``k`` mutations."""
+    from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
 
+    crasher = _CrashFS(real_lake_fs(spark, root), k)
+    monkeypatch.setattr(txlog, "lake_fs", lambda s, p: (
+        crasher if str(p).startswith(root) else real_lake_fs(s, p)
+    ))
+
+
+def _rollup_state(spark, roll):
     return {
         r["grp"]: (r["n"], r["total"])
-        for r in read_rollup(spark, roll, measures).collect()
+        for r in read_rollup(spark, roll)
+        .withColumn("total", F.round("total", 4).cast("double"))
+        .collect()
     }
 
 
 def test_rollup_refresh_crash_consistency_sweep(spark, tmp_path, monkeypatch):
-    """Kill the refresh after every possible mutating filesystem step
-    (stage-delete, staged-manifest write, backup dance, final rename)
-    and assert the single-writer crash contract at EACH point: a reader
-    arriving after the crash sees exactly the old state or exactly the
-    new state — never a torn manifest, a double-count, or a lost
-    rollup — and one clean re-refresh converges to the full answer.
+    """Kill the raw-files → refresh_enriched_view → maintain_rollup
+    pipeline after every mutating filesystem step (the refresh commit,
+    the maintenance commit) and assert at EACH point: a reader arriving
+    after the crash sees exactly the old rollup or exactly the new one,
+    never a torn or double-counted state, and one clean re-run
+    converges to the full answer with the window applied once.
     Reading after every mutation step is equivalent to a concurrent
     reader under any interleaving, because each fs mutation is atomic
-    and there is one writer."""
-    import shutil
-
-    import es_analytics_spark.materialized as mat
+    and txlog readers see only committed versions."""
     from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
 
-    measures = {"n": ("count", None), "total": ("sum", "amount")}
-    src = str(tmp_path / "facts")
-    template = str(tmp_path / "rollup_template")
+    measures = {"n": ("count", None), "total": ("sum", "amount_dec")}
+    raw = str(tmp_path / "facts")
+
+    def enrich(df):
+        return df.withColumn("amount_dec", F.col("amount").cast("decimal(38,10)"))
+
+    def run(src, roll, glob_pat):
+        refresh_enriched_view(spark, glob_pat, src, enrich)
+        return maintain_rollup(spark, src, roll, ["grp"], measures)
+
     spark.range(0, 600).selectExpr(
         "id % 3 as grp", "cast(id as double) as amount"
-    ).coalesce(1).write.mode("append").parquet(src)
-    mat.refresh_rollup(spark, f"{src}/*.parquet", template, ["grp"], measures)
-    state_a = _rollup_state(spark, template, measures)
+    ).coalesce(1).write.parquet(f"{raw}/a")
     spark.range(600, 1200).selectExpr(
         "id % 3 as grp", "cast(id as double) as amount"
-    ).coalesce(1).write.mode("append").parquet(src)
+    ).coalesce(1).write.parquet(f"{raw}/b")
+    want = {
+        r["grp"]: (r["n"], r["total"])
+        for r in spark.read.parquet(f"{raw}/*/*.parquet")
+        .groupBy("grp")
+        .agg(
+            F.count("*").alias("n"),
+            F.round(F.sum(F.col("amount").cast("decimal(38,10)")), 4)
+            .cast("double")
+            .alias("total"),
+        )
+        .collect()
+    }
 
-    k = 1
+    k = 0
+    state_a = None
     while True:
-        roll = str(tmp_path / f"rollup_k{k}")
-        shutil.copytree(template, roll)
-        crasher = _CrashFS.__new__(_CrashFS)
-
-        def fake_lake_fs(spark_, path_, _c=crasher):
-            return _c
-
-        crasher.__init__(real_lake_fs(spark, roll), k)
-        monkeypatch.setattr(mat, "lake_fs", lambda s, p, _c=crasher: (
-            _c if str(p).startswith(roll) else real_lake_fs(s, p)
-        ))
+        root = str(tmp_path / f"k{k}")
+        src, roll = f"{root}/src", f"{root}/roll"
+        run(src, roll, f"{raw}/a/*.parquet")  # v1 of both: batch a only
+        state_a = _rollup_state(spark, roll)
+        _crash_txlog_under(monkeypatch, spark, root, k)
         crashed = False
         try:
-            mat.refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
+            run(src, roll, f"{raw}/*/*.parquet")
         except RuntimeError as e:
             assert "injected crash" in str(e)
             crashed = True
-        monkeypatch.setattr(mat, "lake_fs", real_lake_fs)
+        monkeypatch.setattr(txlog, "lake_fs", real_lake_fs)
 
         # invariant 1: a post-crash reader sees old-or-new, never torn
-        observed = _rollup_state(spark, roll, measures)
-        final = mat.refresh_rollup(spark, f"{src}/*.parquet", roll, ["grp"], measures)
-        state_ab = _rollup_state(spark, roll, measures)
-        assert observed in (state_a, state_ab), f"torn state at k={k}: {observed}"
-        # invariant 2: clean re-refresh converges with no double-count
-        want = {
-            r["grp"]: (r["n"], r["total"])
-            for r in spark.read.parquet(src)
-            .groupBy("grp")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.sum(F.col("amount").cast("decimal(38,10)")), 4)
-                .cast("double")
-                .alias("total"),
-            )
-            .collect()
-        }
-        assert state_ab == want, f"k={k} diverged after heal"
-        assert final["new_files"] in (0, 1)
+        observed = _rollup_state(spark, roll)
+        assert observed in (state_a, want), f"torn state at k={k}: {observed}"
+        # invariant 2: a clean re-run converges with no double count
+        final = run(src, roll, f"{raw}/*/*.parquet")
+        assert _rollup_state(spark, roll) == want, f"k={k} diverged after re-run"
+        assert final["applied"] in (0, 1)
+        assert run(src, roll, f"{raw}/*/*.parquet")["applied"] == 0
         if not crashed:
-            break  # k exceeded the refresh's total mutation count
+            break  # k exceeded the pipeline's total mutation count
         k += 1
-    assert k >= 4, "sweep never reached the interesting crash points"
+    assert state_a != want
+    assert k >= 2, "sweep never reached the maintenance commit"
 
 
 def test_enriched_view_refresh_crash_consistency_sweep(spark, tmp_path, monkeypatch):
-    """Same kill-sweep for the manifest-gated enriched view: after a
-    crash at any mutating step, readers see exactly the published
-    version (old or new, never partial), every version view_history
-    lists is readable, an unpublished snapshot is NOT directly readable
-    (the version-validation fix), and a clean re-refresh converges."""
-    import shutil
+    """Same kill-sweep for refresh_enriched_view: after a crash at any
+    mutating step, readers see exactly a committed version (old or new,
+    never partial), every version history lists is readable, a version
+    past the latest is refused, and a clean re-refresh converges with
+    each source file incorporated once."""
+    import pytest as _pytest
 
-    import es_analytics_spark.materialized as mat
     from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
 
     src = str(tmp_path / "fact")
-    template = str(tmp_path / "view_template")
     spark.range(0, 400).selectExpr(
         "id as event_id", "id % 7 as user_id", "cast(id as double) as value"
     ).coalesce(1).write.parquet(f"{src}/a")
+    spark.range(400, 700).selectExpr(
+        "id as event_id", "id % 7 as user_id", "cast(id as double) as value"
+    ).coalesce(1).write.parquet(f"{src}/b")
 
     def enrich(df):
         return df.select("event_id", "user_id", "value")
 
     glob_pat = f"{src}/*/*.parquet"
-    mat.refresh_enriched_view(spark, glob_pat, template, enrich)
-    spark.range(400, 700).selectExpr(
-        "id as event_id", "id % 7 as user_id", "cast(id as double) as value"
-    ).coalesce(1).write.parquet(f"{src}/b")
-
-    k = 1
+    k = 0
     while True:
-        view = str(tmp_path / f"view_k{k}")
-        shutil.copytree(template, view)
-        crasher = _CrashFS(real_lake_fs(spark, view), k)
-        monkeypatch.setattr(mat, "lake_fs", lambda s, p, _c=crasher: (
-            _c if str(p).startswith(view) else real_lake_fs(s, p)
-        ))
+        root = str(tmp_path / f"view_k{k}")
+        view = f"{root}/view"
+        refresh_enriched_view(spark, f"{src}/a/*.parquet", view, enrich)
+        _crash_txlog_under(monkeypatch, spark, root, k)
         crashed = False
         try:
-            mat.refresh_enriched_view(spark, glob_pat, view, enrich)
+            refresh_enriched_view(spark, glob_pat, view, enrich)
         except RuntimeError as e:
             assert "injected crash" in str(e)
             crashed = True
-        monkeypatch.setattr(mat, "lake_fs", real_lake_fs)
+        monkeypatch.setattr(txlog, "lake_fs", real_lake_fs)
 
-        observed = mat.read_enriched_view(spark, view).count()
+        observed = txlog.read_table(spark, view).count()
         assert observed in (400, 700), f"partial read at k={k}: {observed}"
-        # every listed version is readable; nothing beyond current is
-        hist = mat.view_history(spark, view)
+        hist = txlog.history(spark, view)
         for h in hist:
-            mat.read_enriched_view(spark, view, version=h["version"])
-        import pytest as _pytest
-
+            txlog.read_table(spark, view, version=h["version"]).count()
         with _pytest.raises(FileNotFoundError):
-            mat.read_enriched_view(spark, view, version=hist[-1]["version"] + 1)
+            txlog.read_table(spark, view, version=hist[-1]["version"] + 1)
 
-        r_heal = mat.refresh_enriched_view(spark, glob_pat, view, enrich)
-        assert "version" in r_heal  # no-op and refresh returns share a contract
-        assert mat.read_enriched_view(spark, view).count() == 700, f"k={k} diverged"
-        mat.vacuum_enriched_view(spark, view)
-        assert mat.read_enriched_view(spark, view).count() == 700
+        r_heal = refresh_enriched_view(spark, glob_pat, view, enrich)
+        assert r_heal["new_files"] == (1 if crashed else 0)
+        assert txlog.read_table(spark, view).count() == 700, f"k={k} diverged"
+        assert txlog.table_sources(spark, view) == set(
+            real_lake_fs(spark, glob_pat).glob(glob_pat)
+        )
+        txlog.vacuum(spark, view, retention_seconds=0)  # reaps the orphan part
+        assert txlog.read_table(spark, view).count() == 700
         if not crashed:
             break
         k += 1
-    assert k >= 3, "sweep never reached the interesting crash points"
+    assert k >= 1, "sweep never reached the commit"
 
 
 def test_view_change_feed_between_versions(spark, tmp_path):
-    """read_view_changes returns exactly the rows each refresh added
-    (append-only parts make the version delta the insert feed), the
-    full history from version 0, an empty frame for a no-op range, and
-    rejects unpublished versions."""
+    """table_changes on a refreshed view returns exactly the rows each
+    refresh added, the full history from version 0, an empty frame for
+    a no-op range, and rejects uncommitted versions."""
     import pytest as _pytest
 
-    from es_analytics_spark.materialized import (
-        read_view_changes,
-        refresh_enriched_view,
-    )
 
     src = str(tmp_path / "fact")
     view = str(tmp_path / "view")
@@ -964,14 +933,14 @@ def test_view_change_feed_between_versions(spark, tmp_path):
     spark.range(100, 150).selectExpr("id as event_id").coalesce(1).write.parquet(f"{src}/b")
     refresh_enriched_view(spark, f"{src}/*/*.parquet", view, lambda df: df)
 
-    delta = read_view_changes(spark, view, 1, 2)
+    delta = txlog.table_changes(spark, view, 1, 2)
     ids = sorted(r.event_id for r in delta.collect())
     assert ids == list(range(100, 150))
-    assert read_view_changes(spark, view, 0, 2).count() == 150
-    assert read_view_changes(spark, view, 0, 1).count() == 100
-    assert read_view_changes(spark, view, 2, 2).count() == 0
+    assert txlog.table_changes(spark, view, 0, 2).count() == 150
+    assert txlog.table_changes(spark, view, 0, 1).count() == 100
+    assert txlog.table_changes(spark, view, 2, 2).count() == 0
     with _pytest.raises(FileNotFoundError):
-        read_view_changes(spark, view, 1, 9)
+        txlog.table_changes(spark, view, 1, 9)
 
 
 def test_erase_keys_prunes_files_and_verifies(spark, sf_dir, tmp_path):
@@ -1172,15 +1141,12 @@ def test_table_diff_signs_off_maintenance_ops(spark, sf_dir, tmp_path):
 
 
 def test_enriched_view_zone_map_pruning(spark, tmp_path):
-    """Manifest zone maps: each refresh records per-part [min,max]
-    stats; a prune=(col, lo, hi) read skips disjoint parts WITHOUT
-    opening them (asserted via inputFiles), matches the full-scan
-    filter exactly, conservatively reads stat-less parts, and returns
-    a schema-stable empty frame when every part is skipped."""
-    from es_analytics_spark.materialized import (
-        read_enriched_view,
-        refresh_enriched_view,
-    )
+    """Commit-log zone maps on a refreshed view: each refresh records
+    per-part [min,max] stats; a range_filter read skips disjoint parts
+    WITHOUT opening them (asserted via inputFiles), matches the
+    full-scan filter exactly, conservatively reads stat-less parts,
+    and returns a schema-stable empty frame when every part is
+    skipped."""
 
     src = str(tmp_path / "facts")
     view = str(tmp_path / "view")
@@ -1197,28 +1163,28 @@ def test_enriched_view_zone_map_pruning(spark, tmp_path):
             stats_cols=["id"],
         )
 
-    full = read_enriched_view(spark, view)
+    full = txlog.read_table(spark, view)
     assert full.count() == 300
     all_files = set(full.inputFiles())
 
-    pruned = read_enriched_view(spark, view, prune=("id", 1000, 1099))
+    pruned = txlog.read_table(spark, view, range_filter={"id": (1000, 1099)})
     assert set(pruned.inputFiles()) < all_files, "pruned read must skip parts"
     got = sorted(r.id for r in pruned.collect())
     assert got == list(range(1000, 1100))
 
     # range straddling two bands reads exactly those two parts' files
-    two = read_enriched_view(spark, view, prune=("id", 50, 1050))
+    two = txlog.read_table(spark, view, range_filter={"id": (50, 1050)})
     assert two.count() == 50 + 51
     assert len(set(two.inputFiles())) < len(all_files)
 
     # empty intersection: zero rows, no failure, schema preserved
-    none = read_enriched_view(spark, view, prune=("id", 5000, 6000))
+    none = txlog.read_table(spark, view, range_filter={"id": (5000, 6000)})
     assert none.count() == 0 and set(none.columns) == set(full.columns)
 
-    # multi-predicate prune (AND of ranges): doubled is monotone in id,
+    # multi-column filter (AND of ranges): amount is monotone in id,
     # so a second range tightens the part set the same way
-    multi = read_enriched_view(
-        spark, view, prune=[("id", 0, 1050), ("amount", 1000.0 * 2, 1e9)]
+    multi = txlog.read_table(
+        spark, view, range_filter={"id": (0, 1050), "amount": (1000.0 * 2, 1e9)}
     )
     assert sorted(r.id for r in multi.collect()) == list(range(1000, 1051))
 
@@ -1231,8 +1197,9 @@ def test_enriched_view_zone_map_pruning(spark, tmp_path):
         spark, f"{src}/*.parquet", view,
         lambda df: df.withColumn("doubled", df.amount * 2),
     )
-    after = read_enriched_view(spark, view, prune=("id", 1000, 1099))
+    after = txlog.read_table(spark, view, range_filter={"id": (1000, 1099)})
     assert sorted(r.id for r in after.collect()) == list(range(1000, 1100))
+    assert len(set(after.inputFiles())) == len(set(pruned.inputFiles())) + 1
 
 
 def test_scd2_merge_maintains_dimension_history(spark, tmp_path):
@@ -1312,20 +1279,33 @@ def test_scd2_merge_maintains_dimension_history(spark, tmp_path):
     }
 
 
-def test_erase_from_view_is_retroactive_across_snapshots(spark, tmp_path):
-    """GDPR erasure on a manifest-gated view: current reads AND
-    time-travel reads of earlier versions stop returning the subject
-    (retroactive by design — erasure pierces snapshot immutability),
-    the erasure publishes a new manifest version whose change feed is
-    empty (the auditable erasure signature), zone-map pruned reads
-    stay correct on the stale-superset stats, and a re-run is a
-    no-op."""
-    from es_analytics_spark.materialized import (
-        erase_from_view,
-        read_enriched_view,
-        read_view_changes,
-        refresh_enriched_view,
+def _erase_subject(spark, view, key_col, values):
+    """The erasure sequence on a txlog view: a rewrite delete (no
+    deletion vector, so no live part keeps the subject's bytes), one
+    further commit recording the erasure, then vacuum(keep_versions=1),
+    which expires every version that still held the subject. A vacuum
+    straight after the delete would reap nothing: the delete's removes
+    are themselves a reference inside the window."""
+
+    res = txlog.delete_where(spark, view, F.col(key_col).isin(values))
+    txlog.set_table_properties(
+        spark, view, {"erasure.last": f"{key_col} IN {tuple(values)}"}
     )
+    return res, txlog.vacuum(spark, view, keep_versions=1, retention_seconds=0)
+
+
+def test_erase_from_view_is_retroactive_across_snapshots(spark, tmp_path):
+    """GDPR erasure on a refreshed txlog view: the current read holds no
+    subject rows, the erase commit's row-level change feed holds
+    exactly the erased rows, zone-map pruned reads stay correct, a
+    re-run deletes nothing, and after the vacuum every pre-erasure
+    version raises VersionExpiredError while no parquet file left
+    under parts/ (change parts included) holds the subject."""
+    import glob as _glob
+
+    import pyarrow.parquet as pq
+    import pytest as _pytest
+
 
     src = str(tmp_path / "facts")
     view = str(tmp_path / "view")
@@ -1338,34 +1318,40 @@ def test_erase_from_view_is_retroactive_across_snapshots(spark, tmp_path):
             lambda df: df.withColumn("doubled", df.amount * 2),
             stats_cols=["id"],
         )
+    before_v = txlog.current_version(spark, view)
+    assert before_v == 2
+    subject_ids = sorted(
+        r.id for r in txlog.read_table(spark, view).filter("subject = 3").collect()
+    )
+    assert len(subject_ids) == 28  # 14 ids ≡ 3 (mod 7) per band
 
-    before_v = 2
-    receipt = erase_from_view(spark, view, "subject", [3])
-    assert receipt["verified"] is True
-    assert receipt["parts_rewritten"] == 2
-    assert receipt["rows_erased"] == 28  # 14 ids ≡ 3 (mod 7) per band
+    res = txlog.delete_where(spark, view, F.col("subject").isin([3]))
+    assert res["rows_deleted"] == 28 and res["parts_rewritten"] == 2
+    erase_v = res["version"]
+    assert txlog.read_table(spark, view).filter(F.col("subject") == 3).count() == 0
+    feed = txlog.table_changes_cdf(spark, view, erase_v - 1, erase_v).collect()
+    assert {r._change_type for r in feed} == {"delete"}
+    assert sorted(r.id for r in feed) == subject_ids
+    # the delete's removes still back time travel: nothing to reap yet
+    assert txlog.vacuum(spark, view, keep_versions=1, retention_seconds=0) == []
+    txlog.set_table_properties(spark, view, {"erasure.last": "subject IN (3)"})
+    assert txlog.vacuum(spark, view, keep_versions=1, retention_seconds=0)
 
-    # current AND snapshot reads are clean — retroactive erasure
-    assert read_enriched_view(spark, view).filter(F.col("subject") == 3).count() == 0
-    for v in range(1, before_v + 1):
-        assert (
-            read_enriched_view(spark, view, version=v)
-            .filter(F.col("subject") == 3)
-            .count()
-            == 0
-        ), f"snapshot v{v} resurrected an erased subject"
-
-    # the erasure version's change feed is empty (removal-only event)
-    assert read_view_changes(spark, view, before_v, before_v + 1).count() == 0
-
-    # zone-map pruned read still correct on stale-superset stats
-    pruned = read_enriched_view(spark, view, prune=("id", 1000, 1099))
+    # zone-map pruned read still correct on the rewrite's envelope stats
+    pruned = txlog.read_table(spark, view, range_filter={"id": (1000, 1099)})
     assert pruned.count() == 100 - 14  # band minus its erased subjects
     assert pruned.filter(F.col("subject") == 3).count() == 0
 
+    for v in range(1, before_v + 1):
+        with _pytest.raises(txlog.VersionExpiredError):
+            txlog.read_table(spark, view, version=v)
+    for f in _glob.glob(f"{view}/parts/*/*.parquet"):
+        col = pq.read_table(f, columns=["subject"]).column("subject").to_pylist()
+        assert 3 not in col, f"{f} still holds the erased subject"
+
     # idempotent re-run
-    again = erase_from_view(spark, view, "subject", [3])
-    assert again == {"rows_erased": 0, "parts_rewritten": 0, "verified": True}
+    again, _ = _erase_subject(spark, view, "subject", [3])
+    assert again["rows_deleted"] == 0
 
 
 def test_scd2_merge_crash_consistency_sweep(spark, tmp_path, monkeypatch):
@@ -1553,14 +1539,9 @@ def test_erase_keys_preserves_null_key_rows(spark, tmp_path):
 
 
 def test_erase_from_view_preserves_null_key_rows(spark, tmp_path):
-    """ADVICE r4 (medium): erase_from_view had the identical NULL-key
-    drop; both erasure paths now share maintenance.erasure_predicates'
-    null-safe keep predicate."""
-    from es_analytics_spark.materialized import (
-        erase_from_view,
-        read_enriched_view,
-        refresh_enriched_view,
-    )
+    """ADVICE r4 (medium): erasure must not drop NULL-key rows; the txlog
+    delete's predicate ``subject IN (3)`` is NULL, not true, on them, so
+    they survive."""
 
     src = str(tmp_path / "facts")
     view = str(tmp_path / "view")
@@ -1574,17 +1555,16 @@ def test_erase_from_view_preserves_null_key_rows(spark, tmp_path):
         lambda df: df.withColumn("doubled", df.amount * 2),
         stats_cols=["id"],
     )
-    n_null = read_enriched_view(spark, view).filter("subject IS NULL").count()
+    n_null = txlog.read_table(spark, view).filter("subject IS NULL").count()
     assert n_null == 60
 
-    receipt = erase_from_view(spark, view, "subject", [3])
-    assert receipt["verified"] is True
-    assert receipt["parts_rewritten"] == 1
+    res, _ = _erase_subject(spark, view, "subject", [3])
+    assert res["parts_rewritten"] == 1 and res["rows_deleted"] > 0
 
-    after = read_enriched_view(spark, view)
+    after = txlog.read_table(spark, view)
     assert after.filter("subject IS NULL").count() == n_null
     assert after.filter(F.col("subject") == 3).count() == 0
-    assert after.count() == 300 - receipt["rows_erased"]
+    assert after.count() == 300 - res["rows_deleted"]
 
 
 def test_delete_where_ttl_and_null_semantics(spark, tmp_path):
@@ -1693,20 +1673,15 @@ def test_delete_where_crash_consistency_sweep(spark, tmp_path, monkeypatch):
 
 
 def test_expire_snapshots_retention(spark, sf_dir, tmp_path):
-    """Retention on time travel: expire_snapshots deletes exactly the
-    manifests older than keep_last, history skips them, reading an
-    expired version raises the standard no-snapshot error, the current
-    read and every retained snapshot stay intact, and a re-run (or a
-    crash-interrupted partial run) is idempotent."""
+    """Retention on a refreshed view's time travel: clean_log past a
+    folded checkpoint removes exactly the commits the checkpoint
+    covers, history skips them, reading a version before the cut
+    raises VersionExpiredError, the current read and every retained
+    version stay intact, exactly-once refresh survives (the folded
+    seen-source set), and a re-run — or a re-run after a crash that
+    removed only some commits — is idempotent."""
     import pytest as _pytest
 
-    from es_analytics_spark.materialized import (
-        _view_manifest_path,
-        expire_snapshots,
-        read_enriched_view,
-        refresh_enriched_view,
-        view_history,
-    )
     from es_analytics_spark.sources.fsio import lake_fs
     from es_analytics_spark.sources.lake import read_table
 
@@ -1719,38 +1694,33 @@ def test_expire_snapshots_retention(spark, sf_dir, tmp_path):
 
     glob_pat = f"{src}/*/*.parquet"
     counts = {}
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.parquet(
+    for i in range(5):
+        ev.filter(F.col("event_id") % 5 == i).coalesce(1).write.parquet(
             f"{src}/p{i}"
         )
         r = refresh_enriched_view(spark, glob_pat, view, enrich)
-        counts[r["version"]] = read_enriched_view(spark, view).count()
-    assert [h["version"] for h in view_history(spark, view)] == [1, 2, 3, 4]
+        counts[r["version"]] = txlog.read_table(spark, view).count()
+        if r["version"] == 3:
+            txlog.checkpoint(spark, view)
+    assert [h["version"] for h in txlog.history(spark, view)] == [1, 2, 3, 4, 5]
 
-    with _pytest.raises(ValueError, match="keep_last"):
-        expire_snapshots(spark, view, keep_last=0)
-
-    assert expire_snapshots(spark, view, keep_last=2) == [1, 2]
-    assert [h["version"] for h in view_history(spark, view)] == [3, 4]
-    # retained snapshots and the current pointer are untouched
-    assert read_enriched_view(spark, view, version=3).count() == counts[3]
-    assert read_enriched_view(spark, view).count() == counts[4]
+    # a crash mid-reap (v1 gone, v2 not yet) completes on the re-run
+    lake_fs(spark, view).delete(txlog._commit_path(view, 1))
+    out = txlog.clean_log(spark, view, keep_versions=2)
+    assert out["cut"] == 3 and out["removed_commits"] == 2
+    assert [h["version"] for h in txlog.history(spark, view)] == [4, 5]
+    # retained versions, the checkpointed one and the current read are intact
+    for v in (3, 4, 5):
+        assert txlog.read_table(spark, view, version=v).count() == counts[v]
     for gone in (1, 2):
-        with _pytest.raises(FileNotFoundError, match=f"no snapshot v{gone}"):
-            read_enriched_view(spark, view, version=gone)
-    # idempotent re-run: nothing left to expire
-    assert expire_snapshots(spark, view, keep_last=2) == []
+        with _pytest.raises(txlog.VersionExpiredError):
+            txlog.read_table(spark, view, version=gone)
+    # idempotent re-run: nothing left to reap
+    assert txlog.clean_log(spark, view, keep_versions=2)["removed_commits"] == 0
+    # exactly-once survives the cut: no file is re-incorporated
+    assert refresh_enriched_view(spark, glob_pat, view, enrich)["new_files"] == 0
+    assert txlog.read_table(spark, view).count() == counts[5]
 
-    # crash-interrupted partial expiry (one manifest already deleted by
-    # a run that died mid-loop) completes on re-run
-    ev.filter(F.col("event_id") % 4 == 0).coalesce(1).write.parquet(
-        f"{src}/p5"
-    )
-    refresh_enriched_view(spark, glob_pat, view, enrich)  # v5
-    fs = lake_fs(spark, view)
-    fs.delete(_view_manifest_path(view, 3))  # simulate mid-loop crash
-    assert expire_snapshots(spark, view, keep_last=1) == [4]
-    assert [h["version"] for h in view_history(spark, view)] == [5]
 
 def test_delete_where_time_pinning_and_nondeterminism(spark, tmp_path):
     """ADVICE r5 medium: a time-dependent SQL predicate (``ts < now()``)
@@ -1937,7 +1907,6 @@ def test_txlog_retention_error_curated_on_uri_store(spark, tmp_path):
     consumer-visible half of the read_bytes normalization."""
     import pytest as _pytest
 
-    from es_analytics_spark import txlog
 
     path = f"file://{tmp_path}/t"
     for i in range(6):

@@ -6,8 +6,8 @@ overwrite_partition validate their removes/scope), crash sweeps at the
 part-write/CAS boundary, the vacuum-vs-in-flight-writer race that the
 round-6 review reproduced as permanent table corruption (now guarded by
 the retention horizon), checkpoint-bounded replay with time travel, and
-the txlog-backed materialized-view refresh that the single-manifest
-design cannot run with two writers.
+the enriched-view refresh from raw files, exactly once under two
+racing writers.
 
 Reference contract being promoted to the commit path: write-once
 ``Store.put`` — every object lands under a fresh key and is never
@@ -535,7 +535,7 @@ def test_hadoop_put_if_absent_over_file_uri(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# txlog-backed materialized view (the seam integration)
+# enriched view refreshed from raw files (incremental.refresh_enriched_view)
 # ---------------------------------------------------------------------------
 
 
@@ -548,10 +548,10 @@ def _seed_sources(spark, src: str, n_files: int = 2, rows_per: int = 50) -> str:
 
 
 def test_refresh_enriched_view_tx_incremental(spark, tmp_path):
-    """The existing enriched-view lifecycle, re-run on the txlog
-    backend: first refresh = full build, second = increment only,
-    no-op refresh reads nothing, time travel via read_table versions."""
-    from es_analytics_spark.materialized import refresh_enriched_view_tx
+    """The enriched-view lifecycle on txlog: first refresh = full
+    build, second = increment only, no-op refresh reads nothing, time
+    travel via read_table versions."""
+    from es_analytics_spark.incremental import refresh_enriched_view
 
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     glob_pat = _seed_sources(spark, src, n_files=2)
@@ -559,21 +559,21 @@ def test_refresh_enriched_view_tx_incremental(spark, tmp_path):
     def enrich(df):
         return df.withColumn("v3", F.col("v") * 3)
 
-    r1 = refresh_enriched_view_tx(spark, glob_pat, view, enrich)
+    r1 = refresh_enriched_view(spark, glob_pat, view, enrich)
     assert (r1["new_files"], r1["total_files"], r1["version"]) == (2, 2, 1)
     assert read_table(spark, view).count() == 100
 
     spark.range(100, 130).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     ).coalesce(1).write.parquet(f"{src}/f9")
-    r2 = refresh_enriched_view_tx(spark, glob_pat, view, enrich)
+    r2 = refresh_enriched_view(spark, glob_pat, view, enrich)
     assert (r2["new_files"], r2["total_files"], r2["version"]) == (1, 3, 2)
     assert read_table(spark, view).count() == 130
     assert read_table(spark, view, version=1).count() == 100
     # enrich actually applied
     assert read_table(spark, view).filter(F.col("v3") != F.col("v") * 3).count() == 0
 
-    r3 = refresh_enriched_view_tx(spark, glob_pat, view, enrich)
+    r3 = refresh_enriched_view(spark, glob_pat, view, enrich)
     assert r3 == {"new_files": 0, "total_files": 3, "version": 2}
     assert table_sources(spark, view) == set(
         lake_fs(spark, glob_pat).glob(glob_pat)
@@ -581,11 +581,11 @@ def test_refresh_enriched_view_tx_incremental(spark, tmp_path):
 
 
 def test_refresh_tx_two_writers_exactly_once(spark, tmp_path):
-    """The two-writer refresh the single-manifest design fails: both
+    """The two-writer refresh a single mutable manifest fails: both
     writers see the same new source files; exactly one incorporates
     them. The loser conflicts on source overlap, re-reads the seen set,
     and no-ops — the view never double-counts an increment."""
-    from es_analytics_spark.materialized import refresh_enriched_view_tx
+    from es_analytics_spark.incremental import refresh_enriched_view
 
     src, view = str(tmp_path / "src"), str(tmp_path / "view")
     glob_pat = _seed_sources(spark, src, n_files=3)
@@ -596,7 +596,7 @@ def test_refresh_tx_two_writers_exactly_once(spark, tmp_path):
     def refresher(i):
         try:
             barrier.wait()
-            results[i] = refresh_enriched_view_tx(
+            results[i] = refresh_enriched_view(
                 spark, glob_pat, view, lambda df: df
             )
         except Exception as e:  # pragma: no cover

@@ -316,3 +316,44 @@ def test_legacy_reserved_column_table_refused_at_read(spark, tmp_path):
         delete_where(spark, path, "id < 5")
     with pytest.raises(SchemaMismatchError, match="_f_name"):
         merge_upsert(spark, path, spark.range(0, 3), keys=["id"])
+
+
+def test_vacuum_keeps_vectors_of_a_part_removed_inside_the_window(spark, tmp_path):
+    """A vector's last reference is the commit that removes its data
+    part, not the one that attached it: version 4 below reads part v1
+    through the v2 vector, so vacuum(keep_versions=2) at v5 must keep
+    that vector for read_table(version=4)."""
+    p = str(tmp_path / "t")
+    append(spark, p, _ids(spark, 0, 10))  # v1
+    assert delete_where(spark, p, "id = 3", use_dv=True)["parts_rewritten"] == 0  # v2
+    append(spark, p, _ids(spark, 10, 20))  # v3
+    append(spark, p, _ids(spark, 20, 30))  # v4
+    delete_where(spark, p, "id < 10")  # v5 removes the v1 part and its vector
+    want = sorted(r.id for r in read_table(spark, p, version=4).collect())
+    assert want == [i for i in range(30) if i != 3]
+
+    vacuum(spark, p, keep_versions=2, retention_seconds=0)
+    got = sorted(r.id for r in read_table(spark, p, version=4).collect())
+    assert got == want
+    assert sorted(r.id for r in read_table(spark, p).collect()) == list(range(10, 30))
+    # past the window the part and its vector expire together
+    append(spark, p, _ids(spark, 30, 31))  # v6
+    append(spark, p, _ids(spark, 31, 32))  # v7
+    reaped = vacuum(spark, p, keep_versions=2, retention_seconds=0)
+    assert any("/dv-" in r for r in reaped), reaped
+    with pytest.raises(txlog.VersionExpiredError):
+        read_table(spark, p, version=4)
+
+    # the same when the attaching commit was folded into a checkpoint
+    # and reaped by log retention: the vector is known from the live set
+    q = str(tmp_path / "q")
+    append(spark, q, _ids(spark, 0, 10))  # v1
+    delete_where(spark, q, "id = 3", use_dv=True)  # v2
+    txlog.checkpoint(spark, q)
+    assert txlog.clean_log(spark, q)["cut"] == 2
+    append(spark, q, _ids(spark, 10, 20))  # v3
+    delete_where(spark, q, "id < 10")  # v4
+    vacuum(spark, q, keep_versions=2, retention_seconds=0)
+    assert sorted(r.id for r in read_table(spark, q, version=3).collect()) == [
+        i for i in range(20) if i != 3
+    ]
