@@ -6,11 +6,11 @@ precedence once fully parenthesized), so an engine query and its
 correctness oracle can share one source of truth for the bit
 interleave.
 
-Why z-order: range-clustering on a single key (maintenance.cluster_by)
-gives perfect skipping on that key and none on others; interleaving
-the bits of several normalized keys gives every file a small bounding
-box in ALL cluster dimensions, so parquet min/max footer stats prune
-multi-dimensional box predicates. This is the OPTIMIZE ZORDER BY of
+Why z-order: range-clustering on a single key (``txlog.compact`` with
+``cluster_by``) gives perfect skipping on that key and none on others;
+interleaving the bits of several normalized keys gives every file a
+small bounding box in ALL cluster dimensions, so parquet min/max stats
+prune multi-dimensional box predicates. This is the OPTIMIZE ZORDER BY of
 Delta/Iceberg re-expressed as plain column arithmetic + one
 repartitionByRange — no table-format dependency.
 """
@@ -72,9 +72,8 @@ _NUMERIC_PREFIXES = ("tinyint", "smallint", "int", "bigint", "float",
 
 def convertible_exprs(df, cols: list[str]) -> list[str]:
     """Per-column SQL converting each cluster column into the DOUBLE
-    domain the curve normalization needs — with the type handling BOTH
-    rewrite paths (``maintenance.zorder_by``, ``txlog.compact(zorder=
-    True)``) must agree on:
+    domain the curve normalization needs — the type handling of the
+    ``txlog.compact(zorder=True)`` rewrite:
 
     - numeric/decimal: plain double cast;
     - date: days since epoch (``CAST(d AS DOUBLE)`` is a disallowed
@@ -111,10 +110,8 @@ def curve_position(df, cols: list[str], bits: int = 16):
     """The Morton curve position of ``df``'s rows over ``cols`` as a
     pyspark Column — ONE stats job (min/max of each converted
     dimension) plus the interleave expression. A single column needs no
-    interleave: its converted value IS the (linear) curve. Shared by
-    ``maintenance.zorder_by`` and ``txlog.compact(zorder=True)`` so the
-    type handling and overflow clamps can never drift between the lake
-    and transactional rewrite paths."""
+    interleave: its converted value IS the (linear) curve. Used by
+    ``txlog.compact(zorder=True)``."""
     from pyspark.sql import functions as F
 
     conv = convertible_exprs(df, cols)

@@ -52,6 +52,9 @@ maintainer additionally refuses cdc-less ``overwrite_partition`` /
 never emitted as deletes, so the rollup would silently keep counting
 them — re-run the overwrite with ``cdc=True`` or rebuild the rollup).
 
+:func:`scd2_merge` keeps a type-2 dimension (attribute history per
+key) the same way: one ``txlog.merge`` commit per batch of changes.
+
 Reference parity: the reference ships rows into write-once lake objects
 and leaves downstream aggregation to the warehouse
 (/root/reference/lib/store/Store.ts:4-8 — keys are never overwritten);
@@ -345,3 +348,105 @@ def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     zero (every source row of the group was deleted — the group no
     longer exists, but merge_upsert retains its state row)."""
     return txlog.read_table(spark, rollup_path).filter(F.col(COUNT_COL) > 0)
+
+
+def scd2_merge(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    key_cols: list[str],
+    ts_col: str,
+) -> dict:
+    """Type-2 slowly-changing-dimension merge into the txlog table at
+    ``path``: keep full attribute history for each key instead of
+    overwriting. The table carries three system columns —
+    ``__valid_from``, ``__valid_to`` (NULL while open) and
+    ``__is_current`` — and each incoming (key, attrs, ts) row either:
+
+    - opens the key's first version (no current row exists),
+    - closes the current version at ``ts`` and opens a new one (any
+      non-key attribute differs, NULL-safe), or
+    - is a no-op (attributes identical to the current version).
+
+    Multiple updates for one key in a single call collapse to the
+    LATEST by (ts, then attribute order) — deterministic latest-wins,
+    unlike ``txlog.merge_upsert``'s duplicate rejection (dimension
+    feeds routinely batch several days of changes).
+
+    ONE ``txlog.merge`` commit over a staged source, merged on
+    ``key_cols + ["__is_current"]``: every latest row is staged with
+    ``__is_current = true``, matches its key's current row, and the
+    matched clause closes that row when an attribute differs; each
+    changed key is staged a second time with a NULL ``__is_current``
+    merge key, which matches nothing, so the not-matched clause opens
+    the new version — as it does for a key with no current row. The
+    changed keys are found against the current rows read at one
+    version, and the commit must land on exactly the next one
+    (``expect_version``), so a concurrent writer conflicts instead of
+    being merged against stale state. Point-in-time reads are
+    ``__valid_from <= t AND (t < __valid_to OR __valid_to IS NULL)``;
+    ``txlog.read_table(version=...)`` and ``table_changes_cdf`` serve
+    the table's own history.
+
+    The first call may target a path with no table (initial load).
+    Returns {"opened", "closed", "unchanged", "rows"}.
+    """
+    from pyspark.sql import Window
+
+    data_cols = [c for c in updates.columns if c != ts_col]
+    attr_cols = [c for c in data_cols if c not in key_cols]
+    latest = (
+        updates.withColumn(
+            "__rn",
+            F.row_number().over(
+                Window.partitionBy(*key_cols).orderBy(
+                    F.col(ts_col).desc(),
+                    *[F.col(c).desc_nulls_last() for c in sorted(attr_cols)],
+                )
+            ),
+        )
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+    versions = latest.select(
+        *data_cols,
+        F.col(ts_col).alias("__valid_from"),
+        F.lit(None).cast(updates.schema[ts_col].dataType).alias("__valid_to"),
+        F.lit(True).alias("__is_current"),
+    )
+    staged = versions
+    v0 = txlog.current_version(spark, path)
+    if v0 > 0:
+        current = txlog.read_table(spark, path, version=v0).filter(F.col("__is_current"))
+        prior = current.select(
+            *key_cols, *[F.col(c).alias(f"__cur_{c}") for c in attr_cols]
+        )
+        differs = F.lit(False)
+        for c in attr_cols:
+            differs = differs | ~F.col(c).eqNullSafe(F.col(f"__cur_{c}"))
+        changed = versions.join(prior, key_cols).filter(differs).select(*versions.columns)
+        staged = versions.unionByName(
+            changed.withColumn("__is_current", F.lit(None).cast("boolean"))
+        )
+    attr_changed = " OR ".join(f"NOT (t.`{c}` <=> s.`{c}`)" for c in attr_cols)
+    res = txlog.merge(
+        spark, path, staged, [*key_cols, "__is_current"],
+        matched=[{
+            "action": "update",
+            "condition": attr_changed or "false",
+            "set": {"__valid_to": "s.`__valid_from`", "__is_current": "false"},
+        }],
+        not_matched=[{
+            "action": "insert",
+            "values": {**{c: f"s.`{c}`" for c in staged.columns}, "__is_current": "true"},
+        }],
+        expect_version=v0,
+    )
+    opened = res["rows_inserted"]
+    return {
+        "opened": opened,
+        "closed": res["rows_updated"],
+        "unchanged": latest.count() - opened,
+        "rows": txlog.read_table(spark, path, version=res["version"]).count()
+        if res["version"] else 0,
+    }

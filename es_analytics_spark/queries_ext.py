@@ -1272,25 +1272,27 @@ def ml_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC materialization BY THE STREAMING ENGINE: the events stream
-    replayed through a foreachBatch MERGE sink (latest row per user
-    wins; per-batch reduce → anti-join+union swap via
-    maintenance.upsert), then the resulting table read back — must
-    equal the batch last-per-key answer. (user_id, ts) is unique in the
-    fixture, so 'latest' is deterministic. Restart-safe by idempotence:
-    a replayed epoch MERGEs the same rows to the same state."""
+    replayed through the exactly-once txlog MERGE sink
+    (``stream_merge_to_txlog``: latest row per user wins per epoch, one
+    ``txlog.merge_upsert`` commit each), then the table's current
+    snapshot read back — must equal the batch last-per-key answer.
+    (user_id, ts) is unique in the fixture, so 'latest' is
+    deterministic. Restart-safe: a replayed epoch's writer transaction
+    is already committed and is skipped."""
     import tempfile
 
-    from es_analytics_spark.streaming.collector_sink import stream_upsert_to_table
+    from es_analytics_spark import txlog
     from es_analytics_spark.streaming.ingest import stream_events
+    from es_analytics_spark.streaming.txlog_sink import stream_merge_to_txlog
 
     d = tempfile.mkdtemp(prefix="cdc_upsert_")
     ev = stream_events(spark, sf_dir).select("user_id", "ts", "event_type", "value")
-    q = stream_upsert_to_table(
-        ev, f"{d}/table", keys=["user_id"], checkpoint_dir=f"{d}/ckpt",
-        order_col="ts", available_now=True,
+    q = stream_merge_to_txlog(
+        ev, f"{d}/table", keys=["user_id"], order_col="ts",
+        checkpoint_dir=f"{d}/ckpt", available_now=True,
     )
     q.awaitTermination()
-    return spark.read.parquet(f"{d}/table").select(
+    return txlog.read_table(spark, f"{d}/table").select(
         "user_id",
         F.col("ts").alias("last_ts"),
         F.col("event_type").alias("last_event_type"),

@@ -510,7 +510,7 @@ def sort_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) curve positions over (custkey, price cell),
     profiled per curve bucket: within one z-bucket BOTH dimensions stay
     inside a narrow band — the property that makes the curve a
-    multi-dimensional clustering key (maintenance.zorder_by is the
+    multi-dimensional clustering key (txlog.compact(zorder=True) is the
     rewrite that exploits it; this query exposes the curve itself as a
     queryable surface). Spark and oracle share the generated interleave
     expression text, so the bit math cannot drift.

@@ -4,8 +4,10 @@ The reference's ``Store`` abstraction (lib/store/Store.ts:4-8) hides
 S3 vs local FS behind one ``put`` contract (StoreS3.ts:21-35,
 StoreFS.ts:31-39). The engine's equivalent: DataFrame reads/writes
 already speak any Hadoop URI (``s3a://``, ``hdfs://``, ``file://``)
-natively, so the seam is only needed for the *maintenance* file ops —
-atomic swap, recursive delete, stats, raw-bytes put (CSV compat sink).
+natively, so the seam is only needed for the object ops around them —
+the txlog commit CAS (``put_if_absent``), staged raw-bytes puts (the
+collector flush, the CSV compat sink), recursive delete, listing and
+stats.
 
 ``lake_fs(spark, path)`` returns:
 
@@ -76,18 +78,8 @@ class LocalFS:
     def exists(self, path: str) -> bool:
         return os.path.exists(path)
 
-    def mkdirs(self, path: str) -> None:
-        os.makedirs(path, exist_ok=True)
-
     def rename(self, src: str, dst: str) -> None:
         os.rename(src, dst)
-
-    def replace_file(self, src: str, dst: str) -> None:
-        """Atomically rename ``src`` over an existing FILE ``dst`` —
-        POSIX rename semantics, so no crash point leaves dst absent
-        (the delete-then-rename window the manifest-publish crash
-        sweep caught)."""
-        os.replace(src, dst)
 
     def delete(self, path: str) -> None:
         if os.path.isdir(path):
@@ -179,36 +171,28 @@ class HadoopFS:
     def exists(self, path: str) -> bool:
         return self._fs.exists(self._jpath(path))
 
-    def mkdirs(self, path: str) -> None:
-        self._fs.mkdirs(self._jpath(path))
-
     def rename(self, src: str, dst: str) -> None:
         if not self._fs.rename(self._jpath(src), self._jpath(dst)):
             raise OSError(f"rename failed: {src} -> {dst}")
-
-    def replace_file(self, src: str, dst: str) -> None:
-        """Rename ``src`` over ``dst`` atomically where the store
-        supports it: FileContext.rename(OVERWRITE) is atomic on HDFS
-        and posix-like stores. On stores without atomic replace (raw
-        S3), callers needing multi-writer safety must layer a
-        transactional table format — the module docstring's contract."""
-        ctx = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            self._fs.getUri(), self._fs.getConf()
-        )
-        opts = self._gateway.new_array(self._jvm.org.apache.hadoop.fs.Options.Rename, 1)
-        opts[0] = self._jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
-        ctx.rename(self._jpath(src), self._jpath(dst), opts)
 
     def delete(self, path: str) -> None:
         self._fs.delete(self._jpath(path), True)
 
     def put_bytes(self, path: str, data: bytes) -> None:
         """Staged like :meth:`LocalFS.put_bytes`: write the hidden
-        sibling, then rename it over ``path``."""
+        sibling, then rename it over ``path`` with
+        ``FileContext.rename(OVERWRITE)`` — atomic on HDFS and
+        posix-like stores; on raw S3 rename is copy+delete (the module
+        docstring's contract)."""
         tmp = _staged_name(path)
         try:
             self._write(tmp, data)
-            self.replace_file(tmp, path)
+            ctx = self._jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+                self._fs.getUri(), self._fs.getConf()
+            )
+            opts = self._gateway.new_array(self._jvm.org.apache.hadoop.fs.Options.Rename, 1)
+            opts[0] = self._jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
+            ctx.rename(self._jpath(tmp), self._jpath(path), opts)
         except BaseException:
             self._fs.delete(self._jpath(tmp), False)
             raise

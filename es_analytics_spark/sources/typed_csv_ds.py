@@ -226,7 +226,7 @@ class TypedCsvWriter(DataSourceWriter):
     name and renames on task success — readers glob ``*.csv[.gz]`` so
     half-written task files are never visible; abort deletes the
     renamed files of completed tasks and in-progress stragglers are
-    invisible debris for maintenance.vacuum-style cleanup."""
+    invisible debris that no glob-based read picks up."""
 
     def __init__(self, schema, options, overwrite: bool):
         if overwrite:

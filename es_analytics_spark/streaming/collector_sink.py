@@ -15,7 +15,6 @@ lifecycle (§3 of SURVEY.md) as source + trigger + sink config.
 
 from __future__ import annotations
 
-import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -112,67 +111,3 @@ def read_lake_table(
     matching Collector.table's batch-side contract."""
     return spark.read.option("mergeSchema", merge_schema).parquet(f"{lake_dir}/{table}")
 
-
-def stream_upsert_to_table(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    checkpoint_dir: str,
-    order_col: str,
-    available_now: bool = False,
-    processing_time: str | None = None,
-) -> StreamingQuery:
-    """CDC-style streaming sink: each micro-batch MERGEs into the
-    parquet table at ``path`` on ``keys`` (latest row per key wins,
-    "latest" = max ``order_col`` with a full-row content hash as the
-    deterministic tie-break).
-
-    foreachBatch + maintenance.upsert: the batch is first reduced to
-    one row per key (upsert rejects duplicate key tuples by contract),
-    then anti-join + union + swap. Restart semantics: foreachBatch can
-    re-run a committed epoch after crash-restart, but the MERGE is
-    idempotent (same rows upsert to the same state), so the table
-    converges — the standard exactly-once-by-idempotence argument.
-    On a transactional table format this maps 1:1 to MERGE INTO.
-    """
-    from pyspark.sql import Window as W
-
-    from es_analytics_spark.maintenance import upsert
-
-    def apply_batch(batch: DataFrame, epoch_id: int) -> None:
-        if not batch.columns:
-            return
-        # ties on order_col break by a content hash of the hashable
-        # columns (maps excluded — Spark prohibits hashing MapType) —
-        # key columns are constant within the partition and cannot
-        # tie-break, which would leave the winner task-order-dependent
-        from es_analytics_spark.streaming.txlog_sink import row_content_tiebreak
-
-        w = W.partitionBy(*keys).orderBy(
-            F.col(order_col).desc(), row_content_tiebreak(batch)
-        )
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if latest.isEmpty():
-            return
-        spark = batch.sparkSession
-        try:
-            spark.read.parquet(path).limit(0).collect()
-        except Exception:
-            latest.write.mode("overwrite").parquet(path)  # first epoch bootstraps
-            return
-        upsert(spark, path, latest, keys)
-
-    writer = (
-        df.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -269,10 +269,8 @@ def stream_merge_to_txlog(
     drop_cols: list[str] | None = None,
 ) -> StreamingQuery:
     """CDC-shaped streaming sink: each micro-batch MERGEs into a
-    transactional txlog table — the upgrade of
-    ``collector_sink.stream_upsert_to_table`` (whose anti-join + swap
-    is single-writer and non-transactional) to multi-writer safety,
-    snapshot isolation, time travel, and an exact row-level change feed
+    transactional txlog table — multi-writer safe, with snapshot
+    isolation, time travel, and an exact row-level change feed
     (``table_changes_cdf`` shows each epoch's upsert as
     delete(old)+insert(new) at one version). See
     :class:`_MergeEpochCommitter` for the exactly-once story.

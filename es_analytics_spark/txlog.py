@@ -2167,13 +2167,12 @@ def compact(
     append, delete, or DV into the group clears the condition and the
     group recompacts.
 
-    Each partition group is rewritten with size-targeted bin-packing
-    (the ``maintenance.compact`` sizing contract): files approach
-    ``target_file_bytes`` via a bytes-per-row estimate from the group's
-    current on-disk size, written across ``ceil(bytes/target)`` tasks —
-    never a single-task ``coalesce(1)``, which at 100 TB would make a
-    hot partition a multi-GB single-thread write and a straggler/OOM
-    magnet.
+    Each partition group is rewritten with size-targeted bin-packing:
+    files approach ``target_file_bytes`` via a bytes-per-row estimate
+    from the group's current on-disk size, written across
+    ``ceil(bytes/target)`` tasks — never a single-task ``coalesce(1)``,
+    which at 100 TB would make a hot partition a multi-GB single-thread
+    write and a straggler/OOM magnet.
 
     ``cluster_by`` makes the compaction CLUSTERED (Delta's ``OPTIMIZE
     ZORDER BY`` role, linear-order variant): each partition group is
@@ -2196,10 +2195,10 @@ def compact(
     ``zorder=True`` upgrades linear clustering to the multi-dimensional
     curve (Delta's ``OPTIMIZE ZORDER BY`` proper): the cluster columns'
     normalized bits interleave into one Morton position
-    (``functions.zorder``, shared with ``maintenance.zorder_by``) that
-    drives the range shuffle, so every part gets a small bounding box
-    in EVERY cluster dimension — a ``range_filter`` on ANY of them
-    skips, where linear clustering prunes only the leading column.
+    (``functions.zorder.curve_position``) that drives the range
+    shuffle, so every part gets a small bounding box in EVERY cluster
+    dimension — a ``range_filter`` on ANY of them skips, where linear
+    clustering prunes only the leading column.
     Costs one extra per-group stats job; same shuffle shape."""
     fs = lake_fs(spark, path)
     v0, live = _snapshot(fs, path)
@@ -2276,12 +2275,9 @@ def compact(
 
             order_expr = None
             if zorder:
-                # multi-dimensional clustering: the shared Morton
-                # position (functions.zorder.curve_position — the SAME
-                # helper maintenance.zorder_by uses, so type handling
-                # and overflow clamps can never drift between the lake
-                # and transactional paths) makes EVERY emitted part
-                # carry a small bounding box in EVERY cluster
+                # multi-dimensional clustering: the Morton position
+                # (functions.zorder.curve_position) makes EVERY emitted
+                # part carry a small bounding box in EVERY cluster
                 # dimension. One extra stats job per group; a single
                 # cluster column degenerates to linear order (the
                 # 1-D curve IS the column).
@@ -2806,6 +2802,110 @@ def _stats_envelope(members: list[dict | None], drop=frozenset()) -> dict:
     return out
 
 
+# time-dependent SQL functions a DML condition is allowed to use — they
+# get pinned to literals once up front (see _pin_time_functions); bare
+# current_date / current_timestamp (no parens) are valid ANSI SQL, but
+# bare `now` is NOT a Spark function — only now() matches
+_TIME_FN_RE = re.compile(
+    r"\b(now)\s*\(\s*\)|\b(current_timestamp|localtimestamp|current_date)\b(\s*\(\s*\))?",
+    re.IGNORECASE,
+)
+# genuinely non-deterministic functions: never valid in a DML condition,
+# which several separate Spark jobs of one operation re-evaluate
+_NONDET_FN_RE = re.compile(
+    r"\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id)\s*\(",
+    re.IGNORECASE,
+)
+# quoted regions a textual substitution must never touch: single-quoted
+# string literals ('' escapes) and backtick-quoted identifiers
+_QUOTED_RE = re.compile(r"'(?:[^']|'')*'|`(?:[^`]|``)*`")
+
+
+def _mask_quoted(sql: str) -> str:
+    """Same-length copy of ``sql`` with every quoted region blanked, so
+    regex offsets on the mask are valid offsets into the original."""
+    return _QUOTED_RE.sub(lambda m: " " * len(m.group(0)), sql)
+
+
+def _pin_time_functions(spark: SparkSession, sql: str) -> str:
+    """Rewrite time-dependent functions in a condition SQL string to
+    literals evaluated ONCE, so the separate Spark jobs of one DML
+    operation (the touched-part probe, the ``cdc-`` change-part write,
+    the survivor rewrite) all see the same cutoff. Without pinning, a
+    TTL condition like ``ts < now()`` drifts between the jobs: a row
+    that expires after the change part is written is dropped by the
+    survivor rewrite but never reaches the change feed or the receipt.
+
+    Genuinely non-deterministic functions (rand/uuid/...) raise — no
+    single evaluation point can make them consistent across jobs.
+
+    Matching is done on a quoted-region mask of the SQL, so a string
+    literal like ``status = 'now()'`` or a backticked column named
+    ```current_date``` is never rewritten. The literals are rendered
+    JVM-SIDE (``CAST(current_timestamp() AS STRING)``) in the session
+    timezone: a driver-side ``.first()`` datetime would be formatted in
+    the driver OS timezone, and re-parsing it as a TIMESTAMP literal in
+    a differently-pinned ``spark.sql.session.timeZone`` would shift the
+    cutoff by the offset — a retention delete would silently remove
+    rows hours outside the intended window.
+    """
+    masked = _mask_quoted(sql)
+    if _NONDET_FN_RE.search(masked):
+        raise ValueError(
+            "condition uses a non-deterministic function (rand/uuid/...); "
+            "the separate jobs of one DML operation would each evaluate "
+            "it differently"
+        )
+    matches = list(_TIME_FN_RE.finditer(masked))
+    if not matches:
+        return sql
+    row = spark.sql(
+        "SELECT CAST(current_timestamp() AS STRING) AS ts, "
+        "CAST(localtimestamp() AS STRING) AS lts, "
+        "CAST(current_date() AS STRING) AS d"
+    ).first()
+
+    def _lit(m: re.Match) -> str:
+        fn = (m.group(1) or m.group(2)).lower()
+        if fn in ("now", "current_timestamp"):
+            return f"TIMESTAMP '{row['ts']}'"
+        if fn == "localtimestamp":
+            # localtimestamp() is TIMESTAMP_NTZ — keep the type on the pin
+            return f"TIMESTAMP_NTZ '{row['lts']}'"
+        return f"DATE '{row['d']}'"
+
+    out, last = [], 0
+    for m in matches:
+        out.append(sql[last: m.start()])
+        out.append(_lit(m))
+        last = m.end()
+    out.append(sql[last:])
+    return "".join(out)
+
+
+def _dml_condition(spark: SparkSession, condition, op: str):
+    """``condition`` (SQL string or Column) as a Column every job of one
+    DML operation evaluates identically: a string has its time functions
+    pinned (:func:`_pin_time_functions`). A Column's expression tree is
+    not rewritable from Python, so one embedding a time-dependent or
+    non-deterministic function raises instead of being evaluated at
+    several different wall-clock times."""
+    from pyspark.sql import Column, functions as F
+
+    if isinstance(condition, str):
+        return F.expr(_pin_time_functions(spark, condition))
+    if not isinstance(condition, Column):
+        raise TypeError(f"{op}: condition must be a SQL string or Column")
+    text = str(condition)
+    if _TIME_FN_RE.search(text) or _NONDET_FN_RE.search(text):
+        raise ValueError(
+            f"{op}: Column condition uses a time-dependent or "
+            "non-deterministic function; pass the condition as a SQL "
+            "string so the time can be pinned to a literal once"
+        )
+    return condition
+
+
 def _rewrite_touched(
     spark: SparkSession,
     fs,
@@ -2864,8 +2964,12 @@ def delete_where(
     tag are written as ONE part with their zone-map envelope
     (:func:`_rewrite_touched`: coarser range pruning across clustered
     parts until the next clustered :func:`compact`). ``condition`` is a
-    SQL expression string or a Column. Returns {"version",
-    "rows_deleted", "parts_rewritten"}.
+    SQL expression string or a Column; time functions in a string
+    (``ts < now()``) are pinned to one literal for the whole operation,
+    and a non-deterministic condition, or a Column embedding a time
+    function, raises (:func:`_dml_condition` — the same rule covers
+    :func:`update_where` and the clause conditions of the merges).
+    Returns {"version", "rows_deleted", "parts_rewritten"}.
 
     **Change-data feed**: the deleted rows are written to a ``cdc`` part
     recorded in the commit (Delta CDF's change files), so
@@ -2893,7 +2997,7 @@ def delete_where(
     subset), and the conflict rules are identical to the rewrite path."""
     from pyspark.sql import functions as F
 
-    cond = F.expr(condition) if isinstance(condition, str) else condition
+    cond = _dml_condition(spark, condition, "delete_where")
     # SQL DELETE three-valued semantics: delete exactly where the
     # predicate is TRUE. Without the coalesce, rows where it evaluates
     # to NULL would be excluded from BOTH the matched/cdc set
@@ -2990,7 +3094,7 @@ def update_where(
 
     if not assignments:
         raise ValueError("update_where: assignments must be non-empty")
-    cond = F.expr(condition) if isinstance(condition, str) else condition
+    cond = _dml_condition(spark, condition, "update_where")
     cond = F.coalesce(cond.cast("boolean"), F.lit(False))
     fs = lake_fs(spark, path)
     v0, live = _snapshot(fs, path)
@@ -3294,7 +3398,7 @@ def merge_upsert(
         # delete_where's predicate
         if c is None:
             return F.lit(default)
-        c = F.expr(c) if isinstance(c, str) else c
+        c = _dml_condition(spark, c, "merge_upsert")
         return F.coalesce(c.cast("boolean"), F.lit(False))
 
     fs = lake_fs(spark, path)
@@ -3654,10 +3758,19 @@ def merge(
                     f"source row (s.) — no source row matched: {e!r}"
                 )
 
+    # pin each clause condition ONCE: pass 1 and pass 2 both evaluate it
+    matched, not_matched, by_source = (
+        [
+            {**cl, "condition": _dml_condition(spark, cl["condition"], "merge")}
+            if cl.get("condition") is not None else cl
+            for cl in clauses
+        ]
+        for clauses in (matched, not_matched, by_source)
+    )
+
     def _cond(c, default=True):
         if c is None:
             return F.lit(default)
-        c = F.expr(c) if isinstance(c, str) else c
         return F.coalesce(c.cast("boolean"), F.lit(False))
 
     fs = lake_fs(spark, path)

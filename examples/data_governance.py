@@ -8,15 +8,16 @@ composed from the same operators the oracle-checked catalog registers:
   1. cross-split contamination audit     (ml_cross_split_leakage)
   2. quality-pruning decision table      (ml_quality_pruning_curve)
   3. corpus novelty check                (text_ngram_novelty)
-  4. retention delete (TTL)              (maintenance.delete_where)
-  5. right-to-be-forgotten erasure       (maintenance.erase_keys)
-  6. snapshot diff sign-off              (maintenance.table_diff)
-  7. CBO statistics refresh              (maintenance.analyze)
+  4. retention delete (TTL)              (txlog.delete_where)
+  5. right-to-be-forgotten erasure       (txlog.delete_where)
+  6. change-feed sign-off                (txlog.table_changes_cdf)
+  7. CBO statistics refresh              (session.analyze)
 
-Every mutating step returns an auditable receipt and is
-crash-consistent (kill sweeps in tests/test_lake_lifecycle.py); the
-sign-off diff proves the erasure removed exactly the requested
-subjects and nothing else.
+Every mutating step is one atomic txlog commit that returns an
+auditable receipt (kill sweeps in tests/test_lake_lifecycle.py); the
+sign-off reads the change feed over the two commits and proves they
+removed exactly the expired rows and the requested subjects, and
+nothing else.
 """
 
 from __future__ import annotations
@@ -26,14 +27,9 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from es_analytics_spark import get_spark
-from es_analytics_spark.maintenance import (
-    analyze,
-    delete_where,
-    erase_keys,
-    table_diff,
-)
+from es_analytics_spark import get_spark, txlog
 from es_analytics_spark.queries import REGISTRY
+from es_analytics_spark.session import analyze
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -59,41 +55,52 @@ def main() -> None:
         print("[audit] corpus novelty by ingestion slice:")
         novelty.show(5)
 
-        # -- 4: retention — expire old events from a working copy ----
+        # -- 4: retention — expire old events from a txlog copy ------
         events_path = f"{work}/events"
         ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-        ev.repartitionByRange(8, "ts").write.parquet(events_path)
-        before = f"{work}/events_before"
-        spark.read.parquet(events_path).write.parquet(before)
+        txlog.append(spark, events_path, ev.repartitionByRange(8, "ts"))
+        before_v = txlog.current_version(spark, events_path)
 
         cutoff = ev.agg(
             F.date_add(F.max(F.to_date("ts")), -7).alias("c")
         ).first()["c"]
-        receipt = delete_where(
-            spark, events_path, F.to_date("ts") < F.lit(cutoff)
-        )
+        expired = F.to_date("ts") < F.lit(cutoff)
+        receipt = txlog.delete_where(spark, events_path, expired)
         print(f"[retention] TTL < {cutoff}: {receipt}")
 
         # -- 5: erasure request for two subjects ----------------------
         subjects = [
             r["user_id"]
-            for r in spark.read.parquet(events_path)
+            for r in txlog.read_table(spark, events_path)
             .select("user_id").distinct().orderBy("user_id").limit(2).collect()
         ]
-        erasure = erase_keys(spark, events_path, "user_id", subjects)
+        erasure = txlog.delete_where(
+            spark, events_path, F.col("user_id").isin(subjects)
+        )
         print(f"[erasure] subjects {subjects}: {erasure}")
 
-        # -- 6: sign off — the diff must be exactly TTL + subjects ----
-        diff = table_diff(spark, before, events_path, keys=["event_id"])
-        expected_removed = receipt["rows_deleted"] + erasure["rows_erased"]
-        print(f"[sign-off] {diff} (expected removed: {expected_removed})")
-        assert diff["added"] == 0 and diff["changed"] == 0
-        assert diff["removed"] == expected_removed
+        # -- 6: sign off — the feed must be exactly TTL + subjects -----
+        feed = txlog.table_changes_cdf(
+            spark, events_path, before_v, erasure["version"]
+        )
+        by_type = {
+            r["_change_type"]: r["n"]
+            for r in feed.groupBy("_change_type").agg(F.count("*").alias("n")).collect()
+        }
+        expected_removed = receipt["rows_deleted"] + erasure["rows_deleted"]
+        print(f"[sign-off] {by_type} (expected removed: {expected_removed})")
+        assert set(by_type) <= {"delete"}
+        assert by_type.get("delete", 0) == expected_removed
+        assert feed.filter(~(expired | F.col("user_id").isin(subjects))).count() == 0
 
-        # -- 7: refresh optimizer statistics on the surviving table ---
+        # -- 7: refresh optimizer statistics on an export -------------
+        # (a txlog directory also holds removed and change parts, so
+        # the catalog table goes over a plain parquet snapshot of it)
+        export = f"{work}/events_export"
+        txlog.read_table(spark, events_path).write.parquet(export)
         spark.sql("DROP TABLE IF EXISTS gov_events")
         stats = analyze(
-            spark, {"gov_events": events_path}, columns={"gov_events": ["user_id"]}
+            spark, {"gov_events": export}, columns={"gov_events": ["user_id"]}
         )
         print(f"[stats] {stats}")
         spark.sql("DROP TABLE IF EXISTS gov_events")

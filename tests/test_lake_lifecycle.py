@@ -12,8 +12,8 @@ from es_analytics_spark.incremental import (
     maintain_rollup,
     read_rollup,
     refresh_enriched_view,
+    scd2_merge,
 )
-from es_analytics_spark.maintenance import compact, table_stats
 from es_analytics_spark.operators.joins import salted_join
 from es_analytics_spark.sources.lake import read_table
 from es_analytics_spark.streaming.collector_sink import read_lake_table, stream_to_lake
@@ -59,11 +59,13 @@ def test_stream_to_lake_restart_is_exactly_once(spark, sf_dir, tmp_path):
 def test_compact_reduces_file_count(spark, tmp_path):
     path = str(tmp_path / "frag")
     df = spark.range(0, 20000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(path)  # deliberately fragmented
-    assert table_stats(spark, path)["n_files"] == 64
-    report = compact(spark, path, target_file_bytes=10 * 1024 * 1024)
-    assert report["after"]["n_files"] < 8
-    out = spark.read.parquet(path)
+    for i in range(8):  # deliberately fragmented: 8 parts of 8 files
+        txlog.append(spark, path, df.filter(F.col("id") % 8 == i).repartition(8))
+    assert len(txlog.read_table(spark, path).inputFiles()) == 64
+    report = txlog.compact(spark, path, target_file_bytes=10 * 1024 * 1024)
+    assert (report["parts_before"], report["parts_after"]) == (8, 1)
+    out = txlog.read_table(spark, path)
+    assert len(out.inputFiles()) < 8
     assert out.count() == 20000
     assert out.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
 
@@ -161,21 +163,19 @@ def test_dsum_matches_decimal_reference(spark, values):
 
 
 def test_upsert_merge_semantics(spark, tmp_path):
-    """MERGE-by-rewrite: matched keys replaced, new keys inserted,
-    untouched rows intact."""
-    from es_analytics_spark.maintenance import upsert
-
+    """MERGE upsert: matched keys replaced, new keys inserted,
+    untouched rows intact, in one commit."""
     path = str(tmp_path / "t")
-    spark.createDataFrame(
+    txlog.append(spark, path, spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], ["id", "name", "v"]
-    ).write.parquet(path)
+    ))
     updates = spark.createDataFrame(
         [(2, "b2", 21.0), (4, "d", 40.0)], ["id", "name", "v"]
     )
-    stats = upsert(spark, path, updates, keys=["id"])
-    got = {r.id: (r.name, r.v) for r in spark.read.parquet(path).collect()}
+    res = txlog.merge_upsert(spark, path, updates, keys=["id"])
+    got = {r.id: (r.name, r.v) for r in txlog.read_table(spark, path).collect()}
     assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
-    assert stats["rows"] == 4
+    assert (res["version"], res["rows_updated"], res["rows_inserted"]) == (2, 1, 1)
 
 
 def test_upsert_rejects_duplicate_update_keys(spark, tmp_path):
@@ -184,23 +184,21 @@ def test_upsert_rejects_duplicate_update_keys(spark, tmp_path):
     double-insert."""
     import pytest
 
-    from es_analytics_spark.maintenance import upsert
-
     path = str(tmp_path / "t")
-    spark.createDataFrame([(1, "a")], ["id", "name"]).write.parquet(path)
+    txlog.append(spark, path, spark.createDataFrame([(1, "a")], ["id", "name"]))
     dupes = spark.createDataFrame([(2, "x"), (2, "y")], ["id", "name"])
     with pytest.raises(ValueError, match="duplicate key"):
-        upsert(spark, path, dupes, keys=["id"])
-    # target untouched
-    assert spark.read.parquet(path).count() == 1
+        txlog.merge_upsert(spark, path, dupes, keys=["id"])
+    # nothing committed
+    assert txlog.current_version(spark, path) == 1
+    assert txlog.read_table(spark, path).count() == 1
 
 
 def test_lake_ops_work_over_uri_store(spark, tmp_path):
-    """A12: the whole single-writer surface — collector CSV sink,
-    compact, upsert — runs against a Hadoop-URI lake root (file://
-    here; s3a:// is the same FileSystem API with different scheme),
-    never touching os.rename/shutil."""
-    from es_analytics_spark.maintenance import upsert
+    """A12: the collector sinks and the txlog table ops — compact,
+    upsert, erasure, SCD2 — run against a Hadoop-URI lake root
+    (file:// here; s3a:// is the same FileSystem API with different
+    scheme), never touching os.rename/shutil."""
     from es_analytics_spark.sources.fsio import HadoopFS, lake_fs
 
     uri = f"file://{tmp_path}"
@@ -228,26 +226,23 @@ def test_lake_ops_work_over_uri_store(spark, tmp_path):
     base = spark.range(0, 1000).select(
         F.col("id").cast("long").alias("id"), F.concat(F.lit("n"), F.col("id")).alias("name")
     )
-    base.repartition(8).write.parquet(path)
-    assert table_stats(spark, path)["n_files"] == 8
-    compact(spark, path, target_file_bytes=1 << 20)
-    assert table_stats(spark, path)["n_files"] < 8
-    upsert(spark, path, spark.createDataFrame([(2, "b2"), (1001, "c")], ["id", "name"]), ["id"])
-    out = spark.read.parquet(path)
+    for i in range(4):
+        txlog.append(spark, path, base.filter(F.col("id") % 4 == i))
+    assert txlog.compact(spark, path, target_file_bytes=1 << 20)["parts_after"] == 1
+    txlog.merge_upsert(
+        spark, path, spark.createDataFrame([(2, "b2"), (1001, "c")], ["id", "name"]), ["id"]
+    )
+    out = txlog.read_table(spark, path)
     assert out.count() == 1001
     assert {r.name for r in out.filter(F.col("id").isin(2, 1001)).collect()} == {"b2", "c"}
 
-    # erasure through the same seam (URI paths flow into replace_file)
-    from es_analytics_spark.maintenance import erase_keys
+    # erasure through the same seam
+    receipt = txlog.delete_where(spark, path, F.col("id").isin([2, 7, 1001]))
+    assert receipt["rows_deleted"] == 3
+    assert txlog.read_table(spark, path).count() == 998
 
-    receipt = erase_keys(spark, path, "id", [2, 7, 1001])
-    assert receipt["verified"] is True and receipt["rows_erased"] == 3
-    assert spark.read.parquet(path).count() == 998
-
-    # SCD2 through the same seam (initial-load rename + swap path)
+    # SCD2 through the same seam (initial load, then a change)
     import datetime as dtt
-
-    from es_analytics_spark.maintenance import scd2_merge
 
     dim = f"{uri}/dim"
     t0, t1 = dtt.datetime(2026, 1, 1), dtt.datetime(2026, 2, 1)
@@ -272,14 +267,15 @@ def test_stream_upsert_cdc_latest_wins(spark, sf_dir, tmp_path):
     """Streaming MERGE sink: replaying the events stream with per-user
     upserts must leave exactly the latest event per user — equal to the
     batch last-per-key answer."""
-    from es_analytics_spark.streaming.collector_sink import stream_upsert_to_table
     from pyspark.sql import Window as W
+
+    from es_analytics_spark.streaming.txlog_sink import stream_merge_to_txlog
 
     path = str(tmp_path / "profiles")
     ev = stream_events(spark, sf_dir).select("user_id", "ts", "event_type", "value")
-    q = stream_upsert_to_table(
-        ev, path, keys=["user_id"], checkpoint_dir=str(tmp_path / "ckpt"),
-        order_col="ts", available_now=True,
+    q = stream_merge_to_txlog(
+        ev, path, keys=["user_id"], order_col="ts",
+        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
     )
     q.awaitTermination()
 
@@ -289,41 +285,48 @@ def test_stream_upsert_cdc_latest_wins(spark, sf_dir, tmp_path):
         batch.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1).drop("__rn")
     )
-    got = spark.read.parquet(path)
+    got = txlog.read_table(spark, path)
     assert got.count() == expect.count()
     joined = got.alias("g").join(expect.alias("e"), "user_id")
     assert joined.filter(F.col("g.ts") != F.col("e.ts")).count() == 0
 
 
-def test_cluster_by_produces_disjoint_file_ranges(spark, tmp_path):
-    """After cluster_by, parquet footer stats must show (near-)disjoint
-    per-file ranges on the cluster key — the property row-group/file
-    skipping depends on. Verified from the actual parquet metadata."""
-    import glob
+def _footer_ranges(files, cols):
+    """Per data file, {col: (min, max)} over its parquet row-group
+    footers — the stats file and row-group skipping reads."""
+    from urllib.parse import urlparse
 
     import pyarrow.parquet as pq
 
+    out = []
+    for f in files:
+        md = pq.read_metadata(urlparse(f).path)
+        names = [md.row_group(0).column(i).path_in_schema for i in range(md.num_columns)]
+        span = {}
+        for c in cols:
+            ci = names.index(c)
+            stats = [md.row_group(rg).column(ci).statistics for rg in range(md.num_row_groups)]
+            span[c] = (min(s.min for s in stats), max(s.max for s in stats))
+        out.append(span)
+    return out
+
+
+def test_cluster_by_produces_disjoint_file_ranges(spark, tmp_path):
+    """After a clustered compact, parquet footer stats must show
+    (near-)disjoint per-file ranges on the cluster key — the property
+    row-group/file skipping depends on. Verified from the actual
+    parquet metadata."""
     path = str(tmp_path / "t")
     df = spark.range(0, 50_000).selectExpr(
-        "cast(rand(7) * 1000000 as long) as k", "id as payload"
+        "pmod(xxhash64(id), 1000000) as k", "id as payload"
     )
-    df.repartition(8).write.parquet(path)  # k scattered across all files
+    for i in range(4):  # k scattered across all parts
+        txlog.append(spark, path, df.filter(F.col("payload") % 4 == i))
 
-    from es_analytics_spark.maintenance import cluster_by
-
-    report = cluster_by(spark, path, ["k"], target_file_bytes=200 * 1024)
-    assert report["rows"] == 50_000
-    ranges = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)
-            assert col.path_in_schema == "k"
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
+    report = txlog.compact(spark, path, cluster_by=["k"], target_file_bytes=100 * 1024)
+    assert report["parts_before"] == 4
+    out = txlog.read_table(spark, path)
+    ranges = sorted(r["k"] for r in _footer_ranges(out.inputFiles(), ["k"]))
     assert len(ranges) >= 3  # actually split into multiple files
     overlaps = sum(
         1 for (a, b) in zip(ranges, ranges[1:]) if b[0] <= a[1]
@@ -331,46 +334,34 @@ def test_cluster_by_produces_disjoint_file_ranges(spark, tmp_path):
     # range partitioning gives disjoint files (boundary duplicates aside)
     assert overlaps <= 1, ranges
     # content preserved
-    out = spark.read.parquet(path)
     assert out.count() == 50_000
     assert out.agg(F.sum("payload")).first()[0] == sum(range(50_000))
 
 
 def test_zorder_by_bounds_every_dimension(spark, tmp_path):
-    """After zorder_by on two independent uniform dims, every file's
-    bounding box must be small in BOTH dims (the multi-dim skipping
-    property). A single-key cluster_by would leave the second dim at
-    full span in every file — the assertion separates the two."""
-    import glob
-
-    import pyarrow.parquet as pq
-
+    """After a z-order compact on two independent uniform dims, every
+    file's bounding box must be small in BOTH dims (the multi-dim
+    skipping property). A single-key clustering would leave the second
+    dim at full span in every file — the assertion separates the two."""
     path = str(tmp_path / "t")
     df = spark.range(0, 60_000).selectExpr(
-        "cast(rand(11) * 65536 as long) as x",
-        "cast(rand(13) * 65536 as long) as y",
+        "pmod(xxhash64(id, 11), 65536) as x",
+        "pmod(xxhash64(id, 13), 65536) as y",
         "id as payload",
     )
-    df.repartition(8).write.parquet(path)
+    for i in range(4):
+        txlog.append(spark, path, df.filter(F.col("payload") % 4 == i))
 
-    from es_analytics_spark.maintenance import zorder_by
-
-    report = zorder_by(spark, path, ["x", "y"], target_file_bytes=40 * 1024)
-    assert report["rows"] == 60_000
+    txlog.compact(
+        spark, path, cluster_by=["x", "y"], zorder=True, target_file_bytes=40 * 1024
+    )
 
     full = 65536.0
-    boxes = []
-    for f in glob.glob(f"{path}/*.parquet"):
-        md = pq.read_metadata(f)
-        span = {}
-        for ci in range(md.num_row_groups and md.row_group(0).num_columns):
-            name = md.row_group(0).column(ci).path_in_schema
-            if name not in ("x", "y"):
-                continue
-            mins = [md.row_group(rg).column(ci).statistics.min for rg in range(md.num_row_groups)]
-            maxs = [md.row_group(rg).column(ci).statistics.max for rg in range(md.num_row_groups)]
-            span[name] = (max(maxs) - min(mins)) / full
-        boxes.append((span["x"], span["y"]))
+    out = txlog.read_table(spark, path)
+    boxes = [
+        ((s["x"][1] - s["x"][0]) / full, (s["y"][1] - s["y"][0]) / full)
+        for s in _footer_ranges(out.inputFiles(), ["x", "y"])
+    ]
     assert len(boxes) >= 8
     # every file covers a fraction of both dims; a linear sort would
     # pin one dim near 1.0 in every file (fraction-small ~0, avg area
@@ -379,7 +370,6 @@ def test_zorder_by_bounds_every_dimension(spark, tmp_path):
     assert avg_area < 0.2, boxes
     small = sum(1 for sx, sy in boxes if max(sx, sy) <= 0.5)
     assert small / len(boxes) >= 0.6, boxes
-    out = spark.read.parquet(path)
     assert out.count() == 60_000
     assert out.agg(F.sum("payload")).first()[0] == sum(range(60_000))
 
@@ -453,13 +443,12 @@ def test_incremental_rollup_matches_full_recompute(spark, tmp_path):
 def test_zorder_guards_sign_bit_and_degenerate_stats(spark, tmp_path):
     """interleave_expr must refuse bit layouts that reach the bigint
     sign bit (negative curve positions silently invert the clustering
-    order); zorder_by auto-shrinks bits instead. None/NULL stats
-    (empty table, all-NULL column) degrade to the constant 0 cell
+    order); the z-order compact auto-shrinks bits instead. None/NULL
+    stats (empty table, all-NULL column) degrade to the constant 0 cell
     rather than crashing."""
     import pytest as _pytest
 
     from es_analytics_spark.functions.zorder import interleave_expr, normalize_expr
-    from es_analytics_spark.maintenance import zorder_by
 
     with _pytest.raises(ValueError, match="63"):
         interleave_expr(["a", "b", "c", "d"], bits=16)  # 64 bits -> sign bit
@@ -469,17 +458,23 @@ def test_zorder_guards_sign_bit_and_degenerate_stats(spark, tmp_path):
     # NULL values land in a defined cell (COALESCE inside the expr)
     assert "COALESCE" in normalize_expr("x", 0.0, 10.0)
 
-    # 4 columns at default bits=16 would overflow; zorder_by shrinks to 15
+    # 4 columns at default bits=16 would overflow; the curve shrinks to 15
     path = str(tmp_path / "t4")
-    spark.range(0, 5000).selectExpr(
+    df = spark.range(0, 5000).selectExpr(
+        "id",
         "cast(id % 100 as double) as a",
         "cast(id % 97 as double) as b",
         "cast(id % 89 as double) as c",
         "cast(null as double) as d",  # all-NULL dim: constant cell
-    ).write.parquet(path)
-    report = zorder_by(spark, path, ["a", "b", "c", "d"], target_file_bytes=64 * 1024)
-    assert report["rows"] == 5000
-    assert spark.read.parquet(path).count() == 5000
+    )
+    txlog.append(spark, path, df.filter("id < 2500"))
+    txlog.append(spark, path, df.filter("id >= 2500"))
+    report = txlog.compact(
+        spark, path, cluster_by=["a", "b", "c", "d"], zorder=True,
+        target_file_bytes=64 * 1024,
+    )
+    assert report["parts_before"] == 2
+    assert txlog.read_table(spark, path).count() == 5000
 
 
 def test_streaming_lake_feeds_incremental_rollup(spark, sf_dir, tmp_path):
@@ -555,43 +550,6 @@ def test_streaming_lake_feeds_incremental_rollup(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == want
-
-
-def test_vacuum_removes_stale_staging_only(spark, tmp_path):
-    """vacuum must remove crash debris (stale .__old__ / staging /
-    _temporary) older than the retention window, leave fresh artifacts
-    (a running rewrite) and live table data untouched, and honor
-    dry_run. Works over both FS seams (plain path here; the URI-store
-    test covers the Hadoop client path for the same glob/delete API)."""
-    import os
-    import time
-
-    from es_analytics_spark.maintenance import vacuum
-
-    root = str(tmp_path / "lake")
-    table = os.path.join(root, "events")
-    spark.range(10).write.parquet(table)
-    stale_backup = table + ".__old__"
-    stale_staging = table + ".__compact__"
-    fresh_staging = table + ".__upsert__"
-    committer = os.path.join(table, "_temporary")
-    for d in (stale_backup, stale_staging, fresh_staging, committer):
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, "junk"), "w") as f:
-            f.write("x")
-    old = time.time() - 8 * 24 * 3600
-    for d in (stale_backup, stale_staging, committer):
-        os.utime(d, (old, old))
-
-    planned = vacuum(spark, root, retention_hours=168, dry_run=True)
-    assert sorted(planned) == sorted([stale_backup, stale_staging, committer])
-    assert all(os.path.exists(p) for p in planned), "dry_run must not delete"
-
-    removed = vacuum(spark, root, retention_hours=168)
-    assert sorted(removed) == sorted(planned)
-    assert not any(os.path.exists(p) for p in removed)
-    assert os.path.exists(fresh_staging), "fresh staging must survive retention"
-    assert spark.read.parquet(table).count() == 10, "table data untouched"
 
 
 def test_enriched_view_incremental_and_crash_invisible(spark, sf_dir, tmp_path):
@@ -743,13 +701,11 @@ def test_streaming_lake_feeds_enriched_view(spark, sf_dir, tmp_path):
 
 class _CrashFS:
     """lake_fs wrapper that raises after the k-th MUTATING filesystem
-    operation (put_bytes/put_if_absent/rename/delete/mkdirs; a txlog
-    commit is one put_if_absent) — the fault-injection seam for the
+    operation (put_bytes/put_if_absent/rename/delete; a txlog commit is
+    one put_if_absent) — the fault-injection seam for the
     crash-consistency sweeps below. Reads pass through untouched."""
 
-    MUTATORS = (
-        "put_bytes", "put_if_absent", "rename", "replace_file", "delete", "mkdirs",
-    )
+    MUTATORS = ("put_bytes", "put_if_absent", "rename", "delete")
 
     def __init__(self, inner, crash_after: int):
         self._inner = inner
@@ -944,160 +900,119 @@ def test_view_change_feed_between_versions(spark, tmp_path):
 
 
 def test_erase_keys_prunes_files_and_verifies(spark, sf_dir, tmp_path):
-    """GDPR erasure: only files containing matching rows are rewritten
-    (file-level pruning), survivors are byte-identical, the receipt is
-    verified, and a second call is a no-op."""
-    import os
-
-    from es_analytics_spark.maintenance import erase_keys
-
+    """GDPR erasure (``delete_where`` over an ``isin``): only parts
+    containing matching rows are rewritten (part-level pruning —
+    untouched parts keep their files), survivors are identical, the
+    change feed holds exactly the erased rows, and a second call is a
+    no-op that commits nothing."""
     path = str(tmp_path / "users_tbl")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # range-cluster on the key so the erasure set concentrates in few files
-    ev.repartitionByRange(4, "user_id").write.parquet(path)
+    # range-split on the key so the erasure set concentrates in one part
+    cuts = [float("-inf"), *ev.approxQuantile("user_id", [0.25, 0.5, 0.75], 0), float("inf")]
+    for lo, hi in zip(cuts, cuts[1:]):
+        txlog.append(spark, path, ev.filter((F.col("user_id") > lo) & (F.col("user_id") <= hi)))
 
     victims = [r["user_id"] for r in ev.select("user_id").distinct().orderBy("user_id").limit(3).collect()]
     before = ev.filter(~F.col("user_id").isin(victims)).orderBy("event_id").collect()
-    files_before = {
-        f: os.path.getmtime(os.path.join(path, f))
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    }
+    files_before = set(txlog.read_table(spark, path).inputFiles())
 
-    receipt = erase_keys(spark, path, "user_id", victims)
-    assert receipt["verified"] is True
-    assert receipt["rows_erased"] > 0
-    assert 1 <= receipt["files_rewritten"] + receipt["files_deleted"] < len(files_before), (
-        "erasure should touch some but not all files on a range-clustered table",
-        receipt,
+    receipt = txlog.delete_where(spark, path, F.col("user_id").isin(victims))
+    assert receipt["rows_deleted"] == len(ev.collect()) - len(before) > 0
+    assert receipt["parts_rewritten"] == 1, receipt
+
+    after = txlog.read_table(spark, path)
+    assert after.orderBy("event_id").collect() == before  # victims gone
+    files_after = set(after.inputFiles())
+    assert 0 < len(files_before - files_after) < len(files_before), (
+        "erasure should replace some but not all files on a range-split table"
     )
+    feed = txlog.table_changes_cdf(spark, path, receipt["version"] - 1, receipt["version"])
+    assert {r._change_type for r in feed.collect()} == {"delete"}
+    assert feed.filter(~F.col("user_id").isin(victims)).count() == 0
+    assert feed.count() == receipt["rows_deleted"]
 
-    after = spark.read.parquet(path).orderBy("event_id").collect()
-    assert after == before  # survivors bit-identical, victims gone
-
-    untouched = set(files_before) - {
-        f for f in files_before if not os.path.exists(os.path.join(path, f))
-    }
-    same_mtime = [
-        f
-        for f in untouched
-        if os.path.getmtime(os.path.join(path, f)) == files_before[f]
-    ]
-    assert len(same_mtime) >= len(files_before) - receipt["files_rewritten"] - receipt["files_deleted"], (
-        "untouched files must not be rewritten"
-    )
-
-    again = erase_keys(spark, path, "user_id", victims)
-    assert again == {
-        "rows_erased": 0,
-        "files_rewritten": 0,
-        "files_deleted": 0,
-        "verified": True,
-    }
+    again = txlog.delete_where(spark, path, F.col("user_id").isin(victims))
+    assert again == {"version": receipt["version"], "rows_deleted": 0, "parts_rewritten": 0}
 
 
-def test_erase_keys_rejects_partition_column(spark, sf_dir, tmp_path):
-    import pytest
+def _delete_kill_sweep(spark, monkeypatch, tmp_path, parts: dict, condition, want):
+    """Kill ``txlog.delete_where(condition)`` after every mutating
+    filesystem step over a table built from ``parts`` ({partition tag:
+    frame}, one part each). At EACH point a reader sees exactly the
+    table before or after the delete (one commit, never a torn
+    state), one clean re-run converges to ``want``, and vacuum reaps
+    the crashed attempt's parts without touching live rows. Returns the
+    number of crash points swept."""
+    from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
 
-    from es_analytics_spark.maintenance import erase_keys
+    def rows(path):
+        return sorted(tuple(r) for r in txlog.read_table(spark, path).collect())
 
-    path = str(tmp_path / "parted_tbl")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.partitionBy(
-        "event_type"
-    ).parquet(path)
-    with pytest.raises(ValueError, match="partition column"):
-        erase_keys(spark, path, "event_type", ["purchase"])
+    k = 0
+    while True:
+        root = str(tmp_path / f"k{k}")
+        path = f"{root}/t"
+        for tag, frame in parts.items():
+            txlog.append(spark, path, frame, partition={"tag": tag})
+        before = rows(path)
+        _crash_txlog_under(monkeypatch, spark, root, k)
+        crashed = False
+        try:
+            txlog.delete_where(spark, path, condition)
+        except RuntimeError as e:
+            assert "injected crash" in str(e)
+            crashed = True
+        monkeypatch.setattr(txlog, "lake_fs", real_lake_fs)
+
+        observed = rows(path)
+        assert observed in (before, want), f"torn table at k={k}"
+        txlog.delete_where(spark, path, condition)
+        assert rows(path) == want, f"k={k} diverged after heal"
+        txlog.vacuum(spark, path, retention_seconds=0)
+        assert rows(path) == want
+        if not crashed:
+            return k
+        k += 1
 
 
 def test_erase_keys_crash_consistency_sweep(spark, sf_dir, tmp_path, monkeypatch):
-    """Kill the erasure after every possible mutating filesystem step
-    (crc drop, file delete, staged write, atomic replace, staging
-    cleanup) and assert the per-file replacement contract at EACH
-    point: a post-crash reader can always read the table (no torn
-    parquet, no stale checksum), sees the original rows minus some
-    SUBSET of the victim rows (never a corrupted or duplicated
-    survivor), and one clean re-run converges to the fully-erased
-    state with a verified receipt."""
-    import shutil
-
-    import es_analytics_spark.maintenance as maint
-    from es_analytics_spark.maintenance import erase_keys
-    from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
-
+    """The erasure under the kill sweep: one part holding only a
+    victim's rows (removed whole, its empty survivor output deleted)
+    and one mixed part (rewritten) — every crash point leaves the
+    pre- or post-erasure table, and a re-run converges."""
     src = spark.read.parquet(f"{sf_dir}/events.parquet")
-    template = str(tmp_path / "erase_template")
-    src.repartitionByRange(4, "user_id").write.parquet(template)
     victims = [
         r["user_id"]
         for r in src.select("user_id").distinct().orderBy("user_id").limit(3).collect()
     ]
-    all_rows = {tuple(r) for r in src.collect()}
-    victim_rows = {t for t in all_rows if t[2] in victims}  # user_id is col 3
-    assert victim_rows, "fixture must contain victim rows"
-    want = all_rows - victim_rows
-
-    k = 1
-    while k < 60:
-        path = str(tmp_path / f"t{k}")
-        shutil.copytree(template, path)
-        crasher = _CrashFS(real_lake_fs(spark, path), k)
-        monkeypatch.setattr(
-            maint,
-            "lake_fs",
-            lambda s, p, _c=crasher: _c
-            if str(p).startswith(str(tmp_path))
-            else real_lake_fs(s, p),
-        )
-        crashed = False
-        try:
-            erase_keys(spark, path, "user_id", victims)
-        except RuntimeError as e:
-            assert "injected crash" in str(e)
-            crashed = True
-        monkeypatch.setattr(maint, "lake_fs", real_lake_fs)
-
-        # invariant 1: readable, and exactly original-minus-a-subset-of-victims
-        observed = {tuple(r) for r in spark.read.parquet(path).collect()}
-        assert want <= observed <= all_rows, f"torn rows at k={k}"
-
-        # invariant 2: clean re-run converges with a verified receipt
-        receipt = erase_keys(spark, path, "user_id", victims)
-        assert receipt["verified"] is True
-        final = {tuple(r) for r in spark.read.parquet(path).collect()}
-        assert final == want, f"k={k} diverged after heal"
-        shutil.rmtree(path)
-        if not crashed:
-            break
-        k += 1
-    assert not crashed, "sweep never reached a crash-free run"
+    want = sorted(tuple(r) for r in src.filter(~F.col("user_id").isin(victims)).collect())
+    first = F.col("user_id") == victims[0]
+    n = _delete_kill_sweep(
+        spark, monkeypatch, tmp_path,
+        {"a": src.filter(first), "b": src.filter(~first)},
+        F.col("user_id").isin(victims), want,
+    )
+    assert n >= 2, "sweep never reached the commit"
 
 
 def test_table_diff_signs_off_maintenance_ops(spark, sf_dir, tmp_path):
-    """table_diff is the maintenance sign-off: compaction must diff
-    IDENTICAL (same rows, different files), an upsert must diff exactly
-    its changed+inserted keys, and an erasure must diff exactly the
-    victim keys as removed."""
-    from es_analytics_spark.maintenance import (
-        compact,
-        erase_keys,
-        table_diff,
-        upsert,
-    )
-
+    """The change feed over an operation's versions is its sign-off: a
+    compaction's window is empty (same rows, different parts), an
+    upsert's holds exactly its changed key as delete+insert and its new
+    key as insert, and an erasure's holds exactly the victims' rows as
+    deletes."""
     base = str(tmp_path / "base")
-    spark.read.parquet(f"{sf_dir}/events.parquet").repartition(6).write.parquet(base)
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    for i in range(3):
+        txlog.append(spark, base, ev.filter(F.col("event_id") % 3 == i))
 
-    # snapshot, then compact the working copy: rows identical, files differ
-    import shutil
-
-    snap = str(tmp_path / "snap")
-    shutil.copytree(base, snap)
-    compact(spark, base, target_file_bytes=1 << 22)
-    d = table_diff(spark, snap, base, keys=["event_id"])
-    assert d["identical"] is True and d["changed"] == 0
+    v0 = txlog.current_version(spark, base)
+    c = txlog.compact(spark, base, target_file_bytes=1 << 22)
+    assert (c["version"], c["parts_before"], c["parts_after"]) == (v0 + 1, 3, 1)
+    assert txlog.table_changes_cdf(spark, base, v0, c["version"]).count() == 0
+    assert txlog.read_table(spark, base).count() == ev.count()
 
     # upsert: 1 changed + 1 added
-    ev = spark.read.parquet(base)
     one = ev.orderBy("event_id").limit(1).collect()[0]
     updates = spark.createDataFrame(
         [
@@ -1106,38 +1021,23 @@ def test_table_diff_signs_off_maintenance_ops(spark, sf_dir, tmp_path):
         ],
         ev.schema,
     )
-    upsert(spark, base, updates, keys=["event_id"])
-    d2 = table_diff(spark, snap, base, keys=["event_id"])
-    assert (d2["added"], d2["removed"], d2["changed"]) == (1, 0, 1)
+    up = txlog.merge_upsert(spark, base, updates, keys=["event_id"])
+    feed = txlog.table_changes_cdf(spark, base, up["version"] - 1, up["version"])
+    assert sorted((r["event_id"], r["_change_type"]) for r in feed.collect()) == [
+        (one["event_id"], "delete"), (one["event_id"], "insert"), (10_000_000, "insert"),
+    ]
 
-    # erasure: exactly the victims' rows removed (plus the still-changed
-    # row). Victims come from the immutable snapshot — `ev`'s lineage
-    # points at the pre-upsert file generation the swap deleted.
+    # erasure: exactly the victims' rows removed
     victims = [
         r["user_id"]
-        for r in spark.read.parquet(snap)
-        .select("user_id")
-        .distinct()
-        .orderBy("user_id")
-        .limit(2)
-        .collect()
+        for r in ev.select("user_id").distinct().orderBy("user_id").limit(2).collect()
     ]
-    # removed == snapshot rows owned by victims (erasure may also take
-    # the upserted/mutated rows, but those key tuples count as removed
-    # only if they existed in the snapshot)
-    n_snap_victim_rows = spark.read.parquet(snap).filter(
-        F.col("user_id").isin(victims)
-    ).count()
-    erase_keys(spark, base, "user_id", victims)
-    d3 = table_diff(spark, snap, base, keys=["event_id"])
-    assert d3["removed"] == n_snap_victim_rows
-    assert d3["added"] <= 1  # the upserted key may survive erasure
-
-    # schema guard
-    import pytest
-
-    with pytest.raises(ValueError, match="column sets differ"):
-        table_diff(spark, base, f"{sf_dir}/orders.parquet", keys=["event_id"])
+    n_victim_rows = txlog.read_table(spark, base).filter(F.col("user_id").isin(victims)).count()
+    er = txlog.delete_where(spark, base, F.col("user_id").isin(victims))
+    feed = txlog.table_changes_cdf(spark, base, er["version"] - 1, er["version"])
+    assert {r._change_type for r in feed.collect()} == {"delete"}
+    assert feed.count() == n_victim_rows == er["rows_deleted"]
+    assert feed.filter(~F.col("user_id").isin(victims)).count() == 0
 
 
 def test_enriched_view_zone_map_pruning(spark, tmp_path):
@@ -1205,11 +1105,11 @@ def test_enriched_view_zone_map_pruning(spark, tmp_path):
 def test_scd2_merge_maintains_dimension_history(spark, tmp_path):
     """Type-2 SCD merge: changed attributes close the current version
     and open a new one, identical attributes are no-ops, new keys open
-    their first version, duplicate updates collapse latest-wins, and
-    the as-of predicate reconstructs any past state."""
+    their first version, duplicate updates collapse latest-wins, the
+    as-of predicate reconstructs any past state, and the table's own
+    time travel returns each merge's snapshot."""
     import datetime as dtt
 
-    from es_analytics_spark.maintenance import scd2_merge
 
     path = str(tmp_path / "dim_customer")
     t0 = dtt.datetime(2026, 1, 1)
@@ -1238,7 +1138,7 @@ def test_scd2_merge_maintains_dimension_history(spark, tmp_path):
     assert (r1["opened"], r1["closed"], r1["unchanged"]) == (2, 1, 1)
     assert r1["rows"] == 5  # 3 originals (1 closed) + new alice + dave
 
-    full = spark.read.parquet(path)
+    full = txlog.read_table(spark, path)
     alice = {
         (r["tier"], r["__is_current"], r["__valid_to"]) for r in
         full.filter(F.col("cust_id") == 1).collect()
@@ -1262,7 +1162,7 @@ def test_scd2_merge_maintains_dimension_history(spark, tmp_path):
     def as_of(t):
         return {
             r["cust_id"]: r["tier"]
-            for r in spark.read.parquet(path)
+            for r in txlog.read_table(spark, path)
             .filter(
                 (F.col("__valid_from") <= t)
                 & (F.col("__valid_to").isNull() | (F.col("__valid_to") > t))
@@ -1277,6 +1177,9 @@ def test_scd2_merge_maintains_dimension_history(spark, tmp_path):
     assert as_of(dtt.datetime(2026, 3, 15)) == {
         1: "diamond", 2: "silver", 3: "bronze", 4: "gold"
     }
+    # one commit per merge: the first version is the initial load
+    assert txlog.current_version(spark, path) == 3
+    assert txlog.read_table(spark, path, version=1).count() == 3
 
 
 def _erase_subject(spark, view, key_col, values):
@@ -1355,72 +1258,45 @@ def test_erase_from_view_is_retroactive_across_snapshots(spark, tmp_path):
 
 
 def test_scd2_merge_crash_consistency_sweep(spark, tmp_path, monkeypatch):
-    """Kill scd2_merge after every mutating filesystem step and assert
-    the single-writer no-loss contract at EACH point: a post-crash
-    reader sees the pre-merge table, the post-merge table, or — inside
-    the documented two-rename window — a missing table whose backup
-    still holds the complete pre-merge state (manual restore, then a
-    clean re-run converges). No crash point loses or duplicates
-    history."""
+    """Kill scd2_merge after every mutating filesystem step: a
+    post-crash reader sees exactly the pre-merge or the post-merge
+    dimension (the merge is one commit), and a clean re-run converges
+    to the full history — no crash point loses or duplicates a
+    version."""
     import datetime as dtt
-    import shutil
 
-    import es_analytics_spark.maintenance as maint
-    from es_analytics_spark.maintenance import scd2_merge
     from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
 
     t0, t1 = dtt.datetime(2026, 1, 1), dtt.datetime(2026, 2, 1)
-    template = str(tmp_path / "dim_template")
-    scd2_merge(
-        spark,
-        template,
-        spark.createDataFrame(
-            [(1, "gold", t0), (2, "silver", t0)], ["k", "tier", "updated_at"]
-        ),
-        ["k"],
-        "updated_at",
+    load = spark.createDataFrame(
+        [(1, "gold", t0), (2, "silver", t0)], ["k", "tier", "updated_at"]
     )
-    pre_state = {tuple(r) for r in spark.read.parquet(template).collect()}
     upd = spark.createDataFrame([(1, "platinum", t1), (3, "bronze", t1)],
                                 ["k", "tier", "updated_at"])
 
     def read_state(path):
-        spark.catalog.refreshByPath(path)
-        return {tuple(r) for r in spark.read.parquet(path).collect()}
+        return {tuple(r) for r in txlog.read_table(spark, path).collect()}
 
-    k = 1
-    while k < 40:
-        path = str(tmp_path / f"d{k}")
-        shutil.copytree(template, path)
-        crasher = _CrashFS(real_lake_fs(spark, path), k)
-        monkeypatch.setattr(
-            maint,
-            "lake_fs",
-            lambda s, p, _c=crasher: _c
-            if str(p).startswith(str(tmp_path))
-            else real_lake_fs(s, p),
-        )
+    k = 0
+    post_state = None
+    while True:
+        root = str(tmp_path / f"d{k}")
+        path = f"{root}/dim"
+        scd2_merge(spark, path, load, ["k"], "updated_at")
+        pre_state = read_state(path)
+        _crash_txlog_under(monkeypatch, spark, root, k)
         crashed = False
         try:
             scd2_merge(spark, path, upd, ["k"], "updated_at")
         except RuntimeError as e:
             assert "injected crash" in str(e)
             crashed = True
-        monkeypatch.setattr(maint, "lake_fs", real_lake_fs)
+        monkeypatch.setattr(txlog, "lake_fs", real_lake_fs)
 
-        fs = real_lake_fs(spark, path)
-        backup = path + ".__old__"
-        if not fs.exists(path):
-            # the documented two-rename window: backup must hold the
-            # complete pre-merge state — restore and continue
-            assert fs.exists(backup), f"k={k}: table AND backup missing"
-            fs.rename(backup, path)
-            assert read_state(path) == pre_state, f"k={k}: backup torn"
-        else:
-            observed = read_state(path)
-            n_cur = sum(1 for r in observed if r[-1])
-            assert n_cur in (2, 3), f"k={k}: current-row set torn: {observed}"
-
+        observed = read_state(path)
+        assert observed == pre_state or observed == post_state, (
+            f"k={k}: torn dimension: {observed}"
+        )
         final = scd2_merge(spark, path, upd, ["k"], "updated_at")
         got = read_state(path)
         tiers = {
@@ -1429,113 +1305,44 @@ def test_scd2_merge_crash_consistency_sweep(spark, tmp_path, monkeypatch):
         assert tiers[(1, True)] == "platinum" and tiers[(1, False)] == "gold"
         assert tiers[(2, True)] == "silver" and tiers[(3, True)] == "bronze"
         assert len(got) == 4, f"k={k}: lost or duplicated history: {got}"
-        assert final["unchanged"] >= 0
-        shutil.rmtree(path)
+        post_state = post_state or got
+        assert got == post_state
         if not crashed:
+            # the crash-free run committed; the re-run found nothing new
+            assert (final["opened"], final["closed"], final["unchanged"]) == (0, 0, 2)
             break
         k += 1
-    assert not crashed, "sweep never reached a crash-free run"
-
-
-def test_swap_ops_crash_consistency_sweep(spark, tmp_path, monkeypatch):
-    """Every remaining _swap-based rewrite (upsert, compact) under the
-    kill-after-every-mutation sweep: each crash point leaves the old
-    table, the new table, or the documented missing-table window with
-    a complete backup — never loss or duplication — and a
-    restore+re-run converges to the correct final state."""
-    import shutil
-
-    import es_analytics_spark.maintenance as maint
-    from es_analytics_spark.maintenance import compact, upsert
-    from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
-
-    template = str(tmp_path / "t_template")
-    spark.range(0, 500).selectExpr("id", "cast(id as double) as v").repartition(
-        4
-    ).write.parquet(template)
-    pre = {tuple(r) for r in spark.read.parquet(template).collect()}
-    upd = spark.createDataFrame([(1, 999.0), (500, 1.0)], ["id", "v"])
-    want_after_upsert = (pre - {(1, 1.0)}) | {(1, 999.0), (500, 1.0)}
-
-    def sweep(op, want, max_k=40):
-        k, crashed = 1, True
-        while k < max_k:
-            path = str(tmp_path / f"{op.__name__}{k}")
-            shutil.copytree(template, path)
-            crasher = _CrashFS(real_lake_fs(spark, path), k)
-            monkeypatch.setattr(
-                maint,
-                "lake_fs",
-                lambda s, p, _c=crasher: _c
-                if str(p).startswith(str(tmp_path))
-                else real_lake_fs(s, p),
-            )
-            crashed = False
-            try:
-                op(path)
-            except RuntimeError as e:
-                assert "injected crash" in str(e)
-                crashed = True
-            monkeypatch.setattr(maint, "lake_fs", real_lake_fs)
-
-            fs = real_lake_fs(spark, path)
-            if not fs.exists(path):
-                backup = path + ".__old__"
-                assert fs.exists(backup), f"{op.__name__} k={k}: no backup"
-                fs.rename(backup, path)
-                spark.catalog.refreshByPath(path)
-                got = {tuple(r) for r in spark.read.parquet(path).collect()}
-                assert got == pre, f"{op.__name__} k={k}: backup torn"
-            op(path)  # heal / converge
-            spark.catalog.refreshByPath(path)
-            final = {tuple(r) for r in spark.read.parquet(path).collect()}
-            assert final == want, f"{op.__name__} k={k}: diverged"
-            shutil.rmtree(path)
-            if not crashed:
-                return
-            k += 1
-        raise AssertionError(f"{op.__name__}: sweep never finished clean")
-
-    def do_upsert(path):
-        upsert(spark, path, upd, keys=["id"])
-
-    def do_compact(path):
-        compact(spark, path, target_file_bytes=1 << 22)
-
-    sweep(do_upsert, want_after_upsert)
-    sweep(do_compact, pre)
+    assert k >= 1, "sweep never reached the commit"
 
 
 def test_erase_keys_preserves_null_key_rows(spark, tmp_path):
-    """ADVICE r4 (high): ``~col.isin(values)`` is NULL for NULL-key
-    rows, so a bare ``.filter(~pred)`` silently dropped every NULL-key
-    row from each rewritten file — data loss beyond the erasure
-    request that the survivor check can't see (NULL never matches).
-    NULL identifies no subject, so erasure must keep those rows."""
-    from es_analytics_spark.maintenance import erase_keys
-
+    """``~col.isin(values)`` is NULL for NULL-key rows, so a bare
+    ``.filter(~pred)`` survivor rewrite would silently drop every
+    NULL-key row of each touched part — data loss beyond the erasure
+    request. NULL identifies no subject, so erasure must keep those
+    rows: delete_where deletes exactly where the condition is TRUE."""
     path = str(tmp_path / "tbl")
     df = spark.range(0, 1000).selectExpr(
         "id",
         # every third row has a NULL subject key, interleaved so every
-        # file the erasure touches also contains NULL-key rows
+        # part the erasure touches also contains NULL-key rows
         "CASE WHEN id % 3 = 0 THEN NULL ELSE id % 10 END AS subject",
         "cast(id as double) AS amount",
     )
-    df.repartition(4).write.parquet(path)
+    for i in range(4):
+        txlog.append(spark, path, df.filter(F.col("id") % 4 == i))
     n_null = df.filter("subject IS NULL").count()
     assert n_null > 0
 
-    receipt = erase_keys(spark, path, "subject", [1, 4])
-    assert receipt["verified"] is True
-    assert receipt["files_rewritten"] > 0
+    receipt = txlog.delete_where(spark, path, F.col("subject").isin([1, 4]))
+    assert receipt["parts_rewritten"] == 4
 
-    after = spark.read.parquet(path)
+    after = txlog.read_table(spark, path)
     assert after.filter("subject IS NULL").count() == n_null, (
         "NULL-key rows must survive erasure of other subjects"
     )
     assert after.filter(F.col("subject").isin([1, 4])).count() == 0
-    assert after.count() == 1000 - receipt["rows_erased"]
+    assert after.count() == 1000 - receipt["rows_deleted"]
 
 
 def test_erase_from_view_preserves_null_key_rows(spark, tmp_path):
@@ -1568,14 +1375,10 @@ def test_erase_from_view_preserves_null_key_rows(spark, tmp_path):
 
 
 def test_delete_where_ttl_and_null_semantics(spark, tmp_path):
-    """Retention delete (round 5): delete_where prunes whole expired
-    files on a time-clustered table (O(expired files) metadata work,
-    no rewrite), keeps FALSE- and NULL-predicate rows (SQL DELETE
-    three-valued semantics), verifies, and re-runs as a no-op."""
-    import os
-
-    from es_analytics_spark.maintenance import delete_where
-
+    """Retention delete: on a time-clustered table delete_where removes
+    whole expired parts without writing a survivor part, keeps FALSE-
+    and NULL-predicate rows (SQL DELETE three-valued semantics), and
+    re-runs as a no-op that commits nothing."""
     path = str(tmp_path / "t")
     df = spark.range(0, 10_000).select(
         "id",
@@ -1584,92 +1387,46 @@ def test_delete_where_ttl_and_null_semantics(spark, tmp_path):
         ).alias("ts"),
         F.when(F.col("id") % 7 == 0, None).otherwise(F.col("id") % 5).alias("grp"),
     )
-    df.repartitionByRange(5, "id").write.parquet(path)
-    n_files = len([f for f in os.listdir(path) if f.endswith(".parquet")])
+    for lo in range(0, 10_000, 2000):  # clustered on id (∝ ts)
+        txlog.append(spark, path, df.filter((F.col("id") >= lo) & (F.col("id") < lo + 2000)))
+    files_before = set(txlog.read_table(spark, path).inputFiles())
 
-    # TTL: range-clustered on id (∝ ts), so expired rows fill whole files
-    r = delete_where(spark, path, "id >= 6000")
-    assert r["verified"] is True
+    # TTL: expired rows fill whole parts
+    r = txlog.delete_where(spark, path, "id >= 6000")
     assert r["rows_deleted"] == 4000
-    assert r["files_deleted"] >= 1, "clustered TTL must drop whole files"
-    assert r["files_deleted"] + r["files_rewritten"] < n_files
-    out = spark.read.parquet(path)
+    assert r["parts_rewritten"] == 0, "clustered TTL must drop whole parts"
+    out = txlog.read_table(spark, path)
+    assert set(out.inputFiles()) < files_before, "no survivor part written"
     assert out.count() == 6000
     n_null = out.filter("grp IS NULL").count()
     assert n_null > 0
 
     # NULL semantics: DELETE WHERE grp = 2 keeps NULL-grp rows
-    r2 = delete_where(spark, path, F.col("grp") == 2)
-    assert r2["verified"] is True
-    out2 = spark.read.parquet(path)
+    r2 = txlog.delete_where(spark, path, F.col("grp") == 2)
+    out2 = txlog.read_table(spark, path)
     assert out2.filter("grp = 2").count() == 0
     assert out2.filter("grp IS NULL").count() == n_null
     assert out2.count() == 6000 - r2["rows_deleted"]
 
     # idempotent re-run
-    again = delete_where(spark, path, F.col("grp") == 2)
-    assert again == {
-        "rows_deleted": 0,
-        "files_rewritten": 0,
-        "files_deleted": 0,
-        "verified": True,
-    }
+    again = txlog.delete_where(spark, path, F.col("grp") == 2)
+    assert again == {"version": r2["version"], "rows_deleted": 0, "parts_rewritten": 0}
 
 
 def test_delete_where_crash_consistency_sweep(spark, tmp_path, monkeypatch):
-    """Kill delete_where after every mutating filesystem step and
-    assert the same per-file replacement contract as erase_keys: the
-    table stays readable, shows original-minus-a-subset-of-matching
-    rows, and one clean re-run converges verified (the shared
-    _prune_rewrite core under fault injection through its own seam)."""
-    import shutil
-
-    import es_analytics_spark.maintenance as maint
-    from es_analytics_spark.maintenance import delete_where
-    from es_analytics_spark.sources.fsio import lake_fs as real_lake_fs
-
-    src = spark.range(0, 4000).select(
-        "id", (F.col("id") % 11).alias("grp")
+    """The SQL-string retention delete under the kill sweep: a fully
+    expired part and a partially matching one — every crash point
+    leaves the pre- or post-delete table, and a re-run converges."""
+    src = spark.range(0, 4000).select("id", (F.col("id") % 11).alias("grp"))
+    want = sorted(
+        (i, i % 11) for i in range(4000) if not (i % 11 in (3, 4) or i >= 3500)
     )
-    template = str(tmp_path / "template")
-    src.repartitionByRange(4, "id").write.parquet(template)
-    all_rows = {(r["id"], r["grp"]) for r in src.collect()}
-    want = {t for t in all_rows if not (t[1] in (3, 4) or t[0] >= 3500)}
-    predicate = "grp IN (3, 4) OR id >= 3500"
-
-    k = 1
-    crashed = True
-    while k < 60:
-        path = str(tmp_path / f"t{k}")
-        shutil.copytree(template, path)
-        crasher = _CrashFS(real_lake_fs(spark, path), k)
-        monkeypatch.setattr(
-            maint,
-            "lake_fs",
-            lambda s, p, _c=crasher: _c
-            if str(p).startswith(str(tmp_path))
-            else real_lake_fs(s, p),
-        )
-        crashed = False
-        try:
-            delete_where(spark, path, predicate)
-        except RuntimeError as e:
-            assert "injected crash" in str(e)
-            crashed = True
-        monkeypatch.setattr(maint, "lake_fs", real_lake_fs)
-
-        observed = {(r["id"], r["grp"]) for r in spark.read.parquet(path).collect()}
-        assert want <= observed <= all_rows, f"torn rows at k={k}"
-
-        receipt = delete_where(spark, path, predicate)
-        assert receipt["verified"] is True
-        final = {(r["id"], r["grp"]) for r in spark.read.parquet(path).collect()}
-        assert final == want, f"k={k} diverged after heal"
-        shutil.rmtree(path)
-        if not crashed:
-            break
-        k += 1
-    assert not crashed, "sweep never reached a crash-free run"
+    n = _delete_kill_sweep(
+        spark, monkeypatch, tmp_path,
+        {"a": src.filter("id < 3500"), "b": src.filter("id >= 3500")},
+        "grp IN (3, 4) OR id >= 3500", want,
+    )
+    assert n >= 2, "sweep never reached the commit"
 
 
 def test_expire_snapshots_retention(spark, sf_dir, tmp_path):
@@ -1723,14 +1480,13 @@ def test_expire_snapshots_retention(spark, sf_dir, tmp_path):
 
 
 def test_delete_where_time_pinning_and_nondeterminism(spark, tmp_path):
-    """ADVICE r5 medium: a time-dependent SQL predicate (``ts < now()``)
-    is pinned to ONE literal cutoff before the hit scan, so the
-    verification re-read cannot race the clock and a correct TTL delete
-    always returns verified=True. Column predicates embedding time or
+    """A time-dependent SQL condition (``ts < now()``) is pinned to ONE
+    literal cutoff before the touched-part probe, so every job of the
+    delete agrees on it. Column conditions embedding time or
     non-deterministic functions raise instead of silently drifting."""
     import pytest
 
-    from es_analytics_spark.maintenance import _pin_time_functions, delete_where
+    from es_analytics_spark.txlog import _pin_time_functions
 
     path = str(tmp_path / "ttl")
     # half the rows 1000 days in the past, half 1000 days in the future
@@ -1743,12 +1499,11 @@ def test_delete_where_time_pinning_and_nondeterminism(spark, tmp_path):
         .otherwise(F.current_timestamp() + F.expr("INTERVAL 1000 DAYS"))
         .alias("ts"),
     )
-    df.repartitionByRange(4, "id").write.parquet(path)
+    txlog.append(spark, path, df)
 
-    r = delete_where(spark, path, "ts < now() - interval 90 days")
-    assert r["verified"] is True
+    r = txlog.delete_where(spark, path, "ts < now() - interval 90 days")
     assert r["rows_deleted"] == 1000
-    assert spark.read.parquet(path).count() == 1000
+    assert txlog.read_table(spark, path).count() == 1000
 
     # the rewriter substitutes one literal per time function, parens or not
     pinned = _pin_time_functions(
@@ -1758,12 +1513,13 @@ def test_delete_where_time_pinning_and_nondeterminism(spark, tmp_path):
     assert "current_date" not in pinned.lower()
     assert "TIMESTAMP '" in pinned and "DATE '" in pinned
 
-    # Column predicates with time functions can't be pinned -> raise
+    # Column conditions with time functions can't be pinned -> raise
     with pytest.raises(ValueError, match="pinned"):
-        delete_where(spark, path, F.col("ts") < F.current_timestamp())
-    # genuinely non-deterministic predicates raise in any form
+        txlog.delete_where(spark, path, F.col("ts") < F.current_timestamp())
+    # genuinely non-deterministic conditions raise in any form
     with pytest.raises(ValueError, match="non-deterministic"):
-        delete_where(spark, path, "id < rand() * 100")
+        txlog.delete_where(spark, path, "id < rand() * 100")
+    assert txlog.current_version(spark, path) == r["version"]
 
 
 def test_pin_time_functions_skips_quoted_regions(spark):
@@ -1771,7 +1527,7 @@ def test_pin_time_functions_skips_quoted_regions(spark):
     not rewrite matches inside string literals or backtick-quoted
     identifiers, and bare ``now`` (no parens) is not a Spark function so
     it must pass through (it can only be a column named now)."""
-    from es_analytics_spark.maintenance import _pin_time_functions
+    from es_analytics_spark.txlog import _pin_time_functions
 
     pinned = _pin_time_functions(
         spark, "status = 'now()' AND `current_date` = 'x' AND ts < now()"
@@ -1795,7 +1551,7 @@ def test_pin_time_functions_renders_in_session_timezone(spark):
     spark.sql.session.timeZone would shift a retention cutoff by the
     offset. Proof: under a non-UTC session tz, the pinned literal must
     round-trip to within seconds of current_timestamp()."""
-    from es_analytics_spark.maintenance import _pin_time_functions
+    from es_analytics_spark.txlog import _pin_time_functions
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     try:
@@ -1810,62 +1566,92 @@ def test_pin_time_functions_renders_in_session_timezone(spark):
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
-def test_delete_where_whole_table_expiry(spark, tmp_path):
-    """ADVICE r5 low: a predicate matching EVERY row deletes all files
-    outright; the receipt must come back verified instead of the
-    verification read raising 'unable to infer schema' on the
-    now-empty directory."""
-    import os
+def test_delete_where_pins_time_across_jobs(spark, tmp_path, monkeypatch):
+    """``ts < current_timestamp()`` is evaluated by three separate jobs
+    of one delete: the touched-part probe, the change-part write and
+    the survivor rewrite. With the change-part write delayed past the
+    expiry of 49 rows, the rewrite must still keep them — the receipt,
+    the change feed and the table agree on one cutoff instead of 49
+    rows vanishing without a delete record."""
+    import time
 
-    from es_analytics_spark.maintenance import delete_where
+    path = str(tmp_path / "t")
+    txlog.append(spark, path, spark.range(0, 50).select(
+        "id",
+        F.when(F.col("id") == 0, F.current_timestamp() - F.expr("INTERVAL 1 DAY"))
+        .otherwise(F.current_timestamp() + F.expr("INTERVAL 6 SECONDS"))
+        .alias("ts"),
+    ))
+    write_part = txlog._write_part
 
-    path = str(tmp_path / "all")
-    spark.range(0, 500).select("id").repartition(3).write.parquet(path)
+    def delayed(spark_, path_, df, schema_json=None, prefix=""):
+        part = write_part(spark_, path_, df, schema_json, prefix)
+        if prefix == "cdc-":
+            time.sleep(8)
+        return part
 
-    r = delete_where(spark, path, "id >= 0")
-    assert r == {
-        "rows_deleted": 500,
-        "files_rewritten": 0,
-        "files_deleted": 3,
-        "verified": True,
-    }
-    assert not [f for f in os.listdir(path) if f.endswith(".parquet")]
+    monkeypatch.setattr(txlog, "_write_part", delayed)
+    r = txlog.delete_where(spark, path, "ts < current_timestamp()")
+    monkeypatch.undo()
+    assert r["rows_deleted"] == 1
+    assert txlog.read_table(spark, path).count() == 49
+    feed = txlog.table_changes_cdf(spark, path, r["version"] - 1, r["version"])
+    assert [row.id for row in feed.collect()] == [0]
 
 
-def test_delete_where_mixed_partition_predicate_fails_closed(spark, tmp_path):
-    """ADVICE r5 low: a predicate mixing partition and data columns
-    (``p = 1 AND id > 5``) must fail BEFORE any file is mutated — the
-    per-file rewrite read can't see the partition column, and without
-    the up-front check the AnalysisException fires mid-loop after some
-    all-match files were already deleted."""
+def test_dml_refuses_nondeterministic_condition(spark, tmp_path):
+    """``rand()`` in a DML condition would be drawn afresh by each job
+    of the operation, so the receipt, the change feed and the table
+    would each see a different row set. delete_where, update_where,
+    merge clause conditions and SQL DELETE refuse it before writing
+    anything."""
     import pytest
 
-    from es_analytics_spark.maintenance import delete_where
+    from es_analytics_spark.sqldml import execute_sql
 
-    path = str(tmp_path / "part")
-    (
-        spark.range(0, 400)
-        .select("id", (F.col("id") % 4).alias("p"))
-        .write.partitionBy("p")
-        .parquet(path)
-    )
-    before = spark.read.parquet(path).count()
+    path = str(tmp_path / "t")
+    txlog.append(spark, path, spark.range(0, 2000).select("id", (F.col("id") % 7).alias("v")))
+    with pytest.raises(ValueError, match="non-deterministic"):
+        txlog.delete_where(spark, path, "rand() < 0.5")
+    with pytest.raises(ValueError, match="non-deterministic"):
+        txlog.update_where(spark, path, {"v": "0"}, "rand() < 0.5")
+    with pytest.raises(ValueError, match="non-deterministic"):
+        txlog.merge(
+            spark, path, spark.range(0, 10), ["id"],
+            matched=[{"action": "delete", "condition": "rand() < 0.5"}],
+        )
+    txlog.register_table(spark, "t_nondet_dml", path)
+    try:
+        with pytest.raises(ValueError, match="non-deterministic"):
+            execute_sql(spark, "DELETE FROM t_nondet_dml WHERE rand() < 0.5")
+    finally:
+        spark.catalog.dropTempView("t_nondet_dml")
+    assert txlog.current_version(spark, path) == 1
+    assert txlog.read_table(spark, path).count() == 2000
 
-    with pytest.raises(ValueError, match="partition"):
-        delete_where(spark, path, "p = 1 AND id > 5")
 
-    spark.catalog.refreshByPath(path)
-    assert spark.read.parquet(path).count() == before, "mutated before raising"
+def test_delete_where_whole_table_expiry(spark, tmp_path):
+    """A condition matching EVERY row removes every part outright (no
+    survivor part), and the emptied table still reads: zero rows, same
+    schema."""
+    path = str(tmp_path / "all")
+    for lo in (0, 200, 400):
+        txlog.append(spark, path, spark.range(lo, lo + 100 if lo == 400 else lo + 200))
+
+    r = txlog.delete_where(spark, path, "id >= 0")
+    assert (r["rows_deleted"], r["parts_rewritten"]) == (500, 0)
+    out = txlog.read_table(spark, path)
+    assert out.count() == 0 and out.columns == ["id"]
 
 
 def test_analyze_rejects_location_mismatch(spark, tmp_path):
-    """ADVICE r5 low: CREATE TABLE IF NOT EXISTS silently no-ops when a
-    same-named catalog table already points elsewhere — analyze() must
-    detect the mismatch and raise instead of reporting stats computed
-    over the wrong data."""
+    """CREATE TABLE IF NOT EXISTS silently no-ops when a same-named
+    catalog table already points elsewhere — analyze() must detect the
+    mismatch and raise instead of reporting stats computed over the
+    wrong data."""
     import pytest
 
-    from es_analytics_spark.maintenance import analyze
+    from es_analytics_spark.session import analyze
 
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
@@ -1880,6 +1666,23 @@ def test_analyze_rejects_location_mismatch(spark, tmp_path):
             analyze(spark, {"t_advice_loc_check": b})
     finally:
         spark.sql("DROP TABLE IF EXISTS t_advice_loc_check")
+
+
+def test_analyze_refuses_txlog_directory(spark, tmp_path):
+    """A txlog directory holds removed parts and ``cdc-`` change parts
+    beside the live ones; a parquet catalog table over it would compute
+    stats over dead rows. analyze() refuses it before registering
+    anything."""
+    import pytest
+
+    from es_analytics_spark.session import analyze
+
+    path = str(tmp_path / "tx")
+    txlog.append(spark, path, spark.range(0, 10))
+    txlog.delete_where(spark, path, "id < 5")
+    with pytest.raises(ValueError, match="txlog table"):
+        analyze(spark, {"t_txlog_analyze": path})
+    assert not spark.catalog.tableExists("t_txlog_analyze")
 
 
 def test_hadoopfs_read_bytes_missing_path_is_filenotfound(spark, tmp_path):

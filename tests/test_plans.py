@@ -422,16 +422,11 @@ def test_every_driver_fetch_is_limit_guarded_or_audited():
         ("oracle.py", "driver_record"),
         # DESCRIBE TABLE EXTENDED output: rows bounded by the table's
         # metadata field count (~30), never by data
-        ("maintenance.py", "analyze"),
-        # GDPR erasure / retention delete shared core: one row per data
-        # FILE containing matches — bounded by table layout (same class
-        # as table_stats' file listing), and a single-writer
-        # maintenance op, not a query
-        ("maintenance.py", "_prune_rewrite"),
+        ("session.py", "analyze"),
         # txlog row-level rewrites: the touched-part discovery collects
         # DISTINCT input_file_name()s of matching rows — one row per
-        # data file, the same manifest-sized class as _prune_rewrite;
-        # the data rewrite itself stays fully distributed
+        # data file, manifest-sized; the data rewrite itself stays
+        # fully distributed
         ("txlog.py", "delete_where"),
         ("txlog.py", "merge_upsert"),
         ("txlog.py", "update_where"),  # same touched-part discovery shape
@@ -545,7 +540,7 @@ def test_conf_mutating_queries_are_flagged():
 
 
 def test_analyze_stats_flip_broadcast_decision(spark, tmp_path):
-    """CBO enablement (r4 verdict ask 8, SURVEY §4): maintenance.analyze
+    """CBO enablement (r4 verdict ask 8, SURVEY §4): session.analyze
     issues ANALYZE TABLE … COMPUTE STATISTICS [FOR COLUMNS …]; the stats
     must land in the catalog (row count + size read back via DESCRIBE
     EXTENDED) and flip a join strategy — a dim too big to broadcast on
@@ -556,7 +551,7 @@ def test_analyze_stats_flip_broadcast_decision(spark, tmp_path):
     when the first stage is the expensive one)."""
     from pyspark.sql import functions as F
 
-    from es_analytics_spark.maintenance import analyze
+    from es_analytics_spark.session import analyze
 
     d = str(tmp_path)
     spark.range(0, 200_000).select(
