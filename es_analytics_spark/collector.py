@@ -21,9 +21,13 @@ Differences by design (semantic upgrades, SURVEY.md §1.4-1.5):
 - Schema is inferred ONCE per (schema-)table from the first record and
   held in a registry; later records are validated/coerced against it
   instead of the reference's silent first-record-wins corruption.
-- Batches buffer as plain Python rows and materialize through
-  ``spark.createDataFrame`` (Arrow path) — at cluster scale the same
-  API is fronted by a streaming source (es_analytics_spark.streaming).
+- Batches buffer as plain Python rows; a flush encodes them ONCE, as
+  one tz-correct Arrow table (:meth:`Collector._arrow_table`), and every
+  sink format reads that table: parquet bytes go through the staged
+  ``fsio`` put with no Spark job, orc goes through
+  ``spark.createDataFrame(table)``, csv encodes ``table.to_pylist()``.
+  A naive ``Time`` value is a wall time in the session time zone and
+  stores the instant Spark SQL's ``CAST`` gives it, in every format.
 """
 
 from __future__ import annotations
@@ -31,14 +35,16 @@ from __future__ import annotations
 import datetime as dt
 import enum
 import gzip
-import io
 import operator
-import os
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any, Callable
+from zoneinfo import ZoneInfo
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
@@ -118,21 +124,65 @@ _COERCE: dict[DataType, Callable[[Any], Any] | None] = {
 
 
 _TZINFO = operator.attrgetter("tzinfo")
+_UTC = pa.timestamp("us", tz="UTC")
+_PA_TYPE = {
+    DataType.String: pa.string(),
+    DataType.UUID: pa.string(),
+    DataType.Integer: pa.int64(),
+    DataType.Float: pa.float64(),
+    DataType.Boolean: pa.bool_(),
+}
 
 
-def _time_array(vals: list, tz: str):
-    """Arrow ``timestamp[us, UTC]`` of a Time column's values: naive
-    datetimes are wall times in ``tz`` (raises on DST-ambiguous or
-    nonexistent ones), aware datetimes their UTC instant. pyarrow alone
-    would keep an aware value's wall clock and drop its offset, storing
-    ``12:00+05:30`` as ``12:00Z``, so aware values are converted here.
-    The all-naive batch, the usual one, costs one C-level scan more."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _session_zone(spark: SparkSession) -> dt.tzinfo:
+    """The session time zone resolved the way Spark resolves it
+    (``DateTimeUtils.getZoneId``): a region ID becomes a ``ZoneInfo``,
+    and a fixed offset, including the forms Spark accepts but tzdata
+    lacks (``+05:30``, ``GMT+8``, ``Z``, ``EST``), a ``dt.timezone``."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    zone = spark._jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(tz)
+    zone = zone.normalized()  # a fixed-rule region becomes its ZoneOffset
+    if zone.getRules().isFixedOffset():
+        return dt.timezone(dt.timedelta(seconds=zone.getTotalSeconds()))
+    return ZoneInfo(zone.getId())
 
-    ts, utc = pa.timestamp("us"), pa.timestamp("us", tz="UTC")
+
+def _wall_instants(wall: pa.Array, zone: dt.tzinfo) -> pa.Array:
+    """UTC instants of naive ``timestamp[us]`` wall times in ``zone``,
+    as Spark SQL's ``CAST`` maps them: a wall time in a DST fold takes
+    the earlier offset, one in a gap moves forward by the gap length
+    (zoneinfo with ``fold=0`` does both). The whole array goes through
+    ``assume_timezone`` twice, once resolving fold/gap values to the
+    earliest and once to the latest instant; only values where the two
+    disagree are resolved again one by one."""
+    if isinstance(zone, dt.timezone):
+        return pc.subtract(wall, pa.scalar(zone.utcoffset(None), pa.duration("us"))).cast(_UTC)
+    lo, hi = (
+        pc.assume_timezone(wall, zone.key, ambiguous=k, nonexistent=k).cast(_UTC)
+        for k in ("earliest", "latest")
+    )
+    odd = pc.fill_null(pc.not_equal(lo, hi), False)
+    if not pc.any(odd).as_py():
+        return lo
+    fixed = [
+        v.replace(tzinfo=zone, fold=0).astimezone(dt.timezone.utc).replace(tzinfo=None)
+        for v in pc.filter(wall, odd).to_pylist()
+    ]
+    return pc.replace_with_mask(lo, odd, pa.array(fixed, type=_UTC))
+
+
+def _time_array(vals: list, zone: dt.tzinfo) -> pa.Array:
+    """The one place a ``Time`` column's values become instants: Arrow
+    ``timestamp[us, UTC]`` where a naive datetime is a wall time in the
+    session ``zone`` (:func:`_session_zone`, resolved per
+    :func:`_wall_instants`) and an aware datetime is its UTC instant.
+    pyarrow alone would keep an aware value's wall clock and drop its
+    offset, storing ``12:00+05:30`` as ``12:00Z``, so aware values are
+    converted here. The all-naive batch, the usual one, costs one
+    C-level scan more."""
+    ts = pa.timestamp("us")
     if set(map(_TZINFO, filter(None, vals))) <= {None}:
-        return pc.assume_timezone(pa.array(vals, type=ts), tz).cast(utc)
+        return _wall_instants(pa.array(vals, type=ts), zone)
     naive = [v if v is None or v.tzinfo is None else None for v in vals]
     inst = [
         None if v is None or v.tzinfo is None
@@ -140,8 +190,7 @@ def _time_array(vals: list, tz: str):
         for v in vals
     ]
     return pc.coalesce(
-        pa.array(inst, type=utc),
-        pc.assume_timezone(pa.array(naive, type=ts), tz).cast(utc),
+        pa.array(inst, type=_UTC), _wall_instants(pa.array(naive, type=ts), zone)
     )
 
 
@@ -328,154 +377,69 @@ class Collector:
             cb(info)
 
     # -- A11-A14: date-partitioned store ---------------------------------
+    def _arrow_table(self, batch: _Batch) -> pa.Table:
+        """The batch as one Arrow table, the only encoding of a flush:
+        column types follow ``SPARK_TYPE`` (int64/float64/string/bool/
+        ``timestamp[us, UTC]``) and ``Time`` values are instants
+        (:func:`_time_array`, in the session zone read once per flush).
+        A value Arrow refuses raises here, and the flush reports it on
+        ``on_error`` like any failed put."""
+        zone = _session_zone(self.spark)
+        rows = batch.rows
+        cols = self._schemas[batch.schema_table]
+        return pa.Table.from_arrays(
+            [
+                _time_array([r[k] for r in rows], zone) if t is DataType.Time
+                else pa.array([r[k] for r in rows], type=_PA_TYPE[t])
+                for k, t in cols.items()
+            ],
+            names=list(cols),
+        )
+
     def _store(self, batch: _Batch) -> str:
+        """Write the batch's Arrow table as one object under
+        ``{YYYY/MM/DD/HH}/{table}/{uuid}`` through the store seam, so any
+        Hadoop URI works as the lake root (StoreS3.put / StoreFS.put
+        analog: StoreS3.ts:21-35, StoreFS.ts:31-39). Parquet is the
+        table's snappy bytes, put with no Spark job (its timestamp is
+        adjusted-to-UTC, so Spark reads TimestampType); csv is the
+        RFC-4180 typed-CSV encoding of the table's rows (Collector.ts:
+        290-308), so a naive ``Time`` value is the instant parquet
+        stores; any other format (orc) is a Spark write of
+        ``createDataFrame`` over the same table."""
         now = dt.datetime.now(dt.timezone.utc)  # flush-time UTC (Collector.ts:344)
         prefix = f"{now.year:04d}/{now.month:02d}/{now.day:02d}/{now.hour:02d}"
-        if self.config.sink_format == "csv":
-            ext = ".csv.gz" if self.config.batch_zip else ".csv"
-            key = f"{prefix}/{batch.table}/{batch.id}{ext}"
-            self._store_csv(batch, fsio.join(self.config.lake_dir, key))
-        else:
-            key = f"{prefix}/{batch.table}/{batch.id}"
-            if self.config.sink_format == "parquet":
-                try:
-                    # Fast path: serialize the batch to parquet bytes in
-                    # this process (pyarrow) and push them through the
-                    # store seam — no Spark job, no JVM round-trip. The
-                    # flush was the ingest bench's dominant pause
-                    # (0.2-0.35 s per 50k-row batch, all of it Spark job
-                    # latency for a single-task local write). The object
-                    # layout is unchanged: one part file under the same
-                    # {prefix}/{table}/{uuid}/ directory key, readable by
-                    # the same mergeSchema load. Any surprise
-                    # (DST-ambiguous wall times, missing pyarrow) falls
-                    # back to the Spark write.
-                    self._put_parquet_bytes(batch, key)
-                    return key
-                except ImportError:
-                    pass  # no pyarrow in this env: Spark path is correct
-                except Exception as exc:
-                    self._report(
-                        RuntimeError(
-                            f"pyarrow flush path failed, using spark write: {exc}"
-                        )
-                    )
-            schema = self.schema_of(batch.schema_table)
-            df = None
-            try:
-                # Arrow path: one columnar conversion + batched transfer,
-                # ~3-4x the row-tuple serializer on 200k-row batches.
-                # Column-wise extraction: pd.DataFrame(list-of-dicts)
-                # re-normalizes every row dict (~2s per 400k rows);
-                # per-column comprehensions skip that entirely.
-                import pandas as pd
+        table = self._arrow_table(batch)
+        fmt = self.config.sink_format
+        lake = fsio.lake_fs(self.spark, self.config.lake_dir)
+        if fmt == "csv":
+            from es_analytics_spark.sources.typed_csv import encode_typed_csv
 
-                names = list(self._schemas[batch.schema_table])
-                pdf = pd.DataFrame(
-                    {k: [r[k] for r in batch.rows] for k in names}, columns=names
-                )
-                df = self.spark.createDataFrame(pdf, schema)
-            except ImportError:
-                pass  # no pandas in this env: silent slow path is correct
-            except Exception as exc:
-                # A conversion failure is a real schema/value bug signal —
-                # surface it on the error channel, then degrade gracefully.
-                self._report(RuntimeError(f"arrow flush path failed, using row path: {exc}"))
-            if df is None:
-                df = self.spark.createDataFrame(
-                    [tuple(r.values()) for r in batch.rows], schema
-                )
-            df.write.mode("overwrite").format(self.config.sink_format).save(
-                fsio.join(self.config.lake_dir, key)
+            data = encode_typed_csv(table.to_pylist(), self._schemas[batch.schema_table])
+            if self.config.batch_zip:
+                data = gzip.compress(data, mtime=0)  # deterministic bytes (test goldens)
+            key = f"{prefix}/{batch.table}/{batch.id}.csv{'.gz' if self.config.batch_zip else ''}"
+            lake.put_bytes(fsio.join(self.config.lake_dir, key), data)
+            return key
+        key = f"{prefix}/{batch.table}/{batch.id}"
+        path = fsio.join(self.config.lake_dir, key)
+        if fmt == "parquet":
+            sink = pa.BufferOutputStream()
+            pq.write_table(table, sink, compression="snappy")
+            lake.put_bytes(
+                fsio.join(path, f"part-00000-{batch.id}.snappy.parquet"),
+                sink.getvalue().to_pybytes(),
             )
+        else:
+            df = self.spark.createDataFrame(table, self.schema_of(batch.schema_table))
+            df.write.mode("overwrite").format(fmt).save(path)
         return key
-
-    def _put_parquet_bytes(self, batch: _Batch, key: str) -> None:
-        """Serialize ``batch`` to one snappy parquet part file and put it
-        through the store seam (works on any Hadoop URI lake root).
-
-        Semantics mirror the Spark write exactly:
-
-        - column types follow SPARK_TYPE (int64/float64/string/bool/
-          timestamp[us]);
-        - naive datetimes are wall times in the SESSION time zone (what
-          ``spark.createDataFrame`` assumes): ``assume_timezone``
-          converts them to instants and raises on DST-ambiguous input
-          (→ caller falls back to the Spark path, which is the
-          authority on those);
-        - aware datetimes are their UTC instant, whatever their offset
-          (see :func:`_time_array`);
-        - the parquet timestamp is stored adjusted-to-UTC so Spark reads
-          it back as TimestampType (not NTZ), same as its own output.
-        """
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        _PA_TYPE = {
-            DataType.String: pa.string(),
-            DataType.UUID: pa.string(),
-            DataType.Integer: pa.int64(),
-            DataType.Float: pa.float64(),
-            DataType.Boolean: pa.bool_(),
-        }
-        tz = self.spark.conf.get("spark.sql.session.timeZone")
-        cols = self._schemas[batch.schema_table]
-        rows = batch.rows
-        arrays, fields = [], []
-        for name, dtype in cols.items():
-            vals = [r[name] for r in rows]
-            if dtype is DataType.Time:
-                arr = _time_array(vals, tz)
-            else:
-                arr = pa.array(vals, type=_PA_TYPE[dtype])
-            arrays.append(arr)
-            fields.append(pa.field(name, arr.type, nullable=True))
-        table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-        sink = pa.BufferOutputStream()
-        pq.write_table(table, sink, compression="snappy")
-        path = fsio.join(
-            self.config.lake_dir,
-            key,
-            f"part-00000-{batch.id}.snappy.parquet",
-        )
-        fsio.lake_fs(self.spark, self.config.lake_dir).put_bytes(
-            path, sink.getvalue().to_pybytes()
-        )
-
-    def _store_csv(self, batch: _Batch, path: str) -> None:
-        """RFC-4180 CSV with '#'-prefixed typed header (Collector.ts:290-308,
-        lake format spec README.md:125-148). Single-writer compat sink
-        through the store seam — StoreS3.put / StoreFS.put analog
-        (StoreS3.ts:21-35, StoreFS.ts:31-39): any Hadoop URI works as the
-        lake root. The distributed variant is sinks.write_typed_csv."""
-        from es_analytics_spark.sources.typed_csv import encode_typed_csv
-
-        cols = self._schemas[batch.schema_table]
-        data = encode_typed_csv(batch.rows, cols)
-        if self.config.batch_zip:
-            buf = io.BytesIO()
-            # mtime=0 for deterministic bytes (test goldens)
-            with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-                gz.write(data)
-            data = buf.getvalue()
-        fsio.lake_fs(self.spark, self.config.lake_dir).put_bytes(path, data)
 
     def _emit_error(self, exc: Exception) -> None:
         if not self.on_error:
             raise exc
         for cb in self.on_error:
             cb(exc)
-
-    def _report(self, exc: Exception) -> None:
-        """Non-fatal error reporting: notify on_error listeners if any,
-        else warn — never raise (callers have a working fallback)."""
-        if self.on_error:
-            for cb in self.on_error:
-                cb(exc)
-        else:
-            import warnings
-
-            warnings.warn(str(exc), RuntimeWarning, stacklevel=3)
 
     # -- read-back -------------------------------------------------------
     def table(self, name: str):

@@ -67,6 +67,7 @@ boundary in ``sources/fsio.py``.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import uuid
@@ -2802,7 +2803,7 @@ def _stats_envelope(members: list[dict | None], drop=frozenset()) -> dict:
     return out
 
 
-# time-dependent SQL functions a DML condition is allowed to use — they
+# time-dependent SQL functions a DML expression is allowed to use — they
 # get pinned to literals once up front (see _pin_time_functions); bare
 # current_date / current_timestamp (no parens) are valid ANSI SQL, but
 # bare `now` is NOT a Spark function — only now() matches
@@ -2810,7 +2811,7 @@ _TIME_FN_RE = re.compile(
     r"\b(now)\s*\(\s*\)|\b(current_timestamp|localtimestamp|current_date)\b(\s*\(\s*\))?",
     re.IGNORECASE,
 )
-# genuinely non-deterministic functions: never valid in a DML condition,
+# genuinely non-deterministic functions: never valid in a DML expression,
 # which several separate Spark jobs of one operation re-evaluate
 _NONDET_FN_RE = re.compile(
     r"\b(rand|randn|random|uuid|shuffle|monotonically_increasing_id)\s*\(",
@@ -2827,14 +2828,23 @@ def _mask_quoted(sql: str) -> str:
     return _QUOTED_RE.sub(lambda m: " " * len(m.group(0)), sql)
 
 
-def _pin_time_functions(spark: SparkSession, sql: str) -> str:
-    """Rewrite time-dependent functions in a condition SQL string to
-    literals evaluated ONCE, so the separate Spark jobs of one DML
-    operation (the touched-part probe, the ``cdc-`` change-part write,
-    the survivor rewrite) all see the same cutoff. Without pinning, a
-    TTL condition like ``ts < now()`` drifts between the jobs: a row
-    that expires after the change part is written is dropped by the
-    survivor rewrite but never reaches the change feed or the receipt.
+_NOW_SQL = (
+    "SELECT CAST(current_timestamp() AS STRING) AS ts, "
+    "CAST(localtimestamp() AS STRING) AS lts, "
+    "CAST(current_date() AS STRING) AS d"
+)
+
+
+def _pin_time_functions(spark: SparkSession, sql: str, clock=None) -> str:
+    """Rewrite time-dependent functions in a DML SQL string to literals
+    evaluated ONCE, so the separate Spark jobs of one DML operation (the
+    touched-part probe, the ``cdc-`` change-part write, the survivor
+    rewrite) all see the same instant. Without pinning, a TTL condition
+    like ``ts < now()`` drifts between the jobs: a row that expires
+    after the change part is written is dropped by the survivor rewrite
+    but never reaches the change feed or the receipt. ``clock`` (a
+    cached ``_NOW_SQL`` row) is shared by every expression of one
+    operation.
 
     Genuinely non-deterministic functions (rand/uuid/...) raise — no
     single evaluation point can make them consistent across jobs.
@@ -2852,18 +2862,14 @@ def _pin_time_functions(spark: SparkSession, sql: str) -> str:
     masked = _mask_quoted(sql)
     if _NONDET_FN_RE.search(masked):
         raise ValueError(
-            "condition uses a non-deterministic function (rand/uuid/...); "
+            f"{sql!r} uses a non-deterministic function (rand/uuid/...); "
             "the separate jobs of one DML operation would each evaluate "
             "it differently"
         )
     matches = list(_TIME_FN_RE.finditer(masked))
     if not matches:
         return sql
-    row = spark.sql(
-        "SELECT CAST(current_timestamp() AS STRING) AS ts, "
-        "CAST(localtimestamp() AS STRING) AS lts, "
-        "CAST(current_date() AS STRING) AS d"
-    ).first()
+    row = clock() if clock else spark.sql(_NOW_SQL).first()
 
     def _lit(m: re.Match) -> str:
         fn = (m.group(1) or m.group(2)).lower()
@@ -2883,27 +2889,32 @@ def _pin_time_functions(spark: SparkSession, sql: str) -> str:
     return "".join(out)
 
 
-def _dml_condition(spark: SparkSession, condition, op: str):
-    """``condition`` (SQL string or Column) as a Column every job of one
-    DML operation evaluates identically: a string has its time functions
-    pinned (:func:`_pin_time_functions`). A Column's expression tree is
-    not rewritable from Python, so one embedding a time-dependent or
-    non-deterministic function raises instead of being evaluated at
-    several different wall-clock times."""
+def _dml_pinner(spark: SparkSession, op: str):
+    """``pin(expr, what="condition")``: a DML condition or assignment
+    (SQL string or Column) as a Column every job of the operation
+    evaluates identically: strings have their time functions pinned
+    (:func:`_pin_time_functions`) on one clock per operation. A Column's
+    expression tree is not rewritable from Python, so one embedding a
+    time-dependent or non-deterministic function raises instead."""
     from pyspark.sql import Column, functions as F
 
-    if isinstance(condition, str):
-        return F.expr(_pin_time_functions(spark, condition))
-    if not isinstance(condition, Column):
-        raise TypeError(f"{op}: condition must be a SQL string or Column")
-    text = str(condition)
-    if _TIME_FN_RE.search(text) or _NONDET_FN_RE.search(text):
-        raise ValueError(
-            f"{op}: Column condition uses a time-dependent or "
-            "non-deterministic function; pass the condition as a SQL "
-            "string so the time can be pinned to a literal once"
-        )
-    return condition
+    clock = functools.cache(lambda: spark.sql(_NOW_SQL).first())
+
+    def pin(expr, what: str = "condition"):
+        if isinstance(expr, str):
+            return F.expr(_pin_time_functions(spark, expr, clock))
+        if not isinstance(expr, Column):
+            raise TypeError(f"{op}: {what} must be a SQL string or Column")
+        text = str(expr)
+        if _TIME_FN_RE.search(text) or _NONDET_FN_RE.search(text):
+            raise ValueError(
+                f"{op}: Column {what} uses a time-dependent or "
+                f"non-deterministic function; pass the {what} as a SQL "
+                "string so the time can be pinned to a literal once"
+            )
+        return expr
+
+    return pin
 
 
 def _rewrite_touched(
@@ -2967,8 +2978,8 @@ def delete_where(
     SQL expression string or a Column; time functions in a string
     (``ts < now()``) are pinned to one literal for the whole operation,
     and a non-deterministic condition, or a Column embedding a time
-    function, raises (:func:`_dml_condition` — the same rule covers
-    :func:`update_where` and the clause conditions of the merges).
+    function, raises (:func:`_dml_pinner` — the same rule covers the
+    conditions and assignments of :func:`update_where` and the merges).
     Returns {"version", "rows_deleted", "parts_rewritten"}.
 
     **Change-data feed**: the deleted rows are written to a ``cdc`` part
@@ -2997,7 +3008,7 @@ def delete_where(
     subset), and the conflict rules are identical to the rewrite path."""
     from pyspark.sql import functions as F
 
-    cond = _dml_condition(spark, condition, "delete_where")
+    cond = _dml_pinner(spark, "delete_where")(condition)
     # SQL DELETE three-valued semantics: delete exactly where the
     # predicate is TRUE. Without the coalesce, rows where it evaluates
     # to NULL would be excluded from BOTH the matched/cdc set
@@ -3078,7 +3089,13 @@ def update_where(
     - assigning a column the schema lacks raises — an UPDATE never
       evolves a schema;
     - three-valued predicate: rows where the condition is NULL are NOT
-      updated (same coalesce as :func:`delete_where`).
+      updated (same coalesce as :func:`delete_where`);
+    - time functions in the condition and in string assignments
+      (``seen = now()``) are pinned to one instant for the whole
+      operation, so the table and the change feed store the same value;
+      a non-deterministic assignment (``rand()``), or a Column one
+      embedding a time function, raises before anything is written
+      (:func:`_dml_pinner`).
 
     **Change-data feed**: the commit records delete(old) + insert(new)
     change parts, so :func:`table_changes_cdf` shows the update as
@@ -3094,7 +3111,9 @@ def update_where(
 
     if not assignments:
         raise ValueError("update_where: assignments must be non-empty")
-    cond = _dml_condition(spark, condition, "update_where")
+    pin = _dml_pinner(spark, "update_where")
+    cond = pin(condition)
+    assigned = {c: pin(e, "assignment") for c, e in assignments.items()}
     cond = F.coalesce(cond.cast("boolean"), F.lit(False))
     fs = lake_fs(spark, path)
     v0, live = _snapshot(fs, path)
@@ -3117,9 +3136,8 @@ def update_where(
 
         sel = []
         for c in df.columns:
-            if c in assignments:
-                e = assignments[c]
-                e = F.expr(e) if isinstance(e, str) else e
+            if c in assigned:
+                e = assigned[c]
                 if schema is not None:
                     e = e.cast(T.StructType.fromJson(
                         {"type": "struct",
@@ -3362,8 +3380,6 @@ def merge_upsert(
     NULL keys. GroupBy-derived update sets (rollup maintenance) need
     the null-safe form — groupBy emits one NULL group, so key matching
     must agree with grouping semantics."""
-    import functools
-
     from pyspark.sql import functions as F
 
     def _key_join(left, right, how: str):
@@ -3392,13 +3408,15 @@ def merge_upsert(
                 f"merge_upsert: drop_cols {missing} are not in the updates frame"
             )
 
+    pin = _dml_pinner(spark, "merge_upsert")
+
     def _cond(c, default: bool):
         # SQL three-valued semantics: a clause fires exactly where its
         # condition is TRUE (NULL is not a match) — same coalesce as
         # delete_where's predicate
         if c is None:
             return F.lit(default)
-        c = _dml_condition(spark, c, "merge_upsert")
+        c = pin(c)
         return F.coalesce(c.cast("boolean"), F.lit(False))
 
     fs = lake_fs(spark, path)
@@ -3686,6 +3704,9 @@ def merge(
     conditions fire nothing (SQL three-valued logic, the
     :func:`delete_where` coalesce). Assigned values cast to the
     committed column type (store-assignment, as :func:`update_where`).
+    Time functions in conditions and ``set``/``values`` expressions are
+    pinned to one instant for the whole operation, and non-deterministic
+    ones raise, as in :func:`update_where`.
 
     Semantics vs :func:`merge_upsert`: PER TARGET ROW (Delta's) — two
     target rows sharing a key are each updated; merge_upsert's
@@ -3711,8 +3732,6 @@ def merge(
     one new part (updated rows + inserts) + the CDF delete part.
     Untouched parts are never rewritten; an unconditional BY-SOURCE
     clause touches every part by definition (as in Delta)."""
-    import functools
-
     from pyspark.sql import functions as F, types as T
 
     matched = list(matched or [])
@@ -3758,14 +3777,21 @@ def merge(
                     f"source row (s.) — no source row matched: {e!r}"
                 )
 
-    # pin each clause condition ONCE: pass 1 and pass 2 both evaluate it
+    # pin every clause condition and set/values expression ONCE, on one
+    # clock: pass 1 and pass 2 both evaluate them
+    pin = _dml_pinner(spark, "merge")
+
+    def _pinned(cl):
+        out = dict(cl)
+        if cl.get("condition") is not None:
+            out["condition"] = pin(cl["condition"])
+        for k in ("set", "values"):
+            if cl.get(k):
+                out[k] = {c: pin(e, "assignment") for c, e in cl[k].items()}
+        return out
+
     matched, not_matched, by_source = (
-        [
-            {**cl, "condition": _dml_condition(spark, cl["condition"], "merge")}
-            if cl.get("condition") is not None else cl
-            for cl in clauses
-        ]
-        for clauses in (matched, not_matched, by_source)
+        [_pinned(cl) for cl in clauses] for clauses in (matched, not_matched, by_source)
     )
 
     def _cond(c, default=True):

@@ -454,64 +454,125 @@ _TIME_VALUE = st.one_of(
 )
 
 
-def _stored_micros(spark, lake: str, rows: list[dict], spark_path: bool) -> dict:
-    """Flush ``rows`` into a fresh lake through the pyarrow path, or the
-    Spark path when ``spark_path``; return {i: stored epoch µs}."""
-    cfg = CollectorConfig(lake_dir=lake, column_types={"tz_events": {"ts": DataType.Time}})
-    col = Collector(spark, cfg)
-    if spark_path:
-        def _no_pyarrow(*_a, **_kw):
-            raise ImportError("pyarrow path disabled")
+def _epoch_us(v: dt.datetime) -> int:
+    return (v - dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)) // dt.timedelta(microseconds=1)
 
-        col._put_parquet_bytes = _no_pyarrow
-    col.track_many("tz_events", rows)
+
+def _cast_micros(spark, vals: list) -> dict:
+    """{i: the instant Spark SQL gives ``vals[i]``}: a naive value is
+    ``unix_micros(CAST('<wall>' AS TIMESTAMP))`` in the session zone, an
+    aware one its UTC instant, None stays None."""
+    naive = {i: v for i, v in enumerate(vals) if v is not None and v.tzinfo is None}
+    cast = {}
+    if naive:
+        row = spark.sql("SELECT " + ", ".join(
+            f"unix_micros(CAST('{v.isoformat(sep=' ')}' AS TIMESTAMP)) AS c{i}"
+            for i, v in naive.items()
+        )).first()
+        cast = {i: row[f"c{i}"] for i in naive}
+    return {
+        i: None if v is None else cast[i] if v.tzinfo is None else _epoch_us(v)
+        for i, v in enumerate(vals)
+    }
+
+
+def _stored_micros(spark, lake: str, vals: list, fmt: str = "parquet") -> dict:
+    """Flush ``{"i": i, "ts": vals[i]}`` rows into a fresh ``fmt`` lake
+    and return {i: stored epoch µs}; the flush must report no error."""
+    cfg = CollectorConfig(
+        lake_dir=lake, sink_format=fmt, batch_zip=False,
+        column_types={"tz_events": {"ts": DataType.Time}},
+    )
+    col = Collector(spark, cfg)
+    errors = []
+    col.on_error.append(errors.append)
+    col.track_many("tz_events", [{"i": i, "ts": v} for i, v in enumerate(vals)])
     col.stop()
+    assert errors == []
     got = col.table("tz_events").selectExpr("i", "unix_micros(ts) AS us").collect()
     return {r["i"]: r["us"] for r in got}
+
+
+@pytest.fixture
+def session_zone(spark):
+    """Set ``spark.sql.session.timeZone`` for one test, then restore it."""
+    old = spark.conf.get("spark.sql.session.timeZone")
+    yield lambda tz: spark.conf.set("spark.sql.session.timeZone", tz)
+    spark.conf.set("spark.sql.session.timeZone", old)
 
 
 @settings(max_examples=12, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(vals=st.lists(_TIME_VALUE, min_size=1, max_size=12))
-def test_pyarrow_flush_stores_the_spark_path_instants(spark, tmp_path, vals):
-    """The pyarrow flush stores the same instant as the Spark write for
-    a batch mixing naive wall times (session time zone), aware values
-    at several offsets and None: an aware value is its UTC instant, not
-    its wall clock read as UTC."""
-    rows = [{"i": i, "ts": v} for i, v in enumerate(vals)]
-    run = uuid.uuid4().hex
-    fast = _stored_micros(spark, str(tmp_path / f"{run}-arrow"), rows, False)
-    slow = _stored_micros(spark, str(tmp_path / f"{run}-spark"), rows, True)
-    assert fast == slow
-    for i, v in enumerate(vals):
-        if v is not None and v.tzinfo is not None:
-            assert fast[i] == (v - dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)) // dt.timedelta(microseconds=1)
+def test_pyarrow_flush_stores_the_spark_path_instants(spark, tmp_path, session_zone, vals):
+    """The pyarrow flush stores the instant Spark SQL gives each value
+    of a batch mixing naive wall times, aware values at several offsets
+    and None: a naive value is ``CAST('<wall>' AS TIMESTAMP)`` in the
+    session zone (America/New_York, DST folds and gaps included), an
+    aware value its UTC instant, not its wall clock read as UTC."""
+    session_zone("America/New_York")
+    stored = _stored_micros(spark, str(tmp_path / uuid.uuid4().hex), vals)
+    assert stored == _cast_micros(spark, vals)
 
 
-@pytest.mark.parametrize("wall", [
-    dt.datetime(2024, 11, 3, 1, 30),   # repeated hour: ambiguous
-    dt.datetime(2024, 3, 10, 2, 30),   # skipped hour: nonexistent
-])
-def test_pyarrow_flush_refuses_dst_gap_and_fold(spark, tmp_path, wall):
-    """A naive wall time the session zone cannot map to one instant
-    makes the pyarrow path raise; the flush then falls back to the
-    Spark write and still stores the row."""
-    from es_analytics_spark.collector import _time_array
+_FOLD = dt.datetime(2024, 11, 3, 1, 30)  # repeated hour in America/New_York
+_GAP = dt.datetime(2024, 3, 10, 2, 30)   # skipped hour in America/New_York
 
-    with pytest.raises(Exception):
-        _time_array([dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc), wall],
-                    "America/New_York")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        col = Collector(spark, CollectorConfig(lake_dir=str(tmp_path)))
-        errors = []
-        col.on_error.append(errors.append)
-        col.track_many("dst", [{"i": 0, "ts": wall}])
-        col.stop()
-        assert any("pyarrow flush path failed" in str(e) for e in errors)
-        assert col.table("dst").count() == 1
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+@pytest.mark.parametrize("wall", [_FOLD, _GAP])
+def test_pyarrow_flush_stores_jvm_instant_for_dst_gap_and_fold(
+    spark, tmp_path, session_zone, wall
+):
+    """A naive wall time in a DST fold or gap of the session zone stores
+    the instant Spark SQL's ``CAST`` gives it (the fold's earlier
+    offset; the gap moved forward by its length), with no ``on_error``
+    report, alone or beside an aware value."""
+    session_zone("America/New_York")
+    vals = [wall, dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)]
+    stored = _stored_micros(spark, str(tmp_path / "lake"), vals)
+    assert stored == _cast_micros(spark, vals)
+    assert stored[0] == {_FOLD: 1730611800000000, _GAP: 1710055800000000}[wall]
+    assert _stored_micros(spark, str(tmp_path / "alone"), vals[:1]) == {0: stored[0]}
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York", "Asia/Kolkata", "+05:30", "GMT+8"])
+def test_flush_formats_store_the_cast_instant(spark, tmp_path, session_zone, tz):
+    """Under each session zone, including offset forms tzdata lacks
+    (``+05:30``, ``GMT+8``), the parquet, orc and csv sinks store the
+    same instants, and each equals Spark SQL's ``CAST`` of the wall
+    time: the New York fold and gap wall times, an ordinary wall time,
+    an aware value and None. Whole seconds, as csv keeps milliseconds."""
+    session_zone(tz)
+    vals = [
+        _FOLD, _GAP, dt.datetime(2024, 6, 1, 12),
+        dt.datetime(2024, 6, 1, 12, tzinfo=ZoneInfo("Asia/Kolkata")), None,
+    ]
+    want = _cast_micros(spark, vals)
+    for fmt in ("parquet", "orc", "csv"):
+        assert _stored_micros(spark, str(tmp_path / fmt), vals, fmt) == want, fmt
+
+
+def test_parquet_flush_runs_no_spark_job(spark, tmp_path):
+    """A parquet flush is one Arrow encoding and one staged put: no
+    Spark job runs between ``track_many`` and ``stop``, while the orc
+    flush of the same batch, as a control, does run one."""
+    sc = spark.sparkContext
+    recs = [{"i": i, "ts": dt.datetime(2024, 1, 1), "s": f"x{i}"} for i in range(250)]
+    jobs = {}
+    for fmt in ("parquet", "orc"):
+        group = f"collector-flush-{fmt}-{uuid.uuid4().hex}"
+        col = Collector(spark, CollectorConfig(
+            lake_dir=str(tmp_path / fmt), sink_format=fmt, batch_record_limit=100
+        ))
+        sc.setJobGroup(group, "collector flush")
+        try:
+            col.track_many("jobs", recs)
+            col.stop()
+        finally:
+            sc.setJobGroup("", "")
+        jobs[fmt] = list(sc.statusTracker().getJobIdsForGroup(group))
+        assert col.table("jobs").count() == 250
+    assert jobs["parquet"] == [] and jobs["orc"]
 
 
 @pytest.mark.parametrize("uri", [False, True])

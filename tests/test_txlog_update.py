@@ -188,3 +188,83 @@ def test_update_validates_columns_on_preschema_tables(spark, tmp_path):
     assert sorted(x["k"] for x in read_table(spark, path).collect()) == [
         3, 4, 5, 6, 7, 8, 9, 100, 101, 102
     ]
+
+
+def test_update_pins_time_assignment_across_jobs(spark, tmp_path, monkeypatch):
+    """``SET seen = current_timestamp()`` is evaluated by separate jobs
+    of one update: the ``cdc-`` insert part and the survivor rewrite.
+    With every ``cdc-`` write delayed, the table and the change feed
+    still carry one value, because the assignment is pinned to a
+    literal once per operation."""
+    import time
+
+    path = str(tmp_path / "t")
+    append(spark, path, spark.range(0, 5).select(
+        "id", F.lit(None).cast("timestamp").alias("seen")
+    ))
+    write_part = txlog._write_part
+
+    def delayed(spark_, path_, df, schema_json=None, prefix=""):
+        part = write_part(spark_, path_, df, schema_json, prefix)
+        if prefix == "cdc-":
+            time.sleep(1.5)
+        return part
+
+    monkeypatch.setattr(txlog, "_write_part", delayed)
+    r = update_where(spark, path, {"seen": "current_timestamp()"}, "id < 5")
+    monkeypatch.undo()
+    assert r["rows_updated"] == 5
+    table = {row["seen"] for row in read_table(spark, path).collect()}
+    feed = table_changes_cdf(spark, path, r["version"] - 1, r["version"])
+    inserted = {row["seen"] for row in feed.filter("_change_type = 'insert'").collect()}
+    assert len(table) == 1 and None not in table
+    assert inserted == table
+
+
+def test_dml_refuses_nondeterministic_assignment(spark, tmp_path):
+    """A ``rand()`` assignment, or a Column assignment embedding a time
+    function, raises before anything is written: through update_where,
+    merge ``set``/``values`` and SQL ``UPDATE``."""
+    from es_analytics_spark.sqldml import execute_sql
+
+    path = _base(spark, tmp_path)
+    v0 = current_version(spark, path)
+    with pytest.raises(ValueError, match="non-deterministic"):
+        update_where(spark, path, {"x": "rand()"}, "k < 5")
+    with pytest.raises(ValueError, match="pinned"):
+        update_where(spark, path, {"x": F.unix_timestamp(F.current_timestamp())}, "k < 5")
+    src = spark.createDataFrame([(1, "a", 1.0), (42, "b", 2.0)], "k long, val string, x double")
+    with pytest.raises(ValueError, match="non-deterministic"):
+        txlog.merge(spark, path, src, ["k"], matched=[{"action": "update", "set": {"x": "rand()"}}])
+    with pytest.raises(ValueError, match="non-deterministic"):
+        txlog.merge(
+            spark, path, src, ["k"],
+            not_matched=[{"action": "insert", "values": {"k": "s.k", "x": "randn()"}}],
+        )
+    txlog.register_table(spark, "t_nondet_assign", path)
+    try:
+        with pytest.raises(ValueError, match="non-deterministic"):
+            execute_sql(spark, "UPDATE t_nondet_assign SET x = rand() WHERE k < 5")
+    finally:
+        spark.catalog.dropTempView("t_nondet_assign")
+    assert current_version(spark, path) == v0
+    assert sorted(r["x"] for r in read_table(spark, path).collect()) == [float(k) for k in range(10)]
+
+
+def test_merge_pins_time_in_set_and_values(spark, tmp_path):
+    """Time functions in a merge's ``set`` and ``values`` are pinned on
+    one clock with its conditions: the updated and the inserted rows of
+    one merge carry the same instant."""
+    path = str(tmp_path / "t")
+    append(spark, path, spark.range(0, 3).select(
+        F.col("id").alias("k"), F.lit(None).cast("timestamp").alias("seen")
+    ))
+    src = spark.range(1, 5).select(F.col("id").alias("k"))
+    r = txlog.merge(
+        spark, path, src, ["k"],
+        matched=[{"action": "update", "set": {"seen": "now()"}, "condition": "t.k < now()::long"}],
+        not_matched=[{"action": "insert", "values": {"k": "s.k", "seen": "current_timestamp()"}}],
+    )
+    got = {row["k"]: row["seen"] for row in read_table(spark, path).collect()}
+    assert got[0] is None and r["version"] == 2
+    assert len({got[k] for k in (1, 2, 3, 4)}) == 1 and got[1] is not None
