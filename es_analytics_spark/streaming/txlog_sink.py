@@ -45,9 +45,9 @@ Two sink shapes share the machinery:
 - :func:`stream_to_txlog` — append-only (event/fact streams): one
   txlog ``append`` per epoch.
 - :func:`stream_merge_to_txlog` — CDC-shaped (keyed upserts): one
-  txlog ``merge_upsert`` per epoch, so the table converges to
-  latest-row-per-key with full snapshot isolation and a row-level
-  change feed.
+  txlog ``merge_upsert`` per epoch (``txlog.merge`` when tombstone
+  clauses are set), so the table converges to latest-row-per-key with
+  full snapshot isolation and a row-level change feed.
 
 Reference lifecycle parity: this is the ``flushBatch → storeBatch``
 hand-off (Collector.ts:310-350) upgraded from fire-and-forget puts to
@@ -187,13 +187,23 @@ class _EpochCommitter(_SeenSourceCache):
             raise
 
 
+#: staged per-event clause flags of the tombstone sink (see
+#: :meth:`_MergeEpochCommitter._stage`)
+_DEL, _INS = "__cdc_delete", "__cdc_insert"
+
+
 class _MergeEpochCommitter(_SeenSourceCache):
     """foreachBatch callable for the CDC-shaped sink: each epoch MERGEs
     into the txlog table (latest row per key wins within the epoch,
     ordered by ``order_col``; ties on it break by a content hash of the
     full row, so the winner is a deterministic function of the epoch's
-    DATA — never of task/shuffle order). Exactly-once has two layers:
-    the source stamp skips a replayed epoch whose merge already
+    DATA — never of task/shuffle order). Without clauses the epoch is
+    one ``txlog.merge_upsert`` (key-replace). With tombstone clauses it
+    is one ``txlog.merge``: each condition is staged as a boolean
+    column over the event row, matched rows delete where the delete
+    flag holds and otherwise update every payload column, and unmatched
+    rows insert where the insert flag holds. Exactly-once has two
+    layers: the source stamp skips a replayed epoch whose merge already
     committed, and the merge itself is idempotent (same keys → same
     replacement rows), so even a skipped stamp converges. A
     CommitConflict (a concurrent compact/overwrite/merge landed mid-CAS)
@@ -201,14 +211,20 @@ class _MergeEpochCommitter(_SeenSourceCache):
     parts are vacuum fodder, the standard OCC retry."""
 
     def __init__(self, path: str, stream_id: str, keys: list[str], order_col: str,
-                 evolve: bool, merge_clauses: dict | None = None):
+                 evolve: bool, when_matched_delete=None, when_not_matched_insert=None,
+                 drop_cols: list[str] | None = None):
         super().__init__(path, stream_id)
         self.keys = keys
         self.order_col = order_col
         self.evolve = evolve
-        # clause-level MERGE pass-through (tombstone handling): forwarded
-        # verbatim to txlog.merge_upsert every epoch
-        self.merge_clauses = merge_clauses or {}
+        self.when_matched_delete = when_matched_delete
+        self.when_not_matched_insert = when_not_matched_insert
+        self.drop_cols = list(drop_cols or [])
+        self.has_clauses = (
+            when_matched_delete is not None
+            or when_not_matched_insert is not None
+            or bool(self.drop_cols)
+        )
 
     def __call__(self, batch: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window as W, functions as F
@@ -231,13 +247,13 @@ class _MergeEpochCommitter(_SeenSourceCache):
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
+        txn = (self.stream_id, batch_id)
+        # clause conditions are pinned and staged once per epoch, so a
+        # re-run after a conflict evaluates them identically
+        source = self._stage(spark, latest) if self.has_clauses else None
         for attempt in range(5):
             try:
-                txlog.merge_upsert(
-                    spark, self.path, latest, self.keys,
-                    evolve=self.evolve, txn=(self.stream_id, batch_id),
-                    **self.merge_clauses,
-                )
+                self._merge(spark, latest, source, txn)
                 self._note_committed(batch_id)
                 return
             except txlog.CommitConflict:
@@ -251,6 +267,55 @@ class _MergeEpochCommitter(_SeenSourceCache):
         raise txlog.CommitConflict(
             f"epoch {epoch_source(self.stream_id, batch_id)}: merge kept "
             "conflicting after 5 re-runs"
+        )
+
+    def _stage(self, spark, latest: DataFrame) -> DataFrame:
+        """The merge source of a tombstone epoch: the payload (event
+        columns minus ``drop_cols``) plus the two clause flags, each
+        condition evaluated over the event row with its time functions
+        pinned (non-deterministic ones raise). NULL is not a match; an
+        absent condition never deletes and always inserts."""
+        from pyspark.sql import functions as F
+
+        pin = txlog._dml_pinner(spark, "stream_merge_to_txlog")
+
+        def flag(cond, default: bool):
+            if cond is None:
+                return F.lit(default)
+            return F.coalesce(pin(cond).cast("boolean"), F.lit(False))
+
+        return latest.select(
+            *[c for c in latest.columns if c not in self.drop_cols],
+            flag(self.when_matched_delete, False).alias(_DEL),
+            flag(self.when_not_matched_insert, True).alias(_INS),
+        )
+
+    def _merge(self, spark, latest: DataFrame, source: DataFrame | None,
+               txn: tuple[str, int]) -> None:
+        if source is None:
+            txlog.merge_upsert(
+                spark, self.path, latest, self.keys, evolve=self.evolve, txn=txn
+            )
+            return
+        payload = [c for c in source.columns if c not in (_DEL, _INS)]
+        # the payload passes the validation a key-replace upsert of it
+        # would: the same drift raises the same SchemaMismatchError
+        table = txlog._committed_schema(
+            lake_fs(spark, self.path), self.path,
+            txlog.current_version(spark, self.path),
+        )
+        txlog._merge_schema(table, source.select(*payload), self.evolve)
+        row = {c: f"s.`{c}`" for c in payload}
+        txlog.merge(
+            spark, self.path, source, self.keys,
+            matched=[
+                {"action": "delete", "condition": f"s.`{_DEL}`"},
+                {"action": "update", "set": row},
+            ],
+            not_matched=[
+                {"action": "insert", "values": row, "condition": f"s.`{_INS}`"}
+            ],
+            evolve=self.evolve, txn=txn,
         )
 
 
@@ -276,25 +341,32 @@ def stream_merge_to_txlog(
     :class:`_MergeEpochCommitter` for the exactly-once story.
 
     **Tombstones**: a CDC stream that carries deletes as flagged rows
-    passes the clause surface through — e.g.
+    passes conditions over the event row — e.g.
     ``when_matched_delete="_deleted"``,
     ``when_not_matched_insert="NOT _deleted"``,
-    ``drop_cols=["_deleted"]`` — so a tombstone whose key is live
-    DELETES the row (a row-level delete on the change feed) and a
-    tombstone for a never-seen key is dropped instead of inserted; the
-    flag column never enters the table schema. Per-key ordering still
-    applies first: the epoch's LATEST event per key (by ``order_col``)
-    decides whether that key upserts or deletes."""
-    clauses = {}
-    if when_matched_delete is not None:
-        clauses["when_matched_delete"] = when_matched_delete
-    if when_not_matched_insert is not None:
-        clauses["when_not_matched_insert"] = when_not_matched_insert
-    if drop_cols:
-        clauses["drop_cols"] = list(drop_cols)
+    ``drop_cols=["_deleted"]`` — and each epoch becomes one
+    ``txlog.merge``: a tombstone whose key is live DELETES the row (a
+    row-level delete on the change feed), a tombstone for a never-seen
+    key is dropped instead of inserted, and the ``drop_cols`` (columns
+    only the conditions read) never enter the table schema. A drop
+    column that is a key or is not in ``df`` raises here, before the
+    query starts. Per-key ordering still applies first: the epoch's
+    LATEST event per key (by ``order_col``) decides whether that key
+    upserts or deletes."""
+    drop_cols = list(drop_cols or [])
+    bad = sorted(set(drop_cols) & set(keys))
+    if bad:
+        raise ValueError(f"stream_merge_to_txlog: drop_cols may not contain keys {bad}")
+    missing = sorted(set(drop_cols) - set(df.columns))
+    if missing:
+        raise ValueError(
+            f"stream_merge_to_txlog: drop_cols {missing} are not in the updates frame"
+        )
     committer = _MergeEpochCommitter(
         path, stream_id or checkpoint_dir, keys, order_col, evolve,
-        merge_clauses=clauses,
+        when_matched_delete=when_matched_delete,
+        when_not_matched_insert=when_not_matched_insert,
+        drop_cols=drop_cols,
     )
     writer = (
         df.writeStream.foreachBatch(committer)

@@ -2746,7 +2746,7 @@ def _union_schema_json(a: dict | None, b: dict | None) -> dict | None:
 
 def _commute_past_appends_only(
     fs, path: str, payload: dict, v0: int, max_retries: int, op: str
-) -> dict:
+) -> int:
     """CAS loop for row-level rewrites (delete/merge):
     **WriteSerializable** re-attach rule — an intervening BLIND APPEND
     commutes (Delta's default level: the rewrite read its snapshot, so
@@ -2757,12 +2757,12 @@ def _commute_past_appends_only(
     this transaction rewrote. The re-attached commit records the UNION
     of its schema and the intervening appends' — neither a concurrent
     evolution nor this rewrite's own ``evolve=True`` columns can be
-    silently reverted by losing the CAS."""
+    silently reverted by losing the CAS. Returns the committed version."""
     v = v0
     for _ in range(max_retries):
         v += 1
         if _try_commit(fs, path, v, payload):
-            return {"version": v}
+            return v
         latest = _latest_version(fs, path)
         if _txn_already_committed(fs, path, payload, v - 1, latest):
             raise CommitConflict(
@@ -2785,6 +2785,64 @@ def _commute_past_appends_only(
                 payload["schema"] = merged
         v = max(v, latest)
     raise CommitConflict(f"{op} lost the CAS {max_retries} times under {path}")
+
+
+def _commit_rewrite(
+    spark: SparkSession, fs, path: str, payload: dict, v0: int,
+    max_retries: int, op: str, expect_version: int | None = None,
+) -> int:
+    """Commit tail of the row-level DML verbs; returns the committed
+    version. Without ``expect_version`` the commit re-attaches past
+    blind appends (:func:`_commute_past_appends_only`); with it the
+    commit is an exact CAS at ``v0 + 1`` — ANY racer invalidates the
+    caller's state read. Either way the cadence checkpoint follows."""
+    if expect_version is None:
+        version = _commute_past_appends_only(fs, path, payload, v0, max_retries, op)
+    elif _try_commit(fs, path, v0 + 1, payload):
+        version = v0 + 1
+    else:
+        raise CommitConflict(
+            f"{op} under {path}: lost the CAS at v{v0 + 1}; recompute "
+            "from fresh state"
+        )
+    _maybe_auto_checkpoint(spark, path, version)
+    return version
+
+
+def _check_merge_preconditions(
+    spark: SparkSession, path: str, op: str, v0: int,
+    txn: tuple[str, int] | None, expect_version: int | None,
+) -> None:
+    """Refuse a keyed merge at snapshot ``v0`` whose writer transaction
+    ``txn`` is already durable (at or below the committed high-water
+    mark), or whose caller read its state at a stale ``expect_version``."""
+    if txn is not None and txn_version(spark, path, str(txn[0]), version=v0) >= int(txn[1]):
+        raise CommitConflict(
+            f"{op} under {path}: writer transaction {txn[0]}@{txn[1]} "
+            "is at or below the committed high-water mark — already durable"
+        )
+    if expect_version is not None and v0 != expect_version:
+        raise CommitConflict(
+            f"{op} under {path}: state read at v{expect_version} is stale "
+            f"(table is at v{v0}); recompute from fresh state"
+        )
+
+
+def _duplicate_keys(df: DataFrame, keys: list[str]) -> list | None:
+    """None when ``df`` is key-unique, else up to three example
+    duplicate key groups. The check is ONE aggregate (row count vs
+    distinct key count — struct() keeps the NULL-tuple group, like
+    groupBy does); the examples are only computed on the failure path."""
+    from pyspark.sql import functions as F
+
+    uniq = df.agg(
+        F.count(F.lit(1)).alias("__n"),
+        F.countDistinct(F.struct(*keys)).alias("__k"),
+    ).first()
+    if uniq["__n"] == uniq["__k"]:
+        return None
+    dup = df.groupBy(*keys).count().filter(F.col("count") > 1)
+    return dup.limit(3).collect()
 
 
 def _stats_envelope(members: list[dict | None], drop=frozenset()) -> dict:
@@ -3055,10 +3113,8 @@ def delete_where(
     }
     if schema is not None:
         payload["schema"] = schema
-    res = _commute_past_appends_only(fs, path, payload, v0, max_retries, "delete_where")
-    _maybe_auto_checkpoint(spark, path, res["version"])
     return {
-        "version": res["version"],
+        "version": _commit_rewrite(spark, fs, path, payload, v0, max_retries, "delete_where"),
         "rows_deleted": rows_deleted,
         "parts_rewritten": rewritten,
     }
@@ -3198,12 +3254,8 @@ def update_where(
     }
     if schema is not None:
         payload["schema"] = schema
-    res = _commute_past_appends_only(
-        fs, path, payload, v0, max_retries, "update_where"
-    )
-    _maybe_auto_checkpoint(spark, path, res["version"])
     return {
-        "version": res["version"],
+        "version": _commit_rewrite(spark, fs, path, payload, v0, max_retries, "update_where"),
         "rows_updated": rows_updated,
         "parts_rewritten": rewritten,
     }
@@ -3270,12 +3322,8 @@ def _delete_where_dv(
         payload["dv"] = [{"part": p, "path": dv_part} for p in partial]
     if schema is not None:
         payload["schema"] = schema
-    res = _commute_past_appends_only(
-        fs, path, payload, v0, max_retries, "delete_where"
-    )
-    _maybe_auto_checkpoint(spark, path, res["version"])
     return {
-        "version": res["version"],
+        "version": _commit_rewrite(spark, fs, path, payload, v0, max_retries, "delete_where"),
         "rows_deleted": rows_deleted,
         "parts_rewritten": 0,
         "parts_removed": len(removes),
@@ -3295,42 +3343,15 @@ def merge_upsert(
     expect_version: int | None = None,
     null_safe_keys: bool = False,
     txn: tuple[str, int] | None = None,
-    when_matched_delete=None,
-    when_matched_update=None,
-    when_not_matched_insert=None,
-    drop_cols: list[str] | None = None,
 ) -> dict:
-    """Transactional MERGE (upsert) in ONE atomic commit: rows in
+    """Transactional key-replace upsert in ONE atomic commit: rows in
     ``updates`` replace live rows with equal key tuples, unmatched
     update rows insert. ``updates`` must be key-unique (checked —
     duplicate key tuples make "the" new row ambiguous). Returns
     {"version", "rows_updated", "rows_inserted", "rows_deleted",
-    "parts_rewritten"}.
-
-    **Clause-level MERGE** (the public Delta ``whenMatchedDelete`` /
-    conditional-clause surface — what CDC tombstone pipelines expect).
-    Each condition is a SQL expression string or Column evaluated over
-    the UPDATE row (the source side; NULL counts as false, like any SQL
-    predicate):
-
-    - ``when_matched_delete``: a matched target row whose update row
-      satisfies it is DELETED (emitted on the change feed as a delete,
-      with no replacing insert). Evaluated first — Delta's clause-order
-      semantics with the delete clause leading.
-    - ``when_matched_update``: a matched row is replaced only when this
-      holds (default: always). A matched row satisfying NEITHER clause
-      leaves the target row untouched and discards the update row.
-    - ``when_not_matched_insert``: an unmatched update row inserts only
-      when this holds (default: always) — tombstones for keys the table
-      never had are dropped instead of inserted.
-    - ``drop_cols``: columns used only by the clause conditions (a CDC
-      ``_deleted`` flag) — dropped from the written rows BEFORE schema
-      validation, so the flag never enters the table schema. May not
-      overlap ``keys``.
-
-    The default (no clauses) is exactly the historical upsert: every
-    matched key replaced, every unmatched row inserted, and no extra
-    join against the table's key set is paid.
+    "parts_rewritten"}; ``rows_deleted`` is always 0. Conditional
+    clauses (deletes, conditional updates and inserts, column-level
+    ``SET``) are :func:`merge`.
 
     ``partition`` tags the updates part. It matters on tables read via
     ``partition_filter``: that read is manifest-exact only over tagged
@@ -3392,106 +3413,27 @@ def merge_upsert(
 
     if not keys:
         raise ValueError("merge_upsert: keys must be non-empty")
-    clausal = (
-        when_matched_delete is not None
-        or when_matched_update is not None
-        or when_not_matched_insert is not None
-        or bool(drop_cols)
-    )
-    if drop_cols:
-        bad = sorted(set(drop_cols) & set(keys))
-        if bad:
-            raise ValueError(f"merge_upsert: drop_cols may not contain keys {bad}")
-        missing = sorted(set(drop_cols) - set(updates.columns))
-        if missing:
-            raise ValueError(
-                f"merge_upsert: drop_cols {missing} are not in the updates frame"
-            )
-
-    pin = _dml_pinner(spark, "merge_upsert")
-
-    def _cond(c, default: bool):
-        # SQL three-valued semantics: a clause fires exactly where its
-        # condition is TRUE (NULL is not a match) — same coalesce as
-        # delete_where's predicate
-        if c is None:
-            return F.lit(default)
-        c = pin(c)
-        return F.coalesce(c.cast("boolean"), F.lit(False))
-
     fs = lake_fs(spark, path)
-    # key-uniqueness check as ONE aggregate (row count vs distinct key
-    # count — struct() keeps the NULL-tuple group, like groupBy does)
-    # instead of groupBy+filter+isEmpty; the example rows for the error
-    # message are only computed on the failure path
-    uniq = updates.agg(
-        F.count(F.lit(1)).alias("__n"),
-        F.countDistinct(F.struct(*keys)).alias("__k"),
-    ).first()
-    if uniq["__n"] != uniq["__k"]:
-        dup = updates.groupBy(*keys).count().filter(F.col("count") > 1)
+    dup = _duplicate_keys(updates, keys)
+    if dup is not None:
         raise ValueError(
-            "merge_upsert: updates contain duplicate key tuples "
-            f"(e.g. {dup.limit(3).collect()})"
+            f"merge_upsert: updates contain duplicate key tuples (e.g. {dup})"
         )
     v0, live = _snapshot(fs, path)
-    if txn is not None and txn_version(spark, path, str(txn[0]), version=v0) >= int(txn[1]):
-        raise CommitConflict(
-            f"merge_upsert under {path}: writer transaction {txn[0]}@{txn[1]} "
-            "is at or below the committed high-water mark — already durable"
-        )
-    if expect_version is not None and v0 != expect_version:
-        raise CommitConflict(
-            f"merge_upsert under {path}: state read at v{expect_version} is "
-            f"stale (table is at v{v0}); recompute from fresh state"
-        )
+    _check_merge_preconditions(spark, path, "merge_upsert", v0, txn, expect_version)
     table_schema = _committed_schema(fs, path, v0)
-    payload_updates = updates.drop(*drop_cols) if drop_cols else updates
-    schema = _merge_schema(table_schema, payload_updates, evolve)
-    # clause evaluation is per UPDATE row; the tags ride along so the
-    # matched/unmatched split below can route each row once
-    _MARKS = ("__merge_del", "__merge_upd", "__merge_ins")
-    if clausal:
-        tagged = updates.withColumn("__merge_del", _cond(when_matched_delete, False))
-        tagged = tagged.withColumn(
-            "__merge_upd",
-            ~F.col("__merge_del") & _cond(when_matched_update, True),
-        )
-        tagged = tagged.withColumn(
-            "__merge_ins", _cond(when_not_matched_insert, True)
-        )
-        matched_upd = tagged.limit(0)
-        unmatched_upd = tagged
-        # keys whose target rows this merge removes: matched deletes AND
-        # matched updates (the update's old row goes to the change feed)
-        remove_keys = matched_upd.select(*keys)
-    else:
-        # no .distinct(): updates are key-unique (checked above), and
-        # the dedup exchange would re-run inside EVERY consuming action
-        # (matched probe, change-part write, each survivor anti-join)
-        remove_keys = updates.select(*keys)
+    schema = _merge_schema(table_schema, updates, evolve)
+    # no .distinct(): updates are key-unique (checked above), and the
+    # dedup exchange would re-run inside EVERY consuming action (matched
+    # probe, change-part write, each survivor anti-join)
+    remove_keys = updates.select(*keys)
     adds: list[dict] = []
     removes: list[str] = []
     cdc: list[dict] = []
-    cdc_part: str | None = None
     rows_updated = rewritten = 0
     if live:
         parts = sorted(live)
         tbl = _read_live(spark, live, table_schema, meta=True)
-        if clausal:
-            # materialize the matched/unmatched split ONCE: each side
-            # joins the updates against a key scan of EVERY live part,
-            # and the survivor rewrite, the new-part write and isEmpty
-            # would each re-run it
-            matched_upd = _key_join(
-                tagged, tbl.select(*keys), "left_semi"
-            ).localCheckpoint(eager=True)
-            unmatched_upd = _key_join(
-                tagged, tbl.select(*keys), "left_anti"
-            ).localCheckpoint(eager=True)
-            remove_keys = matched_upd.filter(
-                F.col("__merge_del") | F.col("__merge_upd")
-            ).select(*keys)
         # ONE job answers both "which parts hold matched rows" and "how
         # many distinct keys matched" (rows_updated) — the latter used
         # to be a separate distinct-count over the written change part
@@ -3539,35 +3481,9 @@ def merge_upsert(
                     remove_keys, "left_anti",
                 ),
             )
-    if clausal:
-        # the new part carries only the rows the clauses route to the
-        # table: matched updates + insertable unmatched rows (delete
-        # tombstones and condition-only columns never land on disk)
-        write_rows = (
-            matched_upd.filter(F.col("__merge_upd"))
-            .unionByName(unmatched_upd.filter(F.col("__merge_ins")))
-            .drop(*_MARKS, *(drop_cols or []))
-        )
-        if write_rows.isEmpty():
-            upd_part = None
-        else:
-            _enforce_constraints(spark, path, v0, write_rows, "merge_upsert", schema)
-            upd_part = _write_part(spark, path, write_rows, schema)
-    else:
-        _enforce_constraints(spark, path, v0, payload_updates, "merge_upsert", schema)
-        upd_part = _write_part(spark, path, updates, schema)
-    if upd_part is not None:
-        adds.append({"path": upd_part, "partition": partition or {}})
-    if not adds and not removes:
-        # every clause routed to "leave unchanged" / "drop": commit
-        # NOTHING — an empty commit would be pure log churn
-        return {
-            "version": v0,
-            "rows_updated": 0,
-            "rows_inserted": 0,
-            "rows_deleted": 0,
-            "parts_rewritten": 0,
-        }
+    _enforce_constraints(spark, path, v0, updates, "merge_upsert", schema)
+    upd_part = _write_part(spark, path, updates, schema)
+    adds.append({"path": upd_part, "partition": partition or {}})
     payload = {
         "operation": "merge_upsert",
         "adds": adds,
@@ -3581,43 +3497,19 @@ def merge_upsert(
         payload["sources"] = sorted(sources)
     if txn is not None:
         payload["txn"] = {"app": str(txn[0]), "version": int(txn[1])}
-    if expect_version is None:
-        res = _commute_past_appends_only(
-            fs, path, payload, v0, max_retries, "merge_upsert"
-        )
-    elif _try_commit(fs, path, v0 + 1, payload):
-        # optimistic read-modify-write: exact CAS at expect_version+1,
-        # no re-attach — ANY racer invalidates the caller's state read
-        res = {"version": v0 + 1}
-    else:
-        raise CommitConflict(
-            f"merge_upsert under {path}: lost the CAS at "
-            f"v{v0 + 1}; recompute from fresh state"
-        )
-    _maybe_auto_checkpoint(spark, path, res["version"])
-    # footer-only counts over the parts actually written — never a third
+    version = _commit_rewrite(
+        spark, fs, path, payload, v0, max_retries, "merge_upsert", expect_version
+    )
+    # footer-only count over the part actually written — never a second
     # execution of the caller's updates lineage (which may be expensive
     # or, for a re-read stream batch, not even deterministic); read the
-    # footers driver-side (no job) where the store allows
-    n_new = _part_num_rows(spark, upd_part) if upd_part is not None else 0
-    rows_deleted = 0
-    if clausal and cdc_part is not None:
-        # the change part holds BOTH clause-deleted and updated old
-        # rows; split by whether a replacing row landed in the new part
-        cdc_keys = (
-            _read_parts(spark, [cdc_part], table_schema).select(*keys).distinct()
-        )
-        if upd_part is not None:
-            new_keys = _read_parts(spark, [upd_part], schema).select(*keys)
-            rows_updated = _key_join(cdc_keys, new_keys, "left_semi").count()
-        else:
-            rows_updated = 0
-        rows_deleted = cdc_keys.count() - rows_updated
+    # footer driver-side (no job) where the store allows
+    n_new = _part_num_rows(spark, upd_part)
     return {
-        "version": res["version"],
+        "version": version,
         "rows_updated": rows_updated,
         "rows_inserted": n_new - rows_updated,
-        "rows_deleted": rows_deleted,
+        "rows_deleted": 0,
         "parts_rewritten": rewritten,
     }
 
@@ -3672,14 +3564,16 @@ def merge(
     null_safe_keys: bool = False,
     txn: tuple[str, int] | None = None,
 ) -> dict:
-    """Transactional MERGE with the FULL public Delta clause grammar —
-    column-level ``SET`` lists, clause conditions over the TARGET row,
-    and ``WHEN NOT MATCHED BY SOURCE`` (the three forms
-    :func:`merge_upsert` does not express; reference purpose: the lake
-    is written continuously and queried — /root/reference/README.md:3).
-    One atomic commit, Delta-CDF parity (update = delete(old) +
-    insert(new) at one version), WriteSerializable isolation via
-    :func:`_commute_past_appends_only` — identical to delete/merge.
+    """Transactional MERGE with the public Delta clause grammar — the
+    one conditional-MERGE implementation (SQL ``MERGE INTO``, the CDC
+    tombstone sink and :func:`incremental.scd2_merge` all run on it;
+    :func:`merge_upsert` is only the plain key-replace upsert):
+    conditional deletes, updates and inserts, column-level ``SET``
+    lists, clause conditions over the TARGET row, and ``WHEN NOT
+    MATCHED BY SOURCE``. One atomic commit, Delta-CDF parity (update =
+    delete(old) + insert(new) at one version), WriteSerializable
+    isolation via :func:`_commute_past_appends_only` — identical to
+    delete/merge.
 
     Clause lists (each evaluated FIRST-MATCH-WINS, ANSI/Delta order):
 
@@ -3708,17 +3602,19 @@ def merge(
     pinned to one instant for the whole operation, and non-deterministic
     ones raise, as in :func:`update_where`.
 
-    Semantics vs :func:`merge_upsert`: PER TARGET ROW (Delta's) — two
-    target rows sharing a key are each updated; merge_upsert's
-    whole-row-replace-by-key collapses them to one. On key-unique
-    targets (the CDC norm) the two agree; merge_upsert stays the plain
-    fast-path upsert, this is the general grammar.
+    Semantics are PER TARGET ROW (Delta's): two target rows sharing a
+    key are each updated, where :func:`merge_upsert`'s key-replace
+    collapses them to one; on key-unique targets (the CDC norm) the two
+    agree.
 
-    ``evolve=True`` additionally evolves the schema with source columns
-    the target lacks (star expansions then cover them); the default
-    keeps star expansion to target∩source, so a condition-only source
-    column (a CDC ``_deleted`` flag) never enters the schema — no
-    ``drop_cols`` needed.
+    Schema: on an existing table the default keeps star expansion to
+    target∩source. On a path with no table yet, and under
+    ``evolve=True``, the table gains the keys plus exactly the source
+    columns some clause WRITES: every source column when a clause is a
+    star (``set=None`` / ``values=None``), else only the columns an
+    explicit ``set``/``values`` names. So a condition-only source
+    column (a CDC ``_deleted`` flag) enters the schema only through a
+    star clause.
 
     Scale: Delta's two-pass physical plan. Pass 1 joins the snapshot to
     the source ON the keys (shuffle on keys both sides — never a
@@ -3800,24 +3696,14 @@ def merge(
         return F.coalesce(c.cast("boolean"), F.lit(False))
 
     fs = lake_fs(spark, path)
-    dup = source.groupBy(*keys).count().filter(F.col("count") > 1)
-    if not dup.isEmpty():
+    dup = _duplicate_keys(source, keys)
+    if dup is not None:
         raise ValueError(
-            "merge: source contains duplicate key tuples "
-            f"(e.g. {dup.limit(3).collect()}) — multiple source rows may "
-            "not match one target row"
+            f"merge: source contains duplicate key tuples (e.g. {dup}) — "
+            "multiple source rows may not match one target row"
         )
     v0, live = _snapshot(fs, path)
-    if txn is not None and txn_version(spark, path, str(txn[0]), version=v0) >= int(txn[1]):
-        raise CommitConflict(
-            f"merge under {path}: writer transaction {txn[0]}@{txn[1]} "
-            "is at or below the committed high-water mark — already durable"
-        )
-    if expect_version is not None and v0 != expect_version:
-        raise CommitConflict(
-            f"merge under {path}: state read at v{expect_version} is stale "
-            f"(table is at v{v0}); recompute from fresh state"
-        )
+    _check_merge_preconditions(spark, path, "merge", v0, txn, expect_version)
     table_schema = _committed_schema(fs, path, v0)
     scols = list(source.columns)
     missing_keys = sorted(set(keys) - set(scols))
@@ -3832,10 +3718,17 @@ def merge(
             cur_cols = scols
     else:
         cur_cols = [f["name"] for f in table_schema["fields"]]
-    if evolve:
-        schema = _merge_schema(table_schema, source, True)
-    elif table_schema is None and not live:
-        schema = _merge_schema(None, source, True)
+    if evolve or (table_schema is None and not live):
+        # the table gains the source columns some clause writes: all of
+        # them for a star clause, else the keys plus the named ones
+        written, star = set(keys), False
+        for cl in matched + not_matched + by_source:
+            if cl["action"] != "delete":
+                assign = cl.get("values" if cl["action"] == "insert" else "set")
+                star = star or assign is None
+                written.update(assign or ())
+        grown = source if star else source.select(*[c for c in scols if c in written])
+        schema = _merge_schema(table_schema, grown, True)
     tcols = [f["name"] for f in schema["fields"]] if schema is not None else cur_cols
     st = T.StructType.fromJson(schema) if schema is not None else None
     types = {f.name: f.dataType for f in st.fields} if st is not None else {}
@@ -4042,10 +3935,7 @@ def merge(
         for i, cl in enumerate(not_matched):
             if not icounts.get(i):
                 continue
-            assign = (
-                cl.get("values") if cl.get("values") is not None
-                else {c: f"s.`{c}`" for c in tcols if c in scols}
-            )
+            assign = cl.get("values") if cl.get("values") is not None else _star_set()
             new_frames.append(
                 ins_routed.filter(F.col("__mrg_route") == i)
                 .select(F.col("__mrg_s").alias("s"))
@@ -4081,18 +3971,10 @@ def merge(
         payload["sources"] = sorted(sources)
     if txn is not None:
         payload["txn"] = {"app": str(txn[0]), "version": int(txn[1])}
-    if expect_version is None:
-        res = _commute_past_appends_only(fs, path, payload, v0, max_retries, "merge")
-    elif _try_commit(fs, path, v0 + 1, payload):
-        res = {"version": v0 + 1}
-    else:
-        raise CommitConflict(
-            f"merge under {path}: lost the CAS at v{v0 + 1}; recompute "
-            "from fresh state"
-        )
-    _maybe_auto_checkpoint(spark, path, res["version"])
     return {
-        "version": res["version"],
+        "version": _commit_rewrite(
+            spark, fs, path, payload, v0, max_retries, "merge", expect_version
+        ),
         "rows_updated": rows_updated,
         "rows_inserted": rows_inserted,
         "rows_deleted": rows_deleted,

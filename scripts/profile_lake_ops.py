@@ -5,7 +5,8 @@ job count (the driver-roundtrip signal — a 150k-row merge that launches
     python scripts/profile_lake_ops.py [reps] [sf_dir]
 
 Runs the exact `bench.lake_ops_bench` scenario (fresh table per pass)
-with a per-op job counter wrapped around each txlog call.
+with each txlog call under its own Spark job group, counted by
+`perfbench.common.job_counts` (jobs and stages).
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ import sys as _sys
 
 _sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
 
+import itertools
 import os
 import shutil
 import tempfile
@@ -31,20 +33,27 @@ def main() -> int:
     from es_analytics_spark.incremental import maintain_rollup
     from es_analytics_spark.session import get_spark
     from es_analytics_spark.streaming.txlog_sink import _EpochCommitter
+    from perfbench.common import job_counts
 
     spark = get_spark("profile-lake")
     sc = spark.sparkContext
 
+    seq = itertools.count()
+
     def timed(label: str, fn):
-        tracker = sc.statusTracker()
-        j0 = len(tracker.getJobIdsForGroup() or [])
-        sc.setJobDescription(label)
+        # each call runs under its own job group, so the counts are
+        # exactly this op's jobs and stages
+        group = f"profile-{label}-{next(seq)}"
+        sc.setJobGroup(group, label)
         t0 = time.perf_counter()
-        out = fn()
-        wall = time.perf_counter() - t0
-        sc.setJobDescription(None)
-        j1 = len(sc.statusTracker().getJobIdsForGroup() or [])
-        print(f"  {label:24s} {wall:7.3f}s  jobs={j1 - j0}")
+        try:
+            out = fn()
+        finally:
+            wall = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs, stages, _ = job_counts(spark, group)
+        print(f"  {label:24s} {wall:7.3f}s  jobs={jobs} stages={stages}")
         return out
 
     for rep in range(reps):

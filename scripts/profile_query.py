@@ -5,7 +5,8 @@
 Times each query with the noop sink (guide §1.4) REPS times in one
 session (first run includes codegen; median of the rest is steady
 state) and prints per-run seconds plus the job/stage counts the run
-generated — the fixed-overhead signal (an iterative query whose time
+generated, counted under one Spark job group per query — the
+fixed-overhead signal (an iterative query whose time
 is all scheduler barriers shows many tiny jobs).
 """
 
@@ -28,6 +29,7 @@ def main() -> int:
 
     from es_analytics_spark.queries import REGISTRY
     from es_analytics_spark.session import get_spark
+    from perfbench.common import job_counts
 
     spark = get_spark("profile")
     sc = spark.sparkContext
@@ -38,20 +40,23 @@ def main() -> int:
     for name in names:
         fn = REGISTRY[name].fn
         runs = []
-        jobs0 = len(sc.statusTracker().getJobIdsForGroup() or [])
+        # one job group per query: its counts are exactly this query's
+        # jobs, whatever else the session ran before
+        group = f"profile-{name}"
         for i in range(reps):
-            sc.setJobDescription(f"{name}#{i}")
+            sc.setJobGroup(group, f"{name}#{i}")
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
-        sc.setJobDescription(None)
-        tracker = sc.statusTracker()
-        njobs = len(tracker.getJobIdsForGroup() or []) - jobs0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        njobs, nstages, _ = job_counts(spark, group)
         med = statistics.median(runs[1:]) if reps > 1 else runs[0]
         print(
             f"{name:36s} med={med:7.3f}s runs="
             + ",".join(f"{r:.3f}" for r in runs)
             + f" jobs~{njobs // max(reps, 1)}/run"
+            + f" stages~{nstages // max(reps, 1)}/run"
         )
     return 0
 

@@ -119,15 +119,22 @@ def test_merge_tombstones_sql_vs_api(spark, tmp_path):
         WHEN NOT MATCHED AND NOT s._deleted THEN INSERT *
     """)
     assert (r["rows_deleted"], r["rows_updated"], r["rows_inserted"]) == (1, 1, 1)
-    merge_upsert(
-        spark, api_path, cdc, keys=["k"],
-        when_matched_delete="_deleted",
-        when_not_matched_insert="NOT _deleted",
-        drop_cols=["_deleted"],
+    txlog.merge(
+        spark, api_path, cdc, ["k"],
+        matched=[{"action": "delete", "condition": "s._deleted"},
+                 {"action": "update"}],
+        not_matched=[{"action": "insert", "condition": "NOT s._deleted"}],
     )
     sql_rows = _rows(read_table(spark, sql_path).select("k", "val", "x"))
     api_rows = _rows(read_table(spark, api_path).select("k", "val", "x"))
     assert sql_rows == api_rows
+    # the router's backend IS txlog.merge, so the twin alone would not
+    # catch a shared fault: pin the expected rows too
+    expected = sorted(
+        [(k, f"v{k}", float(k)) for k in range(10) if k not in (3, 5)]
+        + [(5, "v5b", 55.0), (100, "new", 100.0)]
+    )
+    assert sql_rows == expected
     # SET * / INSERT * expand to TARGET columns: the condition-only
     # _deleted flag never entered the SQL-side schema either
     assert "_deleted" not in read_table(spark, sql_path).columns

@@ -2003,8 +2003,8 @@ def test_cdf_column_order_schema_then_metadata_last(spark, tmp_path):
 
 def test_mixed_stress_with_update_and_clausal_merge(spark, tmp_path):
     """round-10 extension of the serializability stress: four writers
-    interleave appends, CLAUSAL merges (tombstones + conditional
-    updates), row-level UPDATEs, and predicate deletes, each retrying
+    interleave appends, conditional merges (tombstone clauses on
+    txlog.merge), row-level UPDATEs, and predicate deletes, each retrying
     through CommitConflict. Invariant unchanged: version-ordered CDF
     replay reconstructs the final table as an exact multiset, and the
     snapshot replay validates every remove in the history."""
@@ -2012,7 +2012,7 @@ def test_mixed_stress_with_update_and_clausal_merge(spark, tmp_path):
 
     from es_analytics_spark.txlog import (
         delete_where,
-        merge_upsert,
+        merge,
         table_changes_cdf,
         update_where,
     )
@@ -2048,11 +2048,11 @@ def test_mixed_stress_with_update_and_clausal_merge(spark, tmp_path):
                 F.lit(700 + i).cast("long").alias("val"),
                 (F.col("id") % 7 == 0).alias("_gone"),
             )
-            with_retries(lambda u=upd: merge_upsert(
-                spark, path, u, keys=["id"],
-                when_matched_delete="_gone",
-                when_not_matched_insert="NOT _gone",
-                drop_cols=["_gone"],
+            with_retries(lambda u=upd: merge(
+                spark, path, u, ["id"],
+                matched=[{"action": "delete", "condition": "s._gone"},
+                         {"action": "update"}],
+                not_matched=[{"action": "insert", "condition": "NOT s._gone"}],
             ))
 
     def updater() -> None:

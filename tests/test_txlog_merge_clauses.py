@@ -1,9 +1,9 @@
-"""Clause-level MERGE (round-10 ask #3): the public Delta
-``whenMatchedDelete`` / conditional-clause surface on
-``txlog.merge_upsert`` — CDC tombstone routing, conditional updates,
-conditional inserts, CDF parity (deletes recorded, no phantom inserts),
-OCC behavior unchanged, and the streaming CDC sink's tombstone
-pass-through."""
+"""Conditional MERGE for CDC tombstones on ``txlog.merge`` clause
+lists — tombstone routing, conditional updates, conditional inserts,
+CDF parity (deletes recorded, no phantom inserts), OCC behavior, the
+streaming CDC sink's tombstone pass-through and its call-time
+``drop_cols`` validation — plus the plain key-replace ``merge_upsert``
+that the benchmark and rollup maintenance run."""
 
 from __future__ import annotations
 
@@ -15,10 +15,21 @@ from es_analytics_spark.txlog import (
     CommitConflict,
     append,
     current_version,
+    merge,
     merge_upsert,
     read_table,
     table_changes_cdf,
 )
+
+#: the CDC tombstone clauses: a flagged matched row deletes, any other
+#: matched row is replaced (SET *), a flagged unmatched row is dropped
+TOMBSTONES = {
+    "matched": [
+        {"action": "delete", "condition": "s._deleted"},
+        {"action": "update"},
+    ],
+    "not_matched": [{"action": "insert", "condition": "NOT s._deleted"}],
+}
 
 
 def _base(spark, tmp_path, n=10):
@@ -45,12 +56,7 @@ def test_tombstone_routing_deletes_updates_inserts(spark, tmp_path):
         (99, "gone", 0.0, True),    # unmatched tombstone -> dropped
         (100, "new", 100.0, False), # unmatched -> INSERT
     ])
-    r = merge_upsert(
-        spark, path, upd, keys=["k"],
-        when_matched_delete="_deleted",
-        when_not_matched_insert="NOT _deleted",
-        drop_cols=["_deleted"],
-    )
+    r = merge(spark, path, upd, ["k"], **TOMBSTONES)
     assert (r["rows_deleted"], r["rows_updated"], r["rows_inserted"]) == (1, 1, 1)
     got = {row["k"]: (row["val"], row["x"]) for row in read_table(spark, path).collect()}
     assert 3 not in got and 99 not in got
@@ -64,12 +70,12 @@ def test_tombstone_routing_deletes_updates_inserts(spark, tmp_path):
 
 
 def test_tombstone_cdf_parity(spark, tmp_path):
-    """CDF over a clausal merge: delete(old) for tombstoned keys,
+    """CDF over a tombstone merge: delete(old) for tombstoned keys,
     delete(old)+insert(new) for updated keys, insert for new keys, and
     NOTHING for dropped unmatched tombstones."""
     path = _base(spark, tmp_path)
     v0 = current_version(spark, path)
-    merge_upsert(
+    merge(
         spark, path,
         _cdc(spark, tmp_path, [
             (3, "gone", 0.0, True),
@@ -77,10 +83,7 @@ def test_tombstone_cdf_parity(spark, tmp_path):
             (99, "gone", 0.0, True),
             (100, "new", 100.0, False),
         ]),
-        keys=["k"],
-        when_matched_delete="_deleted",
-        when_not_matched_insert="NOT _deleted",
-        drop_cols=["_deleted"],
+        ["k"], **TOMBSTONES,
     )
     feed = {
         (r["k"], r["_change_type"])
@@ -94,18 +97,18 @@ def test_tombstone_cdf_parity(spark, tmp_path):
 
 
 def test_update_condition_leaves_nonqualifying_rows_untouched(spark, tmp_path):
-    """A matched row whose update row fails when_matched_update keeps
-    its target version; the update row is discarded (Delta: a matched
+    """A matched row whose source row fails the update condition keeps
+    its target version; the source row is discarded (Delta: a matched
     row matching no clause is untouched)."""
     path = _base(spark, tmp_path)
     upd = spark.createDataFrame(
         [(2, "v2b", -1.0), (4, "v4b", 9.0), (50, "new", -5.0)],
         "k long, val string, x double",
     )
-    r = merge_upsert(
-        spark, path, upd, keys=["k"],
-        when_matched_update="x > 0",
-        when_not_matched_insert="x > 0",
+    r = merge(
+        spark, path, upd, ["k"],
+        matched=[{"action": "update", "condition": "s.x > 0"}],
+        not_matched=[{"action": "insert", "condition": "s.x > 0"}],
     )
     assert (r["rows_deleted"], r["rows_updated"], r["rows_inserted"]) == (0, 1, 0)
     got = {row["k"]: row["val"] for row in read_table(spark, path).collect()}
@@ -115,13 +118,10 @@ def test_update_condition_leaves_nonqualifying_rows_untouched(spark, tmp_path):
 def test_delete_only_merge_writes_no_new_part(spark, tmp_path):
     path = _base(spark, tmp_path)
     v0 = current_version(spark, path)
-    r = merge_upsert(
+    r = merge(
         spark, path,
         _cdc(spark, tmp_path, [(1, "x", 0.0, True), (2, "x", 0.0, True)]),
-        keys=["k"],
-        when_matched_delete="_deleted",
-        when_not_matched_insert="NOT _deleted",
-        drop_cols=["_deleted"],
+        ["k"], **TOMBSTONES,
     )
     assert r["rows_deleted"] == 2 and r["rows_inserted"] == 0
     assert current_version(spark, path) == v0 + 1
@@ -136,16 +136,13 @@ def test_delete_only_merge_writes_no_new_part(spark, tmp_path):
 
 
 def test_all_clauses_noop_commits_nothing(spark, tmp_path):
-    """Every update row routed to drop/unchanged: no commit at all."""
+    """Every source row routed to drop/unchanged: no commit at all."""
     path = _base(spark, tmp_path)
     v0 = current_version(spark, path)
-    r = merge_upsert(
+    r = merge(
         spark, path,
         _cdc(spark, tmp_path, [(77, "x", 0.0, True), (88, "x", 0.0, True)]),
-        keys=["k"],
-        when_matched_delete="_deleted",
-        when_not_matched_insert="NOT _deleted",
-        drop_cols=["_deleted"],
+        ["k"], **TOMBSTONES,
     )
     assert r == {
         "version": v0, "rows_updated": 0, "rows_inserted": 0,
@@ -158,12 +155,10 @@ def test_clause_null_condition_is_not_a_match(spark, tmp_path):
     """SQL three-valued semantics: a NULL clause condition fires
     nothing — a NULL _deleted flag must upsert, not delete."""
     path = _base(spark, tmp_path)
-    r = merge_upsert(
+    r = merge(
         spark, path,
         _cdc(spark, tmp_path, [(1, "v1b", 1.5, None)]),
-        keys=["k"],
-        when_matched_delete="_deleted",
-        drop_cols=["_deleted"],
+        ["k"], matched=TOMBSTONES["matched"], not_matched=[{"action": "insert"}],
     )
     assert (r["rows_deleted"], r["rows_updated"]) == (0, 1)
     got = {row["k"]: row["val"] for row in read_table(spark, path).collect()}
@@ -171,16 +166,28 @@ def test_clause_null_condition_is_not_a_match(spark, tmp_path):
 
 
 def test_drop_cols_validation(spark, tmp_path):
-    path = _base(spark, tmp_path)
-    upd = _cdc(spark, tmp_path, [(1, "a", 1.0, True)])
+    """The sink checks ``drop_cols`` against the stream's columns when
+    it is called, before the query starts."""
+    from es_analytics_spark.streaming.txlog_sink import stream_merge_to_txlog
+
+    src = tmp_path / "src"
+    src.mkdir()
+    stream = spark.readStream.schema(
+        "k long, val string, x double, _deleted boolean"
+    ).parquet(str(src))
+    kw = dict(
+        path=str(tmp_path / "t"), keys=["k"], order_col="x",
+        checkpoint_dir=str(tmp_path / "ckpt"), available_now=True,
+    )
     with pytest.raises(ValueError, match="may not contain keys"):
-        merge_upsert(spark, path, upd, keys=["k"], drop_cols=["k"])
+        stream_merge_to_txlog(stream, drop_cols=["k"], **kw)
     with pytest.raises(ValueError, match="not in the updates frame"):
-        merge_upsert(spark, path, upd, keys=["k"], drop_cols=["nope"])
+        stream_merge_to_txlog(stream, drop_cols=["nope"], **kw)
+    assert not (tmp_path / "ckpt").exists()
 
 
 def test_clausal_merge_commutes_past_blind_append(spark, tmp_path, monkeypatch):
-    """OCC unchanged: a clausal merge losing the CAS to a blind append
+    """OCC unchanged: a tombstone merge losing the CAS to a blind append
     re-attaches (WriteSerializable), and the concurrently appended rows
     — never in the merge's snapshot — survive untouched."""
     path = _base(spark, tmp_path)
@@ -188,7 +195,7 @@ def test_clausal_merge_commutes_past_blind_append(spark, tmp_path, monkeypatch):
     fired = {"n": 0}
 
     def inject(fs, p, version, payload):
-        if payload.get("operation") == "merge_upsert" and fired["n"] == 0:
+        if payload.get("operation") == "merge" and fired["n"] == 0:
             fired["n"] = 1
             append(
                 spark, path,
@@ -198,12 +205,10 @@ def test_clausal_merge_commutes_past_blind_append(spark, tmp_path, monkeypatch):
         return real(fs, p, version, payload)
 
     monkeypatch.setattr(txlog, "_try_commit", inject)
-    r = merge_upsert(
+    r = merge(
         spark, path,
         _cdc(spark, tmp_path, [(3, "gone", 0.0, True), (4, "v4b", 44.0, False)]),
-        keys=["k"],
-        when_matched_delete="_deleted",
-        drop_cols=["_deleted"],
+        ["k"], matched=TOMBSTONES["matched"], not_matched=[{"action": "insert"}],
     )
     monkeypatch.setattr(txlog, "_try_commit", real)
     assert r["rows_deleted"] == 1 and r["rows_updated"] == 1
@@ -212,26 +217,25 @@ def test_clausal_merge_commutes_past_blind_append(spark, tmp_path, monkeypatch):
 
 
 def test_clausal_merge_conflicts_with_overlapping_rewrite(spark, tmp_path, monkeypatch):
-    """A concurrent remove-carrying commit still conflicts — the clause
-    surface must not weaken the WriteSerializable rule."""
+    """A concurrent remove-carrying commit still conflicts — conditional
+    clauses must not weaken the WriteSerializable rule."""
     path = _base(spark, tmp_path)
     real = txlog._try_commit
     fired = {"n": 0}
 
     def inject(fs, p, version, payload):
-        if payload.get("operation") == "merge_upsert" and fired["n"] == 0:
+        if payload.get("operation") == "merge" and fired["n"] == 0:
             fired["n"] = 1
             txlog.delete_where(spark, path, "k = 9")
         return real(fs, p, version, payload)
 
     monkeypatch.setattr(txlog, "_try_commit", inject)
     with pytest.raises(CommitConflict):
-        merge_upsert(
+        merge(
             spark, path,
             _cdc(spark, tmp_path, [(3, "gone", 0.0, True)]),
-            keys=["k"],
-            when_matched_delete="_deleted",
-            drop_cols=["_deleted"],
+            ["k"], matched=TOMBSTONES["matched"],
+            not_matched=[{"action": "insert"}],
         )
 
 
@@ -308,3 +312,32 @@ def test_default_merge_unchanged_reports_zero_deleted(spark, tmp_path):
     assert r["rows_updated"] == 1 and r["rows_inserted"] == 1
     assert r["rows_deleted"] == 0
     assert read_table(spark, path).count() == 11
+
+
+#: Spark jobs of the plain upsert below, measured before conditional
+#: clauses moved from merge_upsert onto txlog.merge. The benchmark's
+#: lake ops and rollup maintenance run this path; it may not grow.
+PLAIN_UPSERT_JOBS = 18
+
+
+def test_plain_merge_upsert_job_count(spark, tmp_path):
+    """One plain merge_upsert into a 4-part table (two matched keys in
+    two parts, one new key) runs at most PLAIN_UPSERT_JOBS Spark jobs,
+    counted under its own job group."""
+    path = str(tmp_path / "t")
+    for i in range(4):
+        append(spark, path, spark.range(i * 100, (i + 1) * 100).select(
+            F.col("id").alias("k"), F.col("id").cast("double").alias("x")
+        ))
+    upd = spark.createDataFrame([(5, 50.0), (150, 1.0), (1000, 2.0)], "k long, x double")
+    sc = spark.sparkContext
+    group = f"plain-upsert-{tmp_path.name}"
+    sc.setJobGroup(group, "plain merge_upsert")
+    try:
+        r = merge_upsert(spark, path, upd, keys=["k"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (r["rows_updated"], r["rows_inserted"], r["parts_rewritten"]) == (2, 1, 2)
+    assert read_table(spark, path).count() == 401
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= PLAIN_UPSERT_JOBS

@@ -176,6 +176,36 @@ def test_evolve_star_expansion_adds_source_column(spark, tmp_path):
     assert got[0] == ("v0", None)      # untouched rows read the new column as null
 
 
+def test_new_table_and_evolve_gain_only_written_columns(spark, tmp_path):
+    """Where merge grows the schema (no table yet, or evolve=True) the
+    table gains only the source columns some clause writes: an explicit
+    INSERT values list leaves the condition-only column f out, and an
+    explicit SET under evolve adds only the column it names."""
+    path = str(tmp_path / "fresh")
+    src = spark.createDataFrame(
+        [(1, "a", True), (2, "b", False)], "k long, v string, f boolean"
+    )
+    r = merge(
+        spark, path, src, ["k"],
+        not_matched=[{"action": "insert", "values": {"k": "s.k", "v": "s.v"},
+                      "condition": "s.f"}],
+    )
+    assert r["rows_inserted"] == 1
+    assert [f.name for f in txlog.table_schema(spark, path).fields] == ["k", "v"]
+    assert _rows(read_table(spark, path)) == [(1, "a")]
+
+    src = spark.createDataFrame(
+        [(1, "n1", "o1", True)], "k long, n string, o string, f boolean"
+    )
+    r = merge(
+        spark, path, src, ["k"], evolve=True,
+        matched=[{"action": "update", "set": {"n": "s.n"}, "condition": "s.f"}],
+    )
+    assert r["rows_updated"] == 1
+    assert [f.name for f in txlog.table_schema(spark, path).fields] == ["k", "v", "n"]
+    assert _rows(read_table(spark, path)) == [(1, "a", "n1")]
+
+
 def test_merge_validation_errors(spark, tmp_path):
     path = _base(spark, tmp_path, n=3)
     src = spark.createDataFrame([(1, 1.0)], "k long, x double")
